@@ -2058,7 +2058,7 @@ object MetadataQueries {
       val p = new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(root, "_pj_log"), f"$v%020d.json")
       val out = fs.create(p, false)
-      out.write(body.getBytes("UTF-8")); out.close()
+      out.write(graft.sources.pjparquet.PjCommitLog.sealBody(body)); out.close()
       graft.sources.pjparquet.PjCommitLog.clearSnapshotCache()
       graft.sources.pjparquet.PjParquetTable.clearLayoutCache()
       val readRefused =

@@ -110,7 +110,7 @@ object PjChangeFeed {
     // idempotent replays may re-add an already-live path: not a change —
     // UNLESS the re-add changed the entry's DELETION VECTOR, in which case
     // the change rows are exactly the file's newly-deleted positions.
-    // A legacy full-snapshot commit records the full state as `add`.
+    // A checkpoint-only version records the full state as `add`.
     val dvTrans: Seq[(String, Option[String], String)] = d.add.flatMap { e =>
       prevEntries.get(e.path) match {
         case Some(p) if e.dv.map(_.path) != p.dv.map(_.path) && e.dv.isDefined =>
@@ -121,7 +121,7 @@ object PjChangeFeed {
     val added: Seq[(String, Option[String])] =
       d.add.filterNot(e => prevFiles.contains(e.path)).map(e => e.path -> e.dv.map(_.path))
     val removed: Seq[(String, Option[String])] =
-      (if (d.legacyFull) (prevFiles -- readded).toSeq.sorted
+      (if (d.fullState) (prevFiles -- readded).toSeq.sorted
       else d.remove.filter(prevFiles.contains).filterNot(readded.contains))
         .map(r => r -> prevEntries.get(r).flatMap(_.dv).map(_.path))
 
@@ -390,12 +390,12 @@ object PjChangeFeed {
           // change (the newly-deleted positions) — the diff path computes it
           val dvTrans = d.add.exists(e =>
             live.contains(e.path) && live(e.path) != e.dv.map(_.path))
-          // for a legacy full-state commit d.add IS the post state, so the
+          // for a checkpoint-only version d.add IS the post state, so the
           // same filterNot(live) yields exactly the truly-new files
           val added = d.add.filterNot(e => live.contains(e.path))
             .map(e => e.path -> e.dv.map(_.path))
           val removed: Seq[(String, Option[String])] =
-            (if (d.legacyFull) (live.keySet -- readded).toSeq.sorted
+            (if (d.fullState) (live.keySet -- readded).toSeq.sorted
             else d.remove.filter(live.contains).filterNot(readded.contains))
               .map(r => r -> live(r))
           val (preL, postL) = labelsOf(d.operation)
@@ -410,7 +410,7 @@ object PjChangeFeed {
         if (live == null) liveOf(PjCommitLog.read(fs, rootPath, v).entries)
         else {
           val d = PjCommitLog.delta(fs, rootPath, v)
-          if (d.legacyFull) liveOf(d.add)
+          if (d.fullState) liveOf(d.add)
           else live -- d.remove ++ d.add.map(e => e.path -> e.dv.map(_.path))
         }
       cls

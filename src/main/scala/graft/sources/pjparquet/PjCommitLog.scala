@@ -47,10 +47,6 @@ import graft.core.{PJException, PJSplice}
   * common concurrent case (two streaming sources, backfill + live) just
   * works; anything that retires files (overwrite, DML, compaction)
   * conflicts loudly, Delta-style.
-  *
-  * Legacy compatibility: round-9 logs stored one full snapshot per commit
-  * as `{"files":[...]}`; those parse as checkpoints (every version
-  * self-contained), so existing tables replay unchanged.
   */
 object PjCommitLog {
   val DirName = "_pj_log"
@@ -84,18 +80,17 @@ object PjCommitLog {
       physType: Int, nullCount: Long,
       min: Option[Array[Byte]], max: Option[Array[Byte]])
 
-  /** One live data file of a snapshot. `path` is table-root-relative.
-    * Unknown facts are -1/None — entries adopted from a pre-log directory
-    * or written by the legacy full-snapshot format plan exactly like
-    * before (eager per-file load); entries with full facts plan with zero
-    * file I/O ([[planned]]).
-    */
   /** A deletion vector attached to a file entry: `path` is the vector's
     * table-relative path ([[PjDeletionVector]] format), `deleted` its
     * exact cardinality (so `count(*)` stays metadata-rate: rows − deleted).
     */
   final case class DvRef(path: String, deleted: Long)
 
+  /** One live data file of a snapshot. `path` is table-root-relative.
+    * Unknown facts are -1/None — entries adopted from a pre-log directory
+    * plan with an eager per-file load; entries with full facts plan with
+    * zero file I/O ([[planned]]).
+    */
   final case class FileEntry(
       path: String,
       size: Long = -1L,
@@ -226,11 +221,13 @@ object PjCommitLog {
   final case class HistoryEntry(version: Long, ts: Long, action: String, nFiles: Long)
 
   /** The delta a commit recorded (for [[PjChangeFeed]]): files added with
-    * their entries, table-relative paths removed.
+    * their entries, table-relative paths removed. `fullState` marks a
+    * version that survives only as a checkpoint: its delta is unknowable,
+    * so `add` is the version's whole live state and `remove` is empty.
     */
   final case class Delta(
       version: Long, ts: Long, action: String, operation: Option[String],
-      add: Seq[FileEntry], remove: Seq[String], legacyFull: Boolean,
+      add: Seq[FileEntry], remove: Seq[String], fullState: Boolean,
       /** The commit provably MOVED rows without changing any (an
         * id-preserving compaction/OPTIMIZE): every consumed entry was
         * row-tracked and every added file materializes the same ids —
@@ -512,26 +509,8 @@ object PjCommitLog {
     var action = "unknown"
     var operation: Option[String] = None
     def apply(node: JsonNode): Unit = {
-      if (node.has("files")) {
-        // legacy full snapshot: replaces the whole state — including any
-        // recorded schema, which described files this commit may have
-        // replaced (the path-only entries re-resolve eagerly anyway).
-        // The PROTOCOL survives: a legacy writer knows nothing of table
-        // features, and letting its commit erase the lane would silently
-        // downgrade the very protection the lane exists to provide.
-        entries = scala.collection.immutable.TreeMap.empty
-        dvCount = 0
-        schema = None
-        constraints = None
-        properties = None
-        tableStats = None
-        node.get("files").elements().asScala.foreach { f =>
-          put(FileEntry(f.asText))
-        }
-      } else {
-        node.path("remove").elements().asScala.foreach(r => drop(r.asText))
-        nodeEntries(node, "add").foreach(put)
-      }
+      node.path("remove").elements().asScala.foreach(r => drop(r.asText))
+      nodeEntries(node, "add").foreach(put)
       optText(node, "dataSchema").foreach(s => schema = Some(s))
       optText(node, "constraints").foreach(c => constraints = Some(c))
       optText(node, "properties").foreach(p => properties = Some(p))
@@ -555,29 +534,24 @@ object PjCommitLog {
   }
 
   /** The raw delta one commit recorded — [[PjChangeFeed]]'s unit of work.
-    * For a legacy full-snapshot commit the add list is the full state
-    * (`legacyFull=true`) and the caller diffs against the prior version.
+    * For a checkpoint-only version the add list is the full state
+    * (`fullState=true`) and the caller diffs against the prior version.
     */
   def delta(fs: FileSystem, root: Path, version: Long): Delta = {
     val p = commitFile(root, version)
     if (!fs.exists(p)) {
       // checkpoint-only version (post-expiry base): the delta is unknowable
       val snap = read(fs, root, version)
-      return Delta(version, snap.ts, snap.action, None, snap.entries, Nil, legacyFull = true)
+      return Delta(version, snap.ts, snap.action, None, snap.entries, Nil, fullState = true)
     }
     val node = parseFile(fs, p, version)
-    val ts = node.path("ts").asLong(0L)
-    val action = Option(node.get("action")).map(_.asText).getOrElse("unknown")
-    if (node.has("files"))
-      Delta(version, ts, action, None,
-        node.get("files").elements().asScala.map(f => FileEntry(f.asText)).toSeq,
-        Nil, legacyFull = true)
-    else
-      Delta(version, ts, action, optText(node, "operation"),
-        nodeEntries(node, "add"),
-        node.path("remove").elements().asScala.map(_.asText).toSeq,
-        legacyFull = false,
-        preservedRows = node.path("preservedRows").asBoolean(false))
+    Delta(version, node.path("ts").asLong(0L),
+      Option(node.get("action")).map(_.asText).getOrElse("unknown"),
+      optText(node, "operation"),
+      nodeEntries(node, "add"),
+      node.path("remove").elements().asScala.map(_.asText).toSeq,
+      fullState = false,
+      preservedRows = node.path("preservedRows").asBoolean(false))
   }
 
   /** Commit a delta as `latest+1`: `add` entries become live, `remove`
@@ -589,7 +563,7 @@ object PjCommitLog {
     *    (`readVersion`) and partition-level read set (`readPartitions`)
     *    rebases when it provably did not race the winners: no winner
     *    retired or replaced a file this commit also retires, no winner
-    *    was a legacy full-state commit, and every winner-added file falls
+    *    survives only as a checkpoint, and every winner-added file falls
     *    OUTSIDE the partitions this commit's predicate admitted — so two
     *    UPDATEs on different partitions (or an update racing an append
     *    into a fresh partition) both land, Delta's disjoint-DML rule at
@@ -943,7 +917,7 @@ object PjCommitLog {
   /** Can a remove-bearing loser rebase over everything committed since its
     * declared read base? True iff every winner since `readVersion`:
     *
-    *  - is a delta commit (a legacy full-state winner rewrote the world);
+    *  - is a delta commit (a checkpoint-only winner's delta is unknowable);
     *  - retired no file the loser also retires (disjoint rewrite sets);
     *  - added no file inside a partition the loser's predicate admitted
     *    (winner rows the loser's scan could have matched). The partition
@@ -966,7 +940,7 @@ object PjCommitLog {
           val d =
             try delta(fs, root, w)
             catch { case _: PJException => return false }
-          !d.legacyFull &&
+          !d.fullState &&
             d.remove.forall(!remove.contains(_)) &&
             d.add.forall(e => !readSet.contains(partValuesOfRel(e.path)))
         }
@@ -977,7 +951,7 @@ object PjCommitLog {
   /** Can a MAINTENANCE (pure-move) loser rebase over everything committed
     * since its declared read base? True iff every winner since `base`:
     *
-    *  - is a delta commit (a legacy full-state winner rewrote the world);
+    *  - is a delta commit (a checkpoint-only winner's delta is unknowable);
     *  - neither RETIRED nor RE-ADDED any file this commit consumed. A
     *    DV DELETE re-adds the path with a new vector (retire + add of the
     *    same path); a CoW rewrite retires it — both land in the winner's
@@ -994,7 +968,7 @@ object PjCommitLog {
       val d =
         try delta(fs, root, w)
         catch { case _: PJException => return false }
-      !d.legacyFull &&
+      !d.fullState &&
         d.remove.forall(!remove.contains(_)) &&
         d.add.forall(e => !remove.contains(e.path))
     }
@@ -1018,36 +992,6 @@ object PjCommitLog {
     }.toSeq
   }
 
-  /** Legacy API: commit the FULL post-state file list (paths only). The
-    * delta is computed against the previous snapshot; existing entries
-    * keep their stats. No conflict rebase — a full-state commit was
-    * computed against a specific base and cannot be safely replayed.
-    */
-  def append(fs: FileSystem, root: Path, action: String, files: Seq[String]): Long = {
-    val prev = latest(fs, root)
-    PjProtocol.checkWrite(prev.flatMap(_.protocolJson), fs.makeQualified(root).toString)
-    val prevMap: Map[String, FileEntry] =
-      prev.map(_.entries.map(e => e.path -> e).toMap).getOrElse(Map.empty)
-    val post = files.toSet
-    val add = files.filterNot(prevMap.contains).sorted.map(FileEntry(_))
-    val remove = prevMap.keySet -- post
-    val dir = logDir(root)
-    fs.mkdirs(dir)
-    val v = prev.map(_.version).getOrElse(0L) + 1
-    // same in-commit-timestamp monotonicity clamp as the delta path
-    val ts = math.max(nowMs(), prev.map(_.ts).getOrElse(0L) + 1)
-    val body = renderCommit(v, ts, action, add,
-      remove.toSeq.sorted, post.size, None, None)
-    if (!publish(fs, commitFile(root, v), body))
-      throw new PJException(
-        s"pjparquet: commit-log version conflict at ${commitFile(root, v)} " +
-          "(concurrent writer)")
-    if (v % PjTableProperties.checkpointInterval(prev.flatMap(_.propertiesJson)) == 0)
-      try writeCheckpoint(fs, root, v)
-      catch { case scala.util.control.NonFatal(_) => }
-    v
-  }
-
   /** Write (or keep) the full-snapshot checkpoint for `v` — called on the
     * cadence commits and by [[PjVacuum.expireVersions]] before it drops
     * the delta prefix the version would otherwise need for replay.
@@ -1064,7 +1008,7 @@ object PjCommitLog {
     * place BEFORE the header publishes, so a visible header always points
     * at complete entries; a crash in between leaves an orphan directory
     * that the next checkpoint attempt (same deterministic name) reuses or
-    * vacuum sweeps. Legacy inline-JSON checkpoints keep parsing forever.
+    * vacuum sweeps.
     *
     * `entryFormat` overrides the size-based format choice (tests): `
     * Some(true)` forces parquet entries, `Some(false)` forces inline JSON.
@@ -1107,7 +1051,7 @@ object PjCommitLog {
             sealing.writeSeal()
           }
           return
-        case None => // no parquet predecessor / legacy tail — full rebuild below
+        case None => // no parquet predecessor — full rebuild below
       }
     }
     val snap = read(fs, root, v)
@@ -1259,15 +1203,6 @@ object PjCommitLog {
     math.max(1, math.min(16384, (entries.size / rowsPerSlice).toInt + 1))
   }
 
-  /** Incremental parquet checkpoint: the new entry dir = (previous
-    * parquet checkpoint read THROUGH THE ENGINE) minus every path the
-    * delta tail touched, plus the tail's surviving adds — a broadcast
-    * anti-join over O(delta) paths, so driver memory and task payloads
-    * stay O(delta) no matter how many files are live. Returns the header
-    * facts `(nFiles, ts, action, dataSchema)` on success; `None` when
-    * there is no parquet-backed predecessor or the tail contains a legacy
-    * full-snapshot commit (the full rebuild path handles those).
-    */
   /** Header facts an incremental checkpoint carries forward. */
   private final case class CkptHeader(
       nFiles: Long, ts: Long, action: String,
@@ -1276,6 +1211,14 @@ object PjCommitLog {
       protocol: Option[String], rowWatermark: Option[String],
       txns: Option[String])
 
+  /** Incremental parquet checkpoint: the new entry dir = (previous
+    * parquet checkpoint read THROUGH THE ENGINE) minus every path the
+    * delta tail touched, plus the tail's surviving adds — a broadcast
+    * anti-join over O(delta) paths, so driver memory and task payloads
+    * stay O(delta) no matter how many files are live. Returns the header
+    * facts on success; `None` when there is no parquet-backed predecessor
+    * (the full rebuild path handles that).
+    */
   private def incrementalParquetCheckpoint(
       spark: org.apache.spark.sql.SparkSession, fs: FileSystem,
       root: Path, v: Long): Option[CkptHeader] = {
@@ -1299,7 +1242,6 @@ object PjCommitLog {
     val tailEntries = new java.util.LinkedHashMap[String, FileEntry]()
     for (tv <- tail) {
       val node = parseFile(fs, commitFile(root, tv), tv)
-      if (node.has("files")) return None // legacy full snapshot resets state
       node.path("remove").elements().asScala.foreach { r =>
         touched.add(r.asText); tailEntries.remove(r.asText)
       }
@@ -1417,14 +1359,12 @@ object PjCommitLog {
   /** runId → version for every RETAINED commit whose operation tag is
     * `copy-into:<runId>` — [[PjCopyInto]]'s marker repair sweep resolves
     * crashed-between-commit-and-finalize claims against this. One streamed
-    * header read per version (the operation scalar rides ahead of the
-    * entry payload); checkpoint-only versions contribute nothing (their
-    * operation rode the expired commit file — which is why the sweep
-    * never DELETES a claim on its own).
+    * header read per version ([[operationAt]]); checkpoint-only versions
+    * contribute nothing (their operation rode the expired commit file —
+    * which is why the sweep never DELETES a claim on its own).
     */
   def operationsByRun(fs: FileSystem, root: Path): Map[String, Long] =
-    versions(fs, root).flatMap(v =>
-      copyIntoRunAt(fs, root, v).map(_ -> v)).toMap
+    versions(fs, root).flatMap(v => copyIntoRun(operationAt(fs, root, v)).map(_ -> v)).toMap
 
   /** The version of the retained commit tagged `copy-into:<runId>`,
     * scanning BACKWARD from head — a run looking up its own just-landed
@@ -1433,15 +1373,24 @@ object PjCommitLog {
     */
   def versionOfRun(fs: FileSystem, root: Path, runId: String): Option[Long] =
     versions(fs, root).reverseIterator
-      .find(v => copyIntoRunAt(fs, root, v).contains(runId))
+      .find(v => copyIntoRun(operationAt(fs, root, v)).contains(runId))
 
-  private def copyIntoRunAt(fs: FileSystem, root: Path, v: Long): Option[String] = {
+  private def copyIntoRun(op: Option[String]): Option[String] =
+    op.filter(_.startsWith("copy-into:")).map(_.stripPrefix("copy-into:"))
+
+  /** The originating SQL operation a commit recorded — one streamed
+    * header read (the operation scalar rides ahead of the entry payload),
+    * no entry parse and no replay. `None` when the commit recorded none,
+    * when the version survives only as a checkpoint (its operation rode
+    * the expired commit file), or when the commit file cannot be read.
+    */
+  private[pjparquet] def operationAt(fs: FileSystem, root: Path, v: Long): Option[String] = {
     import com.fasterxml.jackson.core.JsonToken
     val p = commitFile(root, v)
     if (!fs.exists(p)) None
     else try {
-      val body = readValidated(fs, p, v)._1
-      val jp = new com.fasterxml.jackson.core.JsonFactory().createParser(body)
+      val jp = new com.fasterxml.jackson.core.JsonFactory()
+        .createParser(readValidated(fs, p, v))
       var op: Option[String] = None
       if (jp.nextToken() == JsonToken.START_OBJECT) {
         var done = false
@@ -1449,13 +1398,13 @@ object PjCommitLog {
           val name = jp.currentName(); jp.nextToken()
           name match {
             case "operation" => op = Some(jp.getText); done = true
-            case "dataSchema" | "add" | "remove" | "files" => done = true
+            case "dataSchema" | "add" | "remove" => done = true
             case _ => jp.skipChildren()
           }
         }
       }
       jp.close()
-      op.filter(_.startsWith("copy-into:")).map(_.stripPrefix("copy-into:"))
+      op
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -1476,9 +1425,7 @@ object PjCommitLog {
     * them before any entry array) are parsed, then the stream is dropped.
     * A version served by its checkpoint (post-expiry base) therefore costs
     * O(1) memory for DESCRIBE HISTORY / versionAtTimestamp instead of
-    * materializing an O(live files) node tree on the driver. Legacy
-    * full-snapshot commits without an `nFiles` field fall through to a
-    * streamed COUNT of their `files` array — still no tree.
+    * materializing an O(live files) node tree on the driver.
     */
   private def parseHeader(fs: FileSystem, p: Path, version: Long): HistoryEntry = {
     import com.fasterxml.jackson.core.JsonToken
@@ -1487,44 +1434,28 @@ object PjCommitLog {
       // headers are small; the entry payload of big checkpoints rides
       // parquet), then the same early-exit streamed header parse over the
       // validated bytes
-      val validated = readValidated(fs, p, version)
-      val body = validated._1
-      val hadSeal = validated._2
-      locally {
-        val jp = new com.fasterxml.jackson.core.JsonFactory().createParser(body)
-        if (jp.nextToken() != JsonToken.START_OBJECT)
-          throw new PJException(s"pjparquet: corrupt commit-log entry $p (not a JSON object)")
-        var ver = -1L; var ts = 0L; var action = "unknown"; var nFiles = -1L
-        var sealedFlag = false
-        var sawVer = false; var sawTs = false; var sawAction = false; var sawN = false
-        var done = false
-        while (!done && jp.nextToken() == JsonToken.FIELD_NAME) {
-          val name = jp.currentName()
-          jp.nextToken()
-          name match {
-            case "version" => ver = jp.getLongValue; sawVer = true
-            case "ts" => ts = jp.getLongValue; sawTs = true
-            case "action" => action = jp.getText; sawAction = true
-            case "sealed" => sealedFlag = jp.getBooleanValue
-            case "nFiles" => nFiles = jp.getLongValue; sawN = true
-            case "files" | "entries" if !sawN =>
-              var n = 0L
-              while (jp.nextToken() != JsonToken.END_ARRAY) { jp.skipChildren(); n += 1 }
-              nFiles = n; sawN = true
-            case _ => jp.skipChildren()
-          }
-          done = sawVer && sawTs && sawAction && sawN
+      val jp = new com.fasterxml.jackson.core.JsonFactory()
+        .createParser(readValidated(fs, p, version))
+      if (jp.nextToken() != JsonToken.START_OBJECT)
+        throw new PJException(s"pjparquet: corrupt commit-log entry $p (not a JSON object)")
+      var ver = -1L; var ts = 0L; var action = "unknown"; var nFiles = -1L
+      var sawVer = false; var sawTs = false; var sawAction = false; var sawN = false
+      while (!(sawVer && sawTs && sawAction && sawN) &&
+          jp.nextToken() == JsonToken.FIELD_NAME) {
+        val name = jp.currentName()
+        jp.nextToken()
+        name match {
+          case "version" => ver = jp.getLongValue; sawVer = true
+          case "ts" => ts = jp.getLongValue; sawTs = true
+          case "action" => action = jp.getText; sawAction = true
+          case "nFiles" => nFiles = jp.getLongValue; sawN = true
+          case _ => jp.skipChildren()
         }
-        if (sealedFlag && !hadSeal)
-          throw new PJException(
-            s"pjparquet: corrupt commit-log entry $p (body declares sealed:true " +
-              s"but the seal line is missing — truncated file); version $version " +
-              "is unreadable — restore the file from a replica or expire past it")
-        if (ver != version)
-          throw new PJException(
-            s"pjparquet: commit-log entry claims version $ver but is filed as $version")
-        HistoryEntry(version, ts, action, nFiles)
       }
+      if (ver != version)
+        throw new PJException(
+          s"pjparquet: commit-log entry claims version $ver but is filed as $version")
+      HistoryEntry(version, ts, action, nFiles)
     } catch {
       case _: java.io.FileNotFoundException =>
         val vs = versions(fs, p.getParent.getParent)
@@ -1743,21 +1674,19 @@ object PjCommitLog {
     */
   // ------------------------------------------------------- integrity seal
 
-  /** Log corruption detection (round 14). Every NEW commit/checkpoint
-    * body carries `"sealed":true` and the file ends with one extra line,
+  /** Log corruption detection. Every commit/checkpoint body carries
+    * `"sealed":true` and the file ends with one extra line,
     * `{"crc32c":<crc>,"len":<bytes>}`, where crc/len cover every byte
     * BEFORE that line's separating newline. Replay and history validate:
     *
     *  - a bit flip anywhere in the body → CRC mismatch, loud;
     *  - truncation inside the body → JSON parse failure or CRC/len
     *    mismatch, loud;
-    *  - truncation that drops exactly the seal line → the body still
-    *    parses but declares `"sealed":true` with no seal present, loud.
+    *  - truncation that drops exactly the seal line → no seal present,
+    *    loud.
     *
-    * Pre-seal files (no `sealed` field) keep parsing forever — their
-    * integrity story is unchanged (JSON parse errors only). The body is
-    * single-line JSON (control characters are escaped), so the seal's
-    * separating newline is unambiguous: it is the LAST raw 0x0A.
+    * The body is single-line JSON (control characters are escaped), so
+    * the seal's separating newline is unambiguous: it is the LAST raw 0x0A.
     */
   private final class SealingOutputStream(out: java.io.OutputStream)
       extends java.io.OutputStream {
@@ -1780,11 +1709,10 @@ object PjCommitLog {
     "\n{\"crc32c\":" + crc + ",\"len\":" + len + "}"
 
   /** Read + integrity-check a log file: returns the BODY bytes (seal line
-    * stripped) and whether a valid seal was present. Throws
-    * [[PJException]] naming the version on any corruption class above.
+    * stripped). Throws [[PJException]] naming the version on any
+    * corruption class above.
     */
-  private def readValidated(fs: FileSystem, p: Path,
-      version: Long): (Array[Byte], Boolean) = {
+  private def readValidated(fs: FileSystem, p: Path, version: Long): Array[Byte] = {
     val in = fs.open(p)
     val all =
       try {
@@ -1804,34 +1732,25 @@ object PjCommitLog {
       if (nl < 0 || nl == all.length - 1) ""
       else new String(all, nl + 1, all.length - nl - 1,
         java.nio.charset.StandardCharsets.UTF_8).trim
-    if (tail.startsWith("{\"crc32c\":")) {
-      val node =
-        try new ObjectMapper().readTree(tail)
-        catch { case _: com.fasterxml.jackson.core.JacksonException => corrupt("unparseable seal line") }
-      val recordedCrc = node.path("crc32c").asLong(-1L)
-      val recordedLen = node.path("len").asLong(-1L)
-      if (recordedLen != nl)
-        corrupt(s"seal length mismatch: recorded $recordedLen, found $nl body bytes")
-      val crc = new java.util.zip.CRC32C()
-      crc.update(all, 0, nl)
-      if (crc.getValue != recordedCrc)
-        corrupt(s"CRC32C mismatch: recorded $recordedCrc, computed ${crc.getValue}")
-      (java.util.Arrays.copyOfRange(all, 0, nl), true)
-    } else (all, false) // possibly legacy — the caller checks the `sealed` flag
+    if (!tail.startsWith("{\"crc32c\":"))
+      corrupt("the seal line is missing — truncated file")
+    val node =
+      try new ObjectMapper().readTree(tail)
+      catch { case _: com.fasterxml.jackson.core.JacksonException => corrupt("unparseable seal line") }
+    val recordedCrc = node.path("crc32c").asLong(-1L)
+    val recordedLen = node.path("len").asLong(-1L)
+    if (recordedLen != nl)
+      corrupt(s"seal length mismatch: recorded $recordedLen, found $nl body bytes")
+    val crc = new java.util.zip.CRC32C()
+    crc.update(all, 0, nl)
+    if (crc.getValue != recordedCrc)
+      corrupt(s"CRC32C mismatch: recorded $recordedCrc, computed ${crc.getValue}")
+    java.util.Arrays.copyOfRange(all, 0, nl)
   }
 
-  /** The body declared itself sealed but the caller got it WITHOUT a valid
-    * seal line — exactly the drop-the-seal truncation class.
+  /** One audited log file: `ok` status (a valid seal), or the failure
+    * message.
     */
-  private def requireSealPresent(node: JsonNode, hadSeal: Boolean, p: Path,
-      version: Long): Unit =
-    if (!hadSeal && node.path("sealed").asBoolean(false))
-      throw new PJException(
-        s"pjparquet: corrupt commit-log entry $p (body declares sealed:true " +
-          s"but the seal line is missing — truncated file); version $version " +
-          "is unreadable — restore the file from a replica or expire past it")
-
-  /** One audited log file: `ok` status, or the failure message. */
   final case class LogAudit(version: Long, file: String, isSealed: Boolean, status: String)
 
   /** Integrity audit of every retained log file (commit deltas AND
@@ -1844,11 +1763,8 @@ object PjCommitLog {
     versions(fs, root).flatMap { v =>
       Seq(commitFile(root, v), checkpointFile(root, v)).filter(fs.exists).map { p =>
         try {
-          val (body, hadSeal) = readValidated(fs, p, v)
-          val node = new ObjectMapper().readTree(body)
-          requireSealPresent(node, hadSeal, p, v)
-          LogAudit(v, p.getName, hadSeal,
-            if (hadSeal) "ok" else "ok (pre-seal legacy file)")
+          new ObjectMapper().readTree(readValidated(fs, p, v))
+          LogAudit(v, p.getName, isSealed = true, "ok")
         } catch {
           case e: Exception =>
             LogAudit(v, p.getName, isSealed = false,
@@ -1869,12 +1785,19 @@ object PjCommitLog {
       out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   private def publish(fs: FileSystem, target: Path, body: String): Boolean = {
+    val sealedBody = sealBody(body)
+    publishStream(fs, target)(_.write(sealedBody))
+  }
+
+  /** `body` as a log file stores it: the UTF-8 bytes followed by their
+    * seal line.
+    */
+  private[graft] def sealBody(body: String): Array[Byte] = {
     val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val crc = new java.util.zip.CRC32C()
     crc.update(bytes)
-    val seal = sealLine(crc.getValue, bytes.length.toLong)
+    bytes ++ sealLine(crc.getValue, bytes.length.toLong)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    publishStream(fs, target) { out => out.write(bytes); out.write(seal) }
   }
 
   /** Streaming form of the atomic claim: `write` receives the output
@@ -1961,8 +1884,7 @@ object PjCommitLog {
     val mapper = new ObjectMapper()
     val node = mapper.createObjectNode()
     node.put("version", v)
-    // early in the body so the streamed header parse always sees it —
-    // readers then REQUIRE the trailing seal line (corruption detection)
+    // part of the fixed header; readers check the trailing seal line itself
     node.put("sealed", true)
     node.put("ts", ts)
     node.put("action", action)
@@ -2068,12 +1990,8 @@ object PjCommitLog {
     // integrity-validated read ([[readValidated]]): bit flips and
     // truncations fail loudly with the version named, before any replay
     val node =
-      try {
-        val (body, hadSeal) = readValidated(fs, p, version)
-        val n = new ObjectMapper().readTree(body)
-        requireSealPresent(n, hadSeal, p, version)
-        n
-      } catch {
+      try new ObjectMapper().readTree(readValidated(fs, p, version))
+      catch {
         case _: java.io.FileNotFoundException =>
           val vs = versions(fs, p.getParent.getParent)
           throw new PJException(

@@ -99,7 +99,7 @@ object PjManifest {
       generate(fs, rootPath, rootPath.toString); return
     }
     val d = PjCommitLog.delta(fs, rootPath, snap.version)
-    if (d.legacyFull) { generate(fs, rootPath, rootPath.toString); return }
+    if (d.fullState) { generate(fs, rootPath, rootPath.toString); return }
     val touched: Set[String] =
       (d.add.map(_.path) ++ d.remove).map(relDirOf).toSet
     if (touched.isEmpty) { publishVersionGuarded(fs, rootPath, manifestRoot, snap.version); return }

@@ -55,10 +55,7 @@ final case class PjStreamInfo(
   * log entries are one small file per batch, bounded by the batch's file
   * count, and every [[CompactInterval]] batches the log compacts to one
   * seen-set snapshot + a bounded numeric tail, so neither entry count nor
-  * restart replay grows with stream lifetime. Offsets written by the
-  * pre-log scheme (`{"maxMtime":…,"paths":[…]}`) still deserialize; the
-  * first trigger after an upgrade seeds the seen-set from the legacy
-  * watermark so nothing replays.
+  * restart replay grows with stream lifetime.
   *
   * With `maxFilesPerTrigger` each batch takes at most n pending files in
   * (mtime, path) order; `Trigger.AvailableNow` snapshots the listing at
@@ -90,12 +87,6 @@ class PjMicroBatchStream(
     override def json(): String = s"""{"batchId":$batchId}"""
   }
 
-  /** Pre-log offset format, kept for checkpoint back-compat only. */
-  final case class PjLegacyOffset(maxMtime: Long, paths: Seq[String]) extends Offset {
-    override def json(): String =
-      s"""{"maxMtime":$maxMtime,"paths":[${paths.sorted.map(jq).mkString(",")}]}"""
-  }
-
   private def jq(s: String) = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
@@ -111,12 +102,9 @@ class PjMicroBatchStream(
     """"batchId":(-?\d+)""".r.findFirstMatchIn(json) match {
       case Some(m) => PjStreamOffset(m.group(1).toLong)
       case None =>
-        val maxM = """"maxMtime":(-?\d+)""".r.findFirstMatchIn(json)
-          .map(_.group(1).toLong).getOrElse(-1L)
-        val paths = """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(
-          json.dropWhile(_ != '[')).map(_.group(1)
-            .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-        PjLegacyOffset(maxM, paths.filterNot(_ == "maxMtime"))
+        throw new graft.core.PJException(
+          s"pjparquet stream: offset $json of '${info.path}' has no batchId; " +
+            "restart the stream from a fresh checkpoint")
     }
 
   // ----------------------------------------------------------- metadata log
@@ -165,12 +153,6 @@ class PjMicroBatchStream(
   private val seen = mutable.HashSet.empty[String]
   private var maxLoggedBatch = -1L
   private var replayed = false
-  private var legacySeeded = false
-
-  /** Non-numeric log entry holding paths consumed by a pre-log watermark
-    * checkpoint; replayed into `seen` but never part of any batch union.
-    */
-  private val LegacySeedEntry = "legacyseed"
 
   /** Every `CompactInterval` batches the whole seen-set is snapshotted as
     * one `seen-<id>` entry and numeric entries more than two intervals old
@@ -193,16 +175,11 @@ class PjMicroBatchStream(
         snapId.foreach { id =>
           seen ++= readLog(s"seen-$id")
           maxLoggedBatch = id
-          legacySeeded = true // any legacy seed is folded into the snapshot
         }
         names.filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
           .filter(id => snapId.forall(id > _)).foreach { id =>
             seen ++= readLog(id.toString); maxLoggedBatch = math.max(maxLoggedBatch, id)
           }
-        if (snapId.isEmpty && names.contains(LegacySeedEntry)) {
-          seen ++= readLog(LegacySeedEntry)
-          legacySeeded = true
-        }
         // suppressed-file entries ([[latestOffset]]): paths whose rows were
         // already delivered through their retired sources — replayed as
         // delivered (idempotent union; entries folded into a snapshot are
@@ -232,28 +209,9 @@ class PjMicroBatchStream(
       // suppressed-file entries fold into the snapshot just written (seen
       // already contains them when maybeCompact is called)
       val dropSup = n.startsWith("sup-")
-      if (dropNumeric || dropSnap || dropSup || n == LegacySeedEntry)
+      if (dropNumeric || dropSnap || dropSup)
         fs.delete(s.getPath, false)
     }
-  }
-
-  /** Upgrade path: a restart from a pre-log checkpoint hands a legacy
-    * watermark as `start`. Everything the watermark already consumed is
-    * marked seen (from the current listing) so it never enters a logged
-    * batch, and the seeded set is PERSISTED as a non-numeric log entry so
-    * restarts after the offset has moved to the new format still know it.
-    * The legacy contract's "no backdated files" assumption applies to
-    * exactly this one seeding.
-    */
-  private def seedFromLegacy(start: PjLegacyOffset): Unit = synchronized {
-    if (legacySeeded) return
-    val consumedAt = start.paths.toSet
-    val consumed = listMtimes().toSeq.collect {
-      case (p, (m, _)) if m < start.maxMtime || (m == start.maxMtime && consumedAt.contains(p)) => p
-    }
-    writeLog(LegacySeedEntry, consumed)
-    seen ++= consumed
-    legacySeeded = true
   }
 
   // -------------------------------------------- change-commit admission
@@ -265,7 +223,7 @@ class PjMicroBatchStream(
     * restore, merge-on-read delta). `removedAbs` = the commit's retired
     * sources — whether THEY were delivered decides fresh-start vs
     * mid-stream. Files whose commit the classifier cannot see (unlogged
-    * directories, expired commits, legacy full-snapshot deltas) are plain
+    * directories, expired commits) are plain
     * arrivals: the stream delivers the current state.
     */
   private final case class AddClass(
@@ -291,7 +249,7 @@ class PjMicroBatchStream(
       .sortBy(_.version)
       .foreach { h =>
         val d = scala.util.Try(PjCommitLog.delta(fs, root, h.version)).getOrElse(null)
-        if (d != null && !d.legacyFull) {
+        if (d != null && !d.fullState) {
           if (AppendActions.contains(d.action))
             d.add.foreach(e => addClass.remove(abs(e.path)))
           else {
@@ -431,10 +389,7 @@ class PjMicroBatchStream(
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
     ensureReplayed()
-    val startId = start match {
-      case o: PjStreamOffset => o.batchId
-      case o: PjLegacyOffset => seedFromLegacy(o); -1L
-    }
+    val startId = start.asInstanceOf[PjStreamOffset].batchId
     if (maxLoggedBatch > startId) return PjStreamOffset(maxLoggedBatch)
     val inSnapshot: String => Boolean =
       availableNowSnapshot.map(s => s.contains(_)).getOrElse(_ => true)
@@ -508,32 +463,14 @@ class PjMicroBatchStream(
 
   /** Files in `(start, end]`: the union of the logged batch lists, as
     * validated PjFiles (index bytes + partition values) from the batch
-    * resolver. A legacy `end` (replay of a pre-upgrade batch) falls back to
-    * the watermark-window scheme over the live listing.
+    * resolver.
     */
   private def filesInWindow(start: Offset, end: Offset): Seq[PjFile] = {
-    val wanted: String => Boolean = end match {
-      case e: PjStreamOffset =>
-        if (e.batchId < 0) return Nil
-        ensureReplayed()
-        val startId = start match {
-          case o: PjStreamOffset => o.batchId
-          case _: PjLegacyOffset => -1L // legacy-consumed files were never logged
-        }
-        val ps = ((startId + 1) to e.batchId).flatMap(id => readLog(id.toString)).toSet
-        ps.contains(_)
-      case e: PjLegacyOffset =>
-        val s = start.asInstanceOf[PjLegacyOffset]
-        if (e.maxMtime < 0) return Nil
-        val mtimes = listMtimes()
-        val endPaths = e.paths.toSet
-        val startPaths = s.paths.toSet
-        p => mtimes.get(p).exists { case (m, _) =>
-          val afterStart = m > s.maxMtime || (m == s.maxMtime && !startPaths.contains(p))
-          val atOrBeforeEnd = m < e.maxMtime || (m == e.maxMtime && endPaths.contains(p))
-          afterStart && atOrBeforeEnd
-        }
-    }
+    val endId = end.asInstanceOf[PjStreamOffset].batchId
+    if (endId < 0) return Nil
+    ensureReplayed()
+    val startId = start.asInstanceOf[PjStreamOffset].batchId
+    val wanted = ((startId + 1) to endId).flatMap(id => readLog(id.toString)).toSet
     val layout = PjParquetTable.resolveFiles(
       info.path, hadoopConf, info.autogen, info.mergeSchema)
     layout.files.filter(f => wanted(f.path))

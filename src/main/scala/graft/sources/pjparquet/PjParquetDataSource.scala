@@ -1082,8 +1082,8 @@ object PjParquetTable {
     layout
   }
 
-  /** Eager per-file load shared by the unlogged directory walk and legacy
-    * (path-only) log entries: validate + use the sidecar, else autogen
+  /** Eager per-file load shared by the unlogged directory walk and path-only
+    * log entries: validate + use the sidecar, else autogen
     * from the footer, with the walk's zero-row-group (None) and
     * nested-schema (rawFooter) handling.
     */
@@ -1130,9 +1130,8 @@ object PjParquetTable {
     * `add.stats` parity; the fix for O(files) driver sidecar loads at
     * 1M-file scale). Sidecar indexes load lazily ([[PjIndexRef]]) for
     * exactly the files a scan keeps after pruning, validated against the
-    * entry's footer fingerprint — content-exact, no mtime games. Legacy
-    * path-only entries (round-9 logs, adopted pre-log files) take the old
-    * eager per-file load, so nothing regresses.
+    * entry's footer fingerprint — content-exact, no mtime games. Path-only
+    * entries (adopted pre-log files) take the eager per-file load.
     */
   /** Hive `key=value` pairs of a snapshot-relative path — the same decode
     * the directory walk applies (URLDecoder only when an escape is
@@ -1157,7 +1156,7 @@ object PjParquetTable {
     * append on a million-file table then costs O(changed files), not a
     * million-object rebuild (the soak's `real_append_commit_ms`). Bails
     * to the full build on anything that could change GLOBAL layout facts:
-    * property changes (partition spec lives there), legacy/unplanned
+    * property changes (partition spec lives there), unplanned
     * entries, non-uniform or inferred partitioning, checkpoint-only
     * versions, or deltas too large to beat a rebuild.
     */
@@ -1181,7 +1180,7 @@ object PjParquetTable {
     val deltas =
       try (v0 + 1 to snap.version).map(v => PjCommitLog.delta(fs, p, v))
       catch { case scala.util.control.NonFatal(_) => return None }
-    if (deltas.exists(_.legacyFull)) return None
+    if (deltas.exists(_.fullState)) return None
     val changed = deltas.iterator.map(d => d.add.size + d.remove.size).sum
     if (changed > math.max(64, snap.entries.size / 4)) return None
     val adds = deltas.flatMap(_.add)
@@ -1350,7 +1349,7 @@ object PjParquetTable {
           alignedValues(parts), rawFooter = e.nested, entry = Some(e),
           dv = e.dv.map(d => (new Path(qualifiedRoot, d.path).toString, d.deleted))))
       } else {
-        // legacy / adopted entry: eager load, exactly the unlogged path —
+        // path-only (adopted) entry: eager load, exactly the unlogged path —
         // including the loud expired-by-vacuum diagnosis for missing files
         val st =
           try fs.getFileStatus(abs)
@@ -1370,7 +1369,7 @@ object PjParquetTable {
       }
     }
     // stats-carrying entries build in parallel (pure object construction,
-    // the common case at scale); legacy entries touch the filesystem and
+    // the common case at scale); path-only entries touch the filesystem and
     // keep the sequential path
     val filesArr = new Array[Option[PjFile]](parsedArr.length)
     java.util.stream.IntStream.range(0, parsedArr.length).parallel().forEach { i =>
@@ -1421,7 +1420,7 @@ object PjParquetTable {
       else PjSortMarker.read(fs, p).getOrElse(Nil)
     // recorded data schema serves Table.schema() with zero file opens and
     // is AUTHORITATIVE when present — files are trusted members of the
-    // log, validated when their commit landed; legacy logs without a
+    // log, validated when their commit landed; logs without a
     // recorded schema fall back to the head-file physical schema
     val dataSchema: Option[StructType] = recordedSchema
     val layout = PjLayout(files, partitionSchema, sortedBy, dataSchema,

@@ -338,7 +338,7 @@ final case class PjDescribeHistoryCommand(table: String) extends LeafRunnableCom
       throw new PJException(
         s"pjparquet: '$table' has no commit log; DESCRIBE HISTORY applies to logged tables")
     PjCommitLog.history(fs, root).sortBy(-_.version).map { h =>
-      val op = PjCommitLog.delta(fs, root, h.version).operation.orNull
+      val op = PjCommitLog.operationAt(fs, root, h.version).orNull
       Row(h.version, new java.sql.Timestamp(h.ts), h.action, op, h.nFiles)
     }
   }

@@ -7,12 +7,12 @@ import graft.SparkTestSession
 import graft.core.PJException
 import graft.sources.pjparquet.{PjCommitLog, PjParquetTable}
 
-/** Log corruption detection (round 14): every commit/checkpoint body is
-  * sealed — `"sealed":true` in the body plus a trailing
-  * `{"crc32c":…,"len":…}` line over the body bytes. Replay and history
-  * validate, so a bit-rotted or hand-edited commit file fails LOUDLY with
-  * the version named instead of silently misreading. Pre-seal (legacy)
-  * files keep parsing.
+/** Log corruption detection: every commit/checkpoint body is sealed —
+  * `"sealed":true` in the body plus a trailing `{"crc32c":…,"len":…}`
+  * line over the body bytes. Replay and history validate, so a
+  * bit-rotted, truncated or hand-edited commit file fails LOUDLY with the
+  * version named instead of silently misreading. A file without a seal
+  * line is corruption.
   */
 class PjLogIntegritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -138,10 +138,10 @@ class PjLogIntegritySpec extends AnyFunSuite {
     assert(audited(2L) == "ok", s"got: $audited")
   }
 
-  test("legacy pre-seal commit files keep parsing (no sealed flag, no seal line)") {
-    val dir = tempDir("legacy")
+  test("an unsealed commit file reads as corruption") {
+    val dir = tempDir("unsealed")
     writeLogged(spark.range(0, 4).toDF("id").coalesce(1), dir) // v1, sealed
-    // plant a legacy-format v2 exactly like a pre-round-14 build wrote it
+    // plant a v2 body that parses as JSON but carries no seal line
     val fs = fsOf(dir)
     val snap = PjCommitLog.latest(fs, new Path(dir)).get
     val body = s"""{"version":2,"ts":${snap.ts + 10},"action":"append","nFiles":1,""" +
@@ -149,14 +149,16 @@ class PjLogIntegritySpec extends AnyFunSuite {
     val p = new Path(new Path(dir, "_pj_log"), f"${2L}%020d.json")
     val out = fs.create(p, false)
     out.write(body.getBytes("UTF-8")); out.close()
-    PjCommitLog.clearSnapshotCache(); PjParquetTable.clearLayoutCache()
-    assert(coldRead(dir) == 4L, "legacy unsealed commit must replay")
-    val hist = PjCommitLog.history(fs, new Path(dir))
-    assert(hist.map(_.version) == Seq(1L, 2L))
-    // and new commits over a legacy tail are sealed + monotone again
-    writeLogged(spark.range(4, 6).toDF("id").coalesce(1), dir) // v3
-    val f3 = new String(java.nio.file.Files.readAllBytes(
-      logFile(dir, 3L).toPath), "UTF-8")
-    assert(f3.contains("\"sealed\":true") && f3.contains("{\"crc32c\":"))
+    val e = intercept[PJException](coldRead(dir))
+    assert(e.getMessage.contains("00000000000000000002.json"), e.getMessage)
+    assert(e.getMessage.contains("seal line is missing"), e.getMessage)
+    val eh = intercept[PJException](PjCommitLog.history(fs, new Path(dir)))
+    assert(eh.getMessage.contains("corrupt commit-log entry"), eh.getMessage)
+    spark.conf.set("spark.sql.catalog.pjseal", "graft.sources.pjparquet.PjCatalog")
+    val audited = spark.sql(s"CALL pjseal.system.verify_log('$dir')").collect()
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(audited(1L) == "ok", s"got: $audited")
+    assert(audited(2L).contains("corrupt commit-log entry") &&
+      audited(2L).contains("seal line is missing"), s"got: $audited")
   }
 }

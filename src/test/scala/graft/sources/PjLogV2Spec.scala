@@ -467,49 +467,6 @@ class PjLogV2Spec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS pj_logv2_cdcf")
   }
 
-  test("legacy (round-9) full-snapshot log files upgrade in place: replay, reads, and v2 commits on top") {
-    import spark.implicits._
-    val dir = tempDir("legacy")
-    // a real table written UNLOGGED, then a legacy-format log authored over
-    // it by hand — exactly the on-disk state a round-9 table left behind
-    Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1)
-      .write.format("pjparquet").mode("append").save(dir)
-    val fs = fsOf(dir)
-    val root = new Path(dir)
-    val rels = {
-      val it = fs.listFiles(root, false)
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val n = it.next().getPath.getName
-        if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) b += n
-      }
-      b.result().sorted
-    }
-    fs.mkdirs(PjCommitLog.logDir(root))
-    val legacy = s"""{"version":1,"ts":123456,"action":"append","files":[""" +
-      rels.map(r => "\"" + r + "\"").mkString(",") + "]}\n"
-    val out = fs.create(new Path(PjCommitLog.logDir(root), f"${1L}%020d.json"), true)
-    try out.write(legacy.getBytes("UTF-8")) finally out.close()
-
-    // legacy snapshot replays as a checkpoint-equivalent full state
-    val v1 = PjCommitLog.read(fs, root, 1L)
-    assert(v1.files == rels && v1.action == "append" && v1.ts == 123456L)
-    assert(v1.entries.forall(e => !e.planned), "legacy entries are path-only")
-    // reads plan it (eager per-file path), values exact
-    assert(spark.read.format("pjparquet").load(dir)
-      .select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    // a v2 stats-carrying commit lands on top and the mixed log replays
-    writeLogged(Seq((3L, "c")).toDF("id", "name").coalesce(1), dir) // v2
-    val head = PjCommitLog.latest(fs, root).get
-    assert(head.version == 2L && head.entries.size == rels.size + 1)
-    assert(head.entries.count(_.planned) == 1, "the new file's entry carries stats")
-    assert(spark.read.format("pjparquet").load(dir)
-      .select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    // time travel into the legacy version still works
-    assert(spark.read.format("pjparquet").option("versionAsOf", "1").load(dir)
-      .select("id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-  }
-
   test("checkpoint cadence: every 10th commit writes a checkpoint and replay uses it") {
     val dir = tempDir("ckpt")
     val root = new Path(dir)

@@ -24,7 +24,8 @@ class PjProtocolSpec extends AnyFunSuite {
     df.write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir)
 
   /** Hand-edit the log: claim the next version with a commit that
-    * requires the given protocol — simulating a FUTURE build's table.
+    * requires the given protocol — simulating a FUTURE build's table,
+    * sealed as every build seals its log files (CRC32C + length line).
     */
   private def commitFutureProtocol(dir: String, reader: Seq[String], writer: Seq[String]): Long = {
     val fs = fsOf(dir)
@@ -35,9 +36,14 @@ class PjProtocolSpec extends AnyFunSuite {
     val body =
       s"""{"version":$v,"ts":${System.currentTimeMillis()},"action":"upgrade",""" +
         s""""nFiles":1,"protocol":"$protocol","add":[],"remove":[]}"""
+    val bytes = body.getBytes("UTF-8")
+    val crc = new java.util.zip.CRC32C()
+    crc.update(bytes)
     val p = new Path(new Path(root, "_pj_log"), f"$v%020d.json")
     val out = fs.create(p, false)
-    out.write(body.getBytes("UTF-8")); out.close()
+    out.write(bytes)
+    out.write(s"""\n{"crc32c":${crc.getValue},"len":${bytes.length}}""".getBytes("UTF-8"))
+    out.close()
     PjCommitLog.clearSnapshotCache()
     v
   }
@@ -159,7 +165,7 @@ class PjProtocolSpec extends AnyFunSuite {
       .selectExpr("_row_id").distinct().count() == 15L)
   }
 
-  test("detail exposes the protocol; legacy full-state commits cannot erase it") {
+  test("detail exposes the protocol; a later append keeps it") {
     import spark.implicits._
     val dir = tempDir("detail")
     writeLogged(spark.range(0, 12).select($"id", ($"id" % 4).as("k")).coalesce(1), dir)
@@ -170,22 +176,12 @@ class PjProtocolSpec extends AnyFunSuite {
     val protoCol = d.getString(d.length - 1)
     assert(protoCol != null && protoCol.contains("dv"),
       s"detail must expose the protocol, got $protoCol")
-    // a legacy writer's full-state commit (the raw `files` form, which
-    // resets schema/constraints on replay) must NOT erase the protocol
+    // a commit that records no protocol of its own leaves the lane intact
+    writeLogged(spark.range(100, 102).select($"id", ($"id" % 4).as("k")).coalesce(1), dir)
     val fs = fsOf(dir)
-    val root = new Path(dir)
-    val snap = PjCommitLog.latest(fs, root).get
-    val v = snap.version + 1
-    val filesArr = snap.files.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val body = s"""{"version":$v,"ts":${System.currentTimeMillis()},""" +
-      s""""action":"legacy","files":$filesArr}"""
-    val p = new Path(new Path(root, "_pj_log"), f"$v%020d.json")
-    val out = fs.create(p, false)
-    out.write(body.getBytes("UTF-8")); out.close()
-    PjCommitLog.clearSnapshotCache()
-    assert(PjProtocol.parse(PjCommitLog.read(fs, root, v).protocolJson)
-      .reader.contains("dv"),
-      "a legacy full-state commit must not erase the protocol lane")
+    val head = PjCommitLog.latest(fs, new Path(dir)).get
+    assert(PjProtocol.parse(head.protocolJson).reader.contains("dv"),
+      s"a later append must not erase the protocol lane, got ${head.protocolJson}")
     spark.sql("DROP TABLE IF EXISTS pj_protocol_dt")
   }
 

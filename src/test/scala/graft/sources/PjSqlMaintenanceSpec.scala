@@ -105,6 +105,27 @@ class PjSqlMaintenanceSpec extends AnyFunSuite {
       .exists(_.getString(0) == "d"))
   }
 
+  test("DESCRIBE HISTORY: a checkpoint-only version lists a null operation") {
+    val t = freshLogged("pj_sqlhistckpt", 2) // v1, v2
+    val root = new org.apache.hadoop.fs.Path(t)
+    val fs = root.getFileSystem(extSpark.sessionState.newHadoopConf())
+    // force a checkpoint and drop the commit files: v2 survives only as
+    // its checkpoint, so its operation is unknowable
+    PjCommitLog.writeCheckpoint(fs, root, 2L, entryFormat = Some(true))
+    for (v <- 1L to 2L)
+      fs.delete(new org.apache.hadoop.fs.Path(PjCommitLog.logDir(root), f"$v%020d.json"), false)
+    PjCommitLog.clearSnapshotCache()
+    import extSpark.implicits._
+    Seq((9L, 18L)).toDF("id", "v").coalesce(1)
+      .write.format("pjparquet").mode("append").save(t) // v3
+    extSpark.sql(s"RESTORE TABLE '$t' TO VERSION AS OF 2").collect() // v4
+    val rows = extSpark.sql(s"DESCRIBE HISTORY '$t'").collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(4L, 3L, 2L), rows.mkString(";"))
+    val ops = rows.map(r => r.getLong(0) -> Option(r.getString(3))).toMap
+    assert(ops(4L).contains("RESTORE VERSION AS OF 2"), s"$ops")
+    assert(ops(2L).isEmpty, s"$ops")
+  }
+
   test("DESCRIBE DETAIL and GENERATE symlink_format_manifest as SQL") {
     val t = freshLogged("pj_sqldetail", 3)
     val d = extSpark.sql(s"DESCRIBE DETAIL '$t'").collect().head

@@ -13,7 +13,7 @@ import graft.sources.pjparquet.{PjMicroBatchStream, PjStreamInfo}
   * many files share one mtime tick (coarse object-store timestamps): the
   * per-batch file lists live in the checkpoint-local metadata log, not in
   * the offset JSON. Also pins the seen-set semantics (same-tick late
-  * arrivals are not lost) and the legacy-offset upgrade path.
+  * arrivals are not lost) and the refusal of offsets without a batch id.
   */
 class PjStreamOffsetSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -113,32 +113,11 @@ class PjStreamOffsetSpec extends AnyFunSuite {
     assert(o2.json() == o.json(), "restart must find nothing pending after compaction")
   }
 
-  test("legacy watermark offsets upgrade in place: no replay, no loss, across restarts") {
-    val dir = Files.createTempDirectory("pj_off_legacy").toString
-    val ckpt = Files.createTempDirectory("pj_off_legacy_ckpt").toString
-    val t0 = (System.currentTimeMillis() / 1000L) * 1000L - 120000L
-    def mk(name: String, t: Long): String = {
-      val p = Paths.get(dir, name)
-      Files.createFile(p); p.toFile.setLastModified(t)
-      "file:" + p.toAbsolutePath
-    }
-    val oldA = mk("old_a.parquet", t0)
-    val oldB = mk("old_b.parquet", t0)
-    mk("new_c.parquet", t0 + 60000L)
-    mk("new_d.parquet", t0 + 60000L)
-    val s1 = mkStream(dir, ckpt)
-    // checkpoint written by the pre-log scheme: watermark at t0 covering both old files
-    val legacy = s1.deserializeOffset(
-      s"""{"maxMtime":$t0,"paths":[${Seq(oldA, oldB).map(p => "\"" + p + "\"").mkString(",")}]}""")
-    val o1 = s1.latestOffset(legacy, ReadLimit.allAvailable())
-    assert(o1.json().contains("\"batchId\":0"), s"upgraded offset: ${o1.json()}")
-    val batch0 = Files.readAllLines(Paths.get(ckpt, "pjfilelog", "0"))
-    assert(batch0.size == 2 && batch0.toString.contains("new_c") && batch0.toString.contains("new_d"),
-      s"only post-watermark files belong to the first upgraded batch: $batch0")
-    // the seeded legacy-consumed set is persisted, so a LATER restart (start
-    // already in the new format) still refuses to re-ingest the old files
-    val s2 = mkStream(dir, ckpt)
-    val o2 = s2.latestOffset(s2.deserializeOffset(o1.json()), ReadLimit.allAvailable())
-    assert(o2.json() == o1.json(), "restart after upgrade must find nothing pending")
+  test("an offset without batchId fails loudly, naming the offset") {
+    val dir = Files.createTempDirectory("pj_off_nobatch").toString
+    val ckpt = Files.createTempDirectory("pj_off_nobatch_ckpt").toString
+    val json = """{"maxMtime":0,"paths":[]}"""
+    val e = intercept[graft.core.PJException](mkStream(dir, ckpt).deserializeOffset(json))
+    assert(e.getMessage.contains(json) && e.getMessage.contains("batchId"), e.getMessage)
   }
 }

@@ -350,11 +350,12 @@ class PjTimeTravelSpec extends AnyFunSuite {
     val files = (0 until 50000).map(i =>
       f"k=${i % 37}%d/part-$i%05d-weird %%2F name-$i.parquet")
     val t0 = System.nanoTime()
-    val v = PjCommitLog.append(fs, root, "append", files)
+    val v = PjCommitLog.commit(fs, root, "append",
+      files.map(PjCommitLog.FileEntry(_)), Set.empty)
     val snap = PjCommitLog.read(fs, root, v)
     val dt = (System.nanoTime() - t0) / 1e9
     assert(snap.files.sorted == files.sorted)
-    assert(dt < 5.0, f"50k-path snapshot append+read took $dt%.2f s")
+    assert(dt < 5.0, f"50k-path snapshot commit+read took $dt%.2f s")
     // O(live files) on disk: ~60 B/path here, far under any listing cost
     val bytes = fs.getFileStatus(
       new Path(PjCommitLog.logDir(root), f"$v%020d.json")).getLen
