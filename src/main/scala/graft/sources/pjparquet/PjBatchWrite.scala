@@ -16,7 +16,6 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.execution.datasources.parquet.PjSparkShims
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.PJException
 
@@ -393,16 +392,10 @@ final class PjStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val effectiveSchema = augment.map(_.outputSchema).getOrElse(writeSchema)
     val dataSchema = PjColumnMapping.stampParquetIds(StructType(
       effectiveSchema.fields.filterNot(f => partitionKeys.exists(_.equalsIgnoreCase(f.name)))
         .map(f => f.copy(name = PjColumnMapping.toPhysical(nameMap, f.name)))), fieldIds)
-    PjSparkShims.configureWriteConf(hadoopConf, dataSchema, spark.sessionState.conf)
-    // id column-mapping mode: epoch files physically carry the ids too
-    // (after configureWriteConf — see [[PjBatchWrite]])
-    if (fieldIds.nonEmpty)
-      hadoopConf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
     // CHECK constraints: bound here (driver, stream start — unresolvable
     // predicates fail loudly before any epoch) against the POST-augment
     // schema, enforced per row in the epoch writers. Batch writes get
@@ -410,7 +403,8 @@ final class PjStreamingWrite(
     val checks = PjConstraints.boundChecks(
       spark, PjConstraints.parse(constraintsJson), effectiveSchema)
     PjStreamingDataWriterFactory(
-      root, new SerializableConfiguration(hadoopConf), effectiveSchema.json, partitionKeys,
+      root, PjHadoopConf.forWrite(spark, dataSchema, fieldIds.nonEmpty),
+      effectiveSchema.json, partitionKeys,
       queryId, augment, checks, multiDirField = interleavedBucketField)
   }
 
@@ -528,7 +522,7 @@ final class PjStreamingWrite(
 
 final case class PjStreamingDataWriterFactory(
     root: String,
-    conf: SerializableConfiguration,
+    conf: PjShippedConf,
     writeSchemaJson: String,
     partitionKeys: Seq[String],
     queryId: String,
@@ -537,11 +531,14 @@ final case class PjStreamingDataWriterFactory(
     multiDirField: Option[String] = None)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
+  /** This task's Hadoop conf (the factory is deserialized per task). */
+  @transient private lazy val hadoopConf = conf.newConf()
+
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
     val schema = DataType.fromJson(writeSchemaJson).asInstanceOf[StructType]
     // deterministic in (query, epoch, partition): epoch replays OVERWRITE
-    val inner = new PjDataWriter(root, conf.value, schema, partitionKeys,
+    val inner = new PjDataWriter(root, hadoopConf, schema, partitionKeys,
       fileTag = f"$partitionId%05d-e$epochId-$queryId", overwriteExisting = true,
       multiDirField = multiDirField)
     // constraints check POST-augment rows (they may reference generated
@@ -601,7 +598,6 @@ final class PjBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
     // column mapping: files store PHYSICAL names (logical renames never
     // touch bytes) — values are positional, only the write-conf schema
     // names change
@@ -616,15 +612,8 @@ final class PjBatchWrite(
     val dataSchema = PjColumnMapping.stampParquetIds(StructType(
       effectiveSchema.fields.filterNot(f => partitionKeys.exists(_.equalsIgnoreCase(f.name)))
         .map(f => f.copy(name = PjColumnMapping.toPhysical(nameMap, f.name)))), fieldIds)
-    PjSparkShims.configureWriteConf(hadoopConf, dataSchema, spark.sessionState.conf)
-    // id column-mapping mode: files physically carry the assigned ids.
-    // AFTER configureWriteConf — it copies the session value (default
-    // true), and a session-level false must not strip ids from an
-    // id-mode table's files.
-    if (fieldIds.nonEmpty)
-      hadoopConf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
     PjDataWriterFactory(
-      root, new SerializableConfiguration(hadoopConf), effectiveSchema.json,
+      root, PjHadoopConf.forWrite(spark, dataSchema, fieldIds.nonEmpty), effectiveSchema.json,
       partitionKeys, jobUUID, augment, rowIdMetaOrdinal,
       multiDirField = interleavedBucketField)
   }
@@ -1329,7 +1318,7 @@ private[sources] object PjBatchWrite {
 
 final case class PjDataWriterFactory(
     root: String,
-    conf: SerializableConfiguration,
+    conf: PjShippedConf,
     writeSchemaJson: String,
     partitionKeys: Seq[String],
     jobUUID: String,
@@ -1338,11 +1327,14 @@ final case class PjDataWriterFactory(
     multiDirField: Option[String] = None)
     extends DataWriterFactory {
 
+  /** This task's Hadoop conf (the factory is deserialized per task). */
+  @transient private lazy val hadoopConf = conf.newConf()
+
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val schema = DataType.fromJson(writeSchemaJson).asInstanceOf[StructType]
     // attempt-unique names: a batch job's failed/speculative attempts are
     // reconciled away by the manifest at commit
-    val inner = new PjDataWriter(root, conf.value, schema, partitionKeys,
+    val inner = new PjDataWriter(root, hadoopConf, schema, partitionKeys,
       fileTag = f"$partitionId%05d-$taskId-$jobUUID", overwriteExisting = false,
       multiDirField = multiDirField)
     if (rowIdMetaOrdinal >= 0)

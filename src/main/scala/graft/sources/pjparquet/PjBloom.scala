@@ -11,7 +11,6 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.core.{PJIndex, PJSplice}
@@ -279,11 +278,10 @@ object PjBloomJob {
       fpp: Double = 0.01,
       overwrite: Boolean = false): Long = {
     require(fpp > 0 && fpp < 1, s"pjparquet: fpp must be in (0,1), got $fpp")
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf.value)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val files = PjBatchWrite.walkDataFiles(fs, root).map(_.getPath.toString)
-    run(spark, conf, files, columns, fpp, checkFresh = !overwrite)
+    run(spark, files, columns, fpp, checkFresh = !overwrite)
   }
 
   /** Build sidecars for an EXPLICIT file list — the write-commit path: an
@@ -299,13 +297,11 @@ object PjBloomJob {
       columns: Seq[String],
       fpp: Double = 0.01): Long = {
     require(fpp > 0 && fpp < 1, s"pjparquet: fpp must be in (0,1), got $fpp")
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    run(spark, conf, paths, columns, fpp, checkFresh = false)
+    run(spark, paths, columns, fpp, checkFresh = false)
   }
 
   private def run(
       spark: SparkSession,
-      conf: SerializableConfiguration,
       files: Seq[String],
       columns: Seq[String],
       fpp: Double,
@@ -313,22 +309,26 @@ object PjBloomJob {
     require(columns.nonEmpty, "pjparquet: bloom generation needs at least one column")
     if (files.isEmpty) return 0L
     val cols = columns.toList
+    val shipped = PjHadoopConf.ship(spark)
     spark.sparkContext
       .parallelize(files, math.min(files.size, 1024))
-      .map { pathStr =>
-        val path = new Path(pathStr)
-        val pfs = path.getFileSystem(conf.value)
-        val fresh = checkFresh && {
-          PjBloom.readSidecarHeader(pfs, PjBloom.bloomSidecar(path)) match {
-            case Some((storedLen, storedFnv)) =>
-              val st = pfs.getFileStatus(path)
-              st.getLen == storedLen &&
-                PjBloom.fnv64(HadoopFooter.readFooterBytes(pfs, st)) == storedFnv
-            case None => false
+      .mapPartitions { it =>
+        val conf = shipped.newConf()
+        it.map { pathStr =>
+          val path = new Path(pathStr)
+          val pfs = path.getFileSystem(conf)
+          val fresh = checkFresh && {
+            PjBloom.readSidecarHeader(pfs, PjBloom.bloomSidecar(path)) match {
+              case Some((storedLen, storedFnv)) =>
+                val st = pfs.getFileStatus(path)
+                st.getLen == storedLen &&
+                  PjBloom.fnv64(HadoopFooter.readFooterBytes(pfs, st)) == storedFnv
+              case None => false
+            }
           }
+          if (fresh) 0L
+          else if (buildOne(conf, pfs, pathStr, cols, fpp)) 1L else 0L
         }
-        if (fresh) 0L
-        else if (buildOne(conf.value, pfs, pathStr, cols, fpp)) 1L else 0L
       }
       .sum().toLong match {
       case written =>

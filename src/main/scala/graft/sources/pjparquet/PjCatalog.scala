@@ -1398,14 +1398,12 @@ private[pjparquet] final class PjStagedTable(
       val finalStr = finalRoot.toString
       if (rels.size >= PjStagedTable.ParallelMoveMinFiles && session.isDefined) {
         PjStagedTable.distributedMoves.incrementAndGet()
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          session.get.sessionState.newHadoopConf())
+        val shipped = PjHadoopConf.ship(session.get)
         session.get.sparkContext
           .parallelize(rels, math.min(rels.size, 512))
-          .foreach { rel =>
-            PjStagedTable.moveStagedFile(
-              new org.apache.hadoop.fs.Path(stagingStr).getFileSystem(conf.value),
-              stagingStr, finalStr, rel)
+          .foreachPartition { it =>
+            val mfs = new org.apache.hadoop.fs.Path(stagingStr).getFileSystem(shipped.newConf())
+            it.foreach(PjStagedTable.moveStagedFile(mfs, stagingStr, finalStr, _))
           }
       } else rels.foreach(rel =>
         PjStagedTable.moveStagedFile(fs, stagingStr, finalStr, rel))

@@ -203,14 +203,12 @@ object PjChangeFeed {
       val byPath: Map[String, String] = rels.collect {
         case (rel, Some(dvRel)) => keyOf(rootKey, rel) -> absOf(rootQ, dvRel)
       }.toMap
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val bc = spark.sparkContext.broadcast((byPath, hconf))
+      val bc = spark.sparkContext.broadcast(byPath)
+      val shipped = PjHadoopConf.ship(spark)
       val live = udf((file: String, idx: Long) => {
-        val (m, c) = bc.value
-        m.get(canonScanPath(file)) match {
+        bc.value.get(canonScanPath(file)) match {
           case Some(dvAbs) =>
-            !PjDeletionVector.contains(PjDeletionVector.cached(c.value, dvAbs), idx)
+            !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), dvAbs), idx)
           case None => true
         }
       })
@@ -231,16 +229,14 @@ object PjChangeFeed {
     val byPath: Map[String, (String, String)] = trans.map { case (rel, oldDv, newDv) =>
       keyOf(rootKey, rel) -> ((oldDv.map(absOf(rootQ, _)).orNull, absOf(rootQ, newDv)))
     }.toMap
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val bc = spark.sparkContext.broadcast((byPath, hconf))
+    val bc = spark.sparkContext.broadcast(byPath)
+    val shipped = PjHadoopConf.ship(spark)
     val newlyDeleted = udf((file: String, idx: Long) => {
-      val (m, c) = bc.value
-      m.get(canonScanPath(file)) match {
+      bc.value.get(canonScanPath(file)) match {
         case Some((oldDv, newDv)) =>
-          PjDeletionVector.contains(PjDeletionVector.cached(c.value, newDv), idx) &&
+          PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), newDv), idx) &&
             (oldDv == null ||
-              !PjDeletionVector.contains(PjDeletionVector.cached(c.value, oldDv), idx))
+              !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), oldDv), idx))
         case None => false
       }
     })
@@ -375,16 +371,17 @@ object PjChangeFeed {
       else null
     range.map { v =>
       val persisted = fs.exists(cdcDir(rootPath, v))
+      if (!persisted && live == null)
+        throw new graft.core.PJException(
+          s"pjparquet: cannot compute changes at version $v: its " +
+            s"predecessor version ${v - 1} was expired by vacuum " +
+            s"(oldest retained: ${allVersions.min}); no persisted change " +
+            "files exist for this version either")
+      // one delta read per version classifies it AND advances the live set
+      val d = if (live == null) null else PjCommitLog.delta(fs, rootPath, v)
       val cls: VersionClass =
         if (persisted) Persisted(v)
-        else if (live == null)
-          throw new graft.core.PJException(
-            s"pjparquet: cannot compute changes at version $v: its " +
-              s"predecessor version ${v - 1} was expired by vacuum " +
-              s"(oldest retained: ${allVersions.min}); no persisted change " +
-              "files exist for this version either")
         else {
-          val d = PjCommitLog.delta(fs, rootPath, v)
           val readded = d.add.map(_.path).toSet
           // a re-add whose entry changed DELETION VECTOR is a row-level
           // change (the newly-deleted positions) — the diff path computes it
@@ -407,12 +404,9 @@ object PjChangeFeed {
         }
       // advance the live set THROUGH this version for the next one
       live =
-        if (live == null) liveOf(PjCommitLog.read(fs, rootPath, v).entries)
-        else {
-          val d = PjCommitLog.delta(fs, rootPath, v)
-          if (d.fullState) liveOf(d.add)
-          else live -- d.remove ++ d.add.map(e => e.path -> e.dv.map(_.path))
-        }
+        if (d == null) liveOf(PjCommitLog.read(fs, rootPath, v).entries)
+        else if (d.fullState) liveOf(d.add)
+        else live -- d.remove ++ d.add.map(e => e.path -> e.dv.map(_.path))
       cls
     }
   }

@@ -136,7 +136,6 @@ object PjCompaction {
     */
   private def readGenerations(
       spark: SparkSession,
-      hconf: org.apache.hadoop.conf.Configuration,
       fs: org.apache.hadoop.fs.FileSystem,
       rootPath: Path, rootUri: String, files: Seq[DataFile],
       dvByRel: Map[String, String],
@@ -243,7 +242,7 @@ object PjCompaction {
             coalesce(existing,
               baseOf(col("_metadata.file_path")) + col("_metadata.row_index")))
       }
-      val masked = applyDvFilter(spark, hconf, fs, rootPath, rootUri, grp, dvByRel, raw)
+      val masked = applyDvFilter(spark, fs, rootPath, rootUri, grp, dvByRel, raw)
       // id mode, foreign files: rename the file's own column names to the
       // live physical names (paired by field id) BEFORE existence fill
       // and union — groups are keyed by their rename map, so one map
@@ -358,7 +357,6 @@ object PjCompaction {
 
   private def applyDvFilter(
       spark: SparkSession,
-      hconf: org.apache.hadoop.conf.Configuration,
       fs: org.apache.hadoop.fs.FileSystem,
       rootPath: Path,
       rootUri: String,
@@ -375,13 +373,12 @@ object PjCompaction {
     val byPath: Map[String, String] = consumedDvs.map { case (rel, dvRel) =>
       s"$rootKey/$rel" -> s"$rootUri/$dvRel"
     }.toMap
-    val hb = spark.sparkContext.broadcast((byPath,
-      new org.apache.spark.util.SerializableConfiguration(hconf)))
+    val hb = spark.sparkContext.broadcast(byPath)
+    val shipped = PjHadoopConf.ship(spark)
     val live = udf((file: String, idx: Long) => {
-      val (m, c) = hb.value
-      m.get(PjChangeFeed.canonScanPath(file)) match {
+      hb.value.get(PjChangeFeed.canonScanPath(file)) match {
         case Some(dvAbs) =>
-          !PjDeletionVector.contains(PjDeletionVector.cached(c.value, dvAbs), idx)
+          !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), dvAbs), idx)
         case None => true
       }
     })
@@ -559,7 +556,7 @@ object PjCompaction {
       consumed.map(f => f.path -> entryByRel.get(
         PjCommitLog.relativize(fs, rootPath, new Path(f.path))).flatMap(_.cols)).toMap
     val idRenames = foreignIdRenames(hconf, recordedPre, consumed, consumedCols)
-    val rawGen = readGenerations(spark, hconf, fs, rootPath, rootUri, consumed,
+    val rawGen = readGenerations(spark, fs, rootPath, rootUri, consumed,
       dvByRel, mergeSchema = true, rowIdBases,
       existenceFill = existenceFills(recordedPre),
       colsOfPath = consumedCols,
@@ -865,7 +862,7 @@ object PjCompaction {
       candidates.map(f => f.path -> entryByRel.get(
         PjCommitLog.relativize(fs, rootPath, new Path(f.path))).flatMap(_.cols)).toMap
     val idRenames = foreignIdRenames(hconf, zRecorded, candidates, candidateCols)
-    val df = readGenerations(spark, hconf, fs, rootPath, rootUri, candidates,
+    val df = readGenerations(spark, fs, rootPath, rootUri, candidates,
       dvByRel, mergeSchema = materializeIds, rowIdBases, existenceFill = fills,
       colsOfPath = candidateCols,
       renameOfPath = idRenames)

@@ -155,14 +155,14 @@ object PjDeletionVector {
     * the decode once per split). Bounded by retained POSITIONS, not entry
     * count: one heavily-deleted file's vector can be orders of magnitude
     * larger than another's, and a count bound alone could retain
-    * gigabytes on a wide executor.
+    * gigabytes on a wide executor. `conf` is evaluated on a miss only.
     */
   private val MaxCachedPositions = 32L << 20 // ≤ 256 MB of retained longs
   private val cache =
     new java.util.LinkedHashMap[String, Array[Long]](64, 0.75f, true)
   private var cachedPositions = 0L
 
-  def cached(conf: org.apache.hadoop.conf.Configuration, absPath: String): Array[Long] = {
+  def cached(conf: => org.apache.hadoop.conf.Configuration, absPath: String): Array[Long] = {
     cache.synchronized {
       val hit = cache.get(absPath)
       if (hit != null) return hit

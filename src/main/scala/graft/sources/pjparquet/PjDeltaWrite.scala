@@ -11,9 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.parquet.PjSparkShims
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.PJException
 
@@ -196,7 +194,6 @@ final class PjDeltaBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
     // data files carry the hidden materialized row-id column too (the
     // id-preserving delta write, [[PjDeltaWriter]])
     val dataSchema = PjColumnMapping.stampParquetIds(StructType(
@@ -205,15 +202,8 @@ final class PjDeltaBatchWrite(
         org.apache.spark.sql.types.StructField(
           PjCommitLog.RowIdColName, org.apache.spark.sql.types.LongType, nullable = true)),
       fieldIds)
-    PjSparkShims.configureWriteConf(hadoopConf, dataSchema, spark.sessionState.conf)
-    // id column-mapping mode: rewrite files physically carry the ids too.
-    // AFTER configureWriteConf — it copies the session value (default
-    // true), and a session-level false must not strip ids from an
-    // id-mode table's files.
-    if (fieldIds.nonEmpty)
-      hadoopConf.setBoolean("spark.sql.parquet.fieldId.write.enabled", true)
     PjDeltaWriterFactory(
-      root, new SerializableConfiguration(hadoopConf), writeSchema.json,
+      root, PjHadoopConf.forWrite(spark, dataSchema, fieldIds.nonEmpty), writeSchema.json,
       partitionKeys, jobUUID)
   }
 
@@ -372,15 +362,18 @@ final class PjDeltaBatchWrite(
 
 final case class PjDeltaWriterFactory(
     root: String,
-    conf: SerializableConfiguration,
+    conf: PjShippedConf,
     writeSchemaJson: String,
     partitionKeys: Seq[String],
     jobUUID: String)
     extends DeltaWriterFactory {
 
+  /** This task's Hadoop conf (the factory is deserialized per task). */
+  @transient private lazy val hadoopConf = conf.newConf()
+
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
     val schema = DataType.fromJson(writeSchemaJson).asInstanceOf[StructType]
-    new PjDeltaWriter(root, conf.value, schema, partitionKeys,
+    new PjDeltaWriter(root, hadoopConf, schema, partitionKeys,
       fileTag = f"$partitionId%05d-$taskId-$jobUUID")
   }
 }

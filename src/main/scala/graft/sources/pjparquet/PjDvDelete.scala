@@ -3,7 +3,6 @@ package graft.sources.pjparquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.PJException
 
@@ -128,8 +127,7 @@ object PjDvDelete {
     // existing vectors (absolute paths), keyed by absolute file path
     val oldDvByFile: Map[String, String] =
       layout.files.flatMap(f => f.dv.map(d => f.path -> d._1)).toMap
-    val hconfB = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val shipped = PjHadoopConf.ship(spark)
     val oldB = spark.sparkContext.broadcast(oldDvByFile)
     val rootQB = rootQ
 
@@ -142,7 +140,7 @@ object PjDvDelete {
         .repartition(shuffleP, col("f"))
         .sortWithinPartitions("f", "p")
         .mapPartitions { it =>
-          val conf = hconfB.value.value
+          val conf = shipped.newConf()
           val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
           val rows = it.buffered
           while (rows.hasNext) {

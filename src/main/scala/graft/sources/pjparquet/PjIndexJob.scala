@@ -3,7 +3,6 @@ package graft.sources.pjparquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.PjSparkShims
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{PJIndex, PJSplice, PalletJack}
 
@@ -48,9 +47,8 @@ object PjIndexJob {
     * already newer than the data file; `overwrite=true` forces regeneration.
     */
   def generateAll(spark: SparkSession, dir: String, overwrite: Boolean = false): Long = {
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf.value)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // internal-dir-skipping walk: covers Hive-partitioned key=value
     // layouts, never enters a concurrent maintenance op's live scratch
     val files = PjBatchWrite.walkDataFiles(fs, root)
@@ -58,16 +56,20 @@ object PjIndexJob {
         PjCommitLog.relativize(fs, root, s.getPath)))
       .map(s => (s.getPath.toString, s.getModificationTime))
     if (files.isEmpty) return 0L
+    val shipped = PjHadoopConf.ship(spark)
     spark.sparkContext
       .parallelize(files, math.min(files.size, 1024))
-      .map { case (pathStr, dataMtime) =>
-        val path = new Path(pathStr)
-        val pfs = path.getFileSystem(conf.value)
-        // hidden dot-file: invisible to stock Spark directory listings
-        val indexPath = PjParquetTable.hiddenSidecar(path)
-        val fresh = !overwrite && pfs.exists(indexPath) &&
-          pfs.getFileStatus(indexPath).getModificationTime >= dataMtime
-        if (fresh) 0L else { if (buildOne(conf.value, pathStr).sidecarWritten) 1L else 0L }
+      .mapPartitions { it =>
+        val conf = shipped.newConf()
+        it.map { case (pathStr, dataMtime) =>
+          val path = new Path(pathStr)
+          val pfs = path.getFileSystem(conf)
+          // hidden dot-file: invisible to stock Spark directory listings
+          val indexPath = PjParquetTable.hiddenSidecar(path)
+          val fresh = !overwrite && pfs.exists(indexPath) &&
+            pfs.getFileStatus(indexPath).getModificationTime >= dataMtime
+          if (fresh) 0L else { if (buildOne(conf, pathStr).sidecarWritten) 1L else 0L }
+        }
       }
       .sum().toLong
   }
@@ -107,10 +109,13 @@ object PjIndexJob {
         futs.map(_.get())
       } finally pool.shutdown()
     } else {
-      val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+      val shipped = PjHadoopConf.ship(spark)
       spark.sparkContext
         .parallelize(paths, math.min(paths.size, 1024))
-        .map(pathStr => buildOne(conf.value, pathStr))
+        .mapPartitions { it =>
+          val conf = shipped.newConf()
+          it.map(buildOne(conf, _))
+        }
         .collect().toSeq
     }
   }

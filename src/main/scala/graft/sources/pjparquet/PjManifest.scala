@@ -216,20 +216,22 @@ object PjManifest {
       // one Spark job writes every partition's manifest — wall-clock is
       // one round-trip wave, not one per partition
       distributedWrites.incrementAndGet()
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        session.get.sessionState.newHadoopConf())
+      val shipped = PjHadoopConf.ship(session.get)
       val mrStr = manifestRoot.toString
       val items = byDir.toSeq.map { case (rel, uris) =>
         (rel, uris.mkString("", "\n", "\n"))
       }
       session.get.sparkContext
         .parallelize(items, math.min(items.size, 512))
-        .foreach { case (rel, body) =>
-          val mr = new Path(mrStr)
-          val dir = if (rel.isEmpty) mr else new Path(mr, rel)
-          val dfs = dir.getFileSystem(conf.value)
-          dfs.mkdirs(dir)
-          publish(dfs, new Path(dir, "manifest"), body)
+        .foreachPartition { it =>
+          val conf = shipped.newConf()
+          it.foreach { case (rel, body) =>
+            val mr = new Path(mrStr)
+            val dir = if (rel.isEmpty) mr else new Path(mr, rel)
+            val dfs = dir.getFileSystem(conf)
+            dfs.mkdirs(dir)
+            publish(dfs, new Path(dir, "manifest"), body)
+          }
         }
     } else byDir.foreach { case (rel, uris) =>
       val dir = if (rel.isEmpty) manifestRoot else new Path(manifestRoot, rel)

@@ -42,14 +42,36 @@ class PjParquetDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    if (PjChangeFeedTable.isCdf(options)) PjChangeFeedTable.resolve(options).schema()
-    else PjParquetTable.resolve(options).schema
+  /** The table `inferSchema` resolved, with its options and schema. A
+    * `load` calls `inferSchema` and then `getTable` with that schema on the
+    * same provider instance; reusing the table saves a second resolve (as
+    * stock `FileDataSourceV2` does). Any other `getTable` call resolves.
+    */
+  @volatile private var inferred: (util.Map[String, String], StructType, Table) = _
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val table =
+      if (PjChangeFeedTable.isCdf(options)) PjChangeFeedTable.resolve(options)
+      else PjParquetTable.resolve(options)
+    val schema = table.schema()
+    inferred = (options.asCaseSensitiveMap(), schema, table)
+    schema
+  }
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    val reuse = inferred
+    if (reuse != null && partitioning.isEmpty && (reuse._2 eq schema) &&
+        reuse._1.equals(properties)) {
+      // the checks a resolve against this schema makes beyond inference
+      reuse._3 match {
+        case t: PjParquetTable => PjParquetTable.requireCaseDistinct(t)
+        case _ =>
+      }
+      return reuse._3
+    }
     val cdfOpts = new CaseInsensitiveStringMap(properties)
     if (PjChangeFeedTable.isCdf(cdfOpts)) return PjChangeFeedTable.resolve(cdfOpts)
     // catalog loads thread partitioning through the `partitionedBy` OPTION
@@ -217,6 +239,7 @@ class PjParquetTable(
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   private def files: Seq[PjFile] = layout.files
+  private[pjparquet] def hasFiles: Boolean = files.nonEmpty
   // an EMPTY layout is legal when a schema exists to define the table: a
   // user-supplied read schema, or the log's RECORDED schema (CREATE TABLE
   // before its first INSERT, a full-table DELETE) — reads plan zero
@@ -745,9 +768,13 @@ object PjParquetTable {
     */
   def clearLayoutCache(): Unit = layoutCache.clear()
 
+  /** Observability/spec counter: [[resolve]] calls. */
+  private[sources] val resolves = new java.util.concurrent.atomic.AtomicLong
+
   def resolve(
       options: CaseInsensitiveStringMap,
       externalSchema: Option[StructType] = None): PjParquetTable = {
+    resolves.incrementAndGet()
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("pjparquet: 'path' option is required"))
     val autogen = options.getBoolean("index.autogen", true)
@@ -850,18 +877,7 @@ object PjParquetTable {
       val caseSensitive = SparkSession.active.sessionState.conf.caseSensitiveAnalysis
       def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
       val table = new PjParquetTable(layout, options)
-      // columns differing only in case are legal in the file but ambiguous
-      // under case-insensitive resolution — fail explicitly (as stock Spark
-      // does) instead of letting toMap silently shadow one of them
-      if (!caseSensitive) {
-        val ambiguous = table.schema.fields.groupBy(f => key(f.name))
-          .collect { case (_, fs) if fs.length > 1 => fs.map(_.name).mkString("/") }
-        if (ambiguous.nonEmpty)
-          throw new graft.core.PJException(
-            "pjparquet: data columns differ only in case and cannot be resolved " +
-              s"case-insensitively: ${ambiguous.mkString(", ")}; set " +
-              "spark.sql.caseSensitive=true to read this file")
-      }
+      requireCaseDistinct(table)
       val known = table.schema.fields.map(f => key(f.name) -> f).toMap
       val unknown = ext.fieldNames.filterNot(n => known.contains(key(n)))
       if (unknown.nonEmpty)
@@ -888,6 +904,22 @@ object PjParquetTable {
     }
     new PjParquetTable(layout, options, externalSchema)
   }
+
+  /** Columns differing only in case are legal in the file but ambiguous
+    * under case-insensitive resolution — fail explicitly (as stock Spark
+    * does) instead of letting a name map silently shadow one of them.
+    * Checked whenever a table with files is given a schema to validate.
+    */
+  private[pjparquet] def requireCaseDistinct(table: PjParquetTable): Unit =
+    if (table.hasFiles && !SparkSession.active.sessionState.conf.caseSensitiveAnalysis) {
+      val ambiguous = table.schema.fields.groupBy(_.name.toLowerCase(java.util.Locale.ROOT))
+        .collect { case (_, fs) if fs.length > 1 => fs.map(_.name).mkString("/") }
+      if (ambiguous.nonEmpty)
+        throw new graft.core.PJException(
+          "pjparquet: data columns differ only in case and cannot be resolved " +
+            s"case-insensitively: ${ambiguous.mkString(", ")}; set " +
+            "spark.sql.caseSensitive=true to read this file")
+    }
 
   /** Walk the input path. Hive-style `key=value` subdirectories are followed
     * and become partition columns (LONG when every value parses as one, else

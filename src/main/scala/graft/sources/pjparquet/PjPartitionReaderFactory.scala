@@ -6,13 +6,11 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{PjSparkShims, VectorizedParquetRecordReader}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.PalletJack
 
@@ -23,7 +21,7 @@ import graft.core.PalletJack
   * `python/README.md:68-74`).
   */
 final case class PjPartitionReaderFactory(
-    conf: Broadcast[SerializableConfiguration],
+    conf: PjShippedConf,
     requiredSchemaJson: String,
     partSchemaJson: String,
     capacity: Int,
@@ -43,6 +41,9 @@ final case class PjPartitionReaderFactory(
       */
     rowIdPartOrdinal: Int = -1)
     extends PartitionReaderFactory {
+
+  /** This task's Hadoop conf (the factory is deserialized per task). */
+  @transient private lazy val hadoopConf = conf.newConf()
 
   @transient private lazy val requiredSchema =
     DataType.fromJson(requiredSchemaJson).asInstanceOf[StructType]
@@ -65,7 +66,6 @@ final case class PjPartitionReaderFactory(
 
   private def openReader(p: PjInputPartition, returningBatch: Boolean)
       : (VectorizedParquetRecordReader, org.apache.parquet.hadoop.metadata.ParquetMetadata) = {
-    val hadoopConf = conf.value.value
     val materialized = PalletJack.materialize(p.prunedFooter)
     // nested-fallback split: the shipped bytes are the file's RAW footer —
     // keep only this split's row groups so row-group parallelism matches
@@ -123,7 +123,7 @@ final case class PjPartitionReaderFactory(
   /** Deletion vector of the split (decoded, executor-cached), or empty. */
   private def dvOf(p: PjInputPartition): Array[Long] =
     if (p.dvPath.isEmpty) Array.emptyLongArray
-    else PjDeletionVector.cached(conf.value.value, p.dvPath)
+    else PjDeletionVector.cached(hadoopConf, p.dvPath)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PjInputPartition]

@@ -1,5 +1,7 @@
 package graft.sources.pjparquet
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -66,8 +68,7 @@ object PjRefs {
       throw new PJException(
         s"pjparquet: cannot tag version $v (committed versions: " +
           s"${versions.head}..${versions.last})")
-    fs.mkdirs(refsDir(root))
-    writeAtomic(fs, tagFile(root, name), s"""{"v":$v}""")
+    writeRef(fs, root, tagFile(root, name), s"""{"v":$v}""", planned = true)
     v
   }
 
@@ -93,9 +94,9 @@ object PjRefs {
       throw new PJException(
         s"pjparquet: branch '$name' already holds a staged batch — " +
           "fast_forward or drop_ref it first (one audited batch per branch)")
-    fs.mkdirs(refsDir(root))
-    writeAtomic(fs, f,
-      s"""{"base":$base,"entries":${PjCommitLog.renderEntriesJson(entries)}}""")
+    writeRef(fs, root, f,
+      s"""{"base":$base,"entries":${PjCommitLog.renderEntriesJson(entries)}}""",
+      planned = base > 0)
   }
 
   def readBranch(fs: FileSystem, root: Path, name: String): Option[BranchRef] =
@@ -164,13 +165,53 @@ object PjRefs {
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Publish one ref file under a commit log that must still exist. A
+    * catalog RENAME or DROP racing the ref write moves `_pj_log` away; the
+    * `mkdirs` and `create` here would then resurrect a `_pj_log` husk at
+    * the stale path, or fail with a raw "Mkdirs failed". So the log is
+    * checked before the write and again after it, and a vanished log
+    * refuses as [[PjCommitLog.commit]] does, removing whatever this write
+    * recreated. `planned` = the caller read a committed version first (a
+    * branch staged on a log-less table has no log to lose).
+    */
+  private def writeRef(
+      fs: FileSystem, root: Path, path: Path, body: String, planned: Boolean): Unit = {
+    def write(): Unit = {
+      fs.mkdirs(refsDir(root))
+      writeAtomic(fs, path, body)
+    }
+    if (!planned) return write()
+    def logGone = PjCommitLog.versions(fs, root).isEmpty
+    def vanished(cause: Throwable) = new PJException(
+      s"pjparquet: the commit log under '$root' vanished since this ref " +
+        "write was planned (table dropped or renamed by a concurrent " +
+        "writer); aborting instead of recreating it at the stale path", cause)
+    // non-recursive: only what this write can have recreated goes
+    def removeHusk(): Unit =
+      Seq(path, refsDir(root), PjCommitLog.logDir(root)).foreach { p =>
+        try fs.delete(p, false) catch { case NonFatal(_) => () }
+      }
+    if (logGone) throw vanished(null)
+    try write() catch {
+      case NonFatal(e) if logGone => removeHusk(); throw vanished(e)
+    }
+    // the log moved away mid-write, and the ref landed at the stale path
+    if (logGone && fs.exists(path)) { removeHusk(); throw vanished(null) }
+  }
+
   private def writeAtomic(fs: FileSystem, path: Path, body: String): Unit = {
     val tmp = new Path(path.getParent,
       s".${path.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new PJException(s"pjparquet: could not publish ref $path")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      fs.delete(path, false)
+      if (!fs.rename(tmp, path))
+        throw new PJException(s"pjparquet: could not publish ref $path")
+    } catch {
+      case NonFatal(e) =>
+        try fs.delete(tmp, false) catch { case NonFatal(_) => () }
+        throw e
+    }
   }
 }

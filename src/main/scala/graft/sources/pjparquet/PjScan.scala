@@ -2,7 +2,6 @@ package graft.sources.pjparquet
 
 import java.util.OptionalLong
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.read._
@@ -10,7 +9,6 @@ import org.apache.spark.sql.execution.datasources.parquet.PjSparkShims
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.PJSplice
 
@@ -1572,22 +1570,26 @@ class PjScan(
     }.toArray
   }
 
+  /** The factory built for the file set it was built from. The planner's
+    * scan node and AQE's copy of it each ask for a factory; both get this
+    * one. A runtime [[filter]] that changes the file set rebuilds it.
+    */
+  @volatile private var factoryMemo: (Seq[PjFile], PartitionReaderFactory) = _
+
   override def createReaderFactory(): PartitionReaderFactory = {
+    val files = activeFiles
+    val memo = factoryMemo
+    if (memo != null && (memo._1 eq files)) memo._2
+    else {
+      val f = buildReaderFactory(files)
+      factoryMemo = (files, f)
+      f
+    }
+  }
+
+  private def buildReaderFactory(files: Seq[PjFile]): PartitionReaderFactory = {
     val spark = SparkSession.active
     val sqlConf = spark.sessionState.conf
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    PjSparkShims.configureReadConf(hadoopConf, dataPhysical, sqlConf)
-    // id column-mapping mode: the vectorized reader aligns requested
-    // columns by their stamped parquet field ids. ignoreMissingIds is the
-    // id-less-file backstop: without it Spark 4.x HARD-ERRORS on any file
-    // whose schema carries no ids ("Spark read schema expects field Ids,
-    // but Parquet file schema doesn't contain any field Ids") — with it,
-    // adopted/legacy id-less files fall back to name matching, which is
-    // exact for our own files (they store the physical names).
-    if (fieldIds.nonEmpty) {
-      hadoopConf.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
-      hadoopConf.setBoolean("spark.sql.parquet.fieldId.read.ignoreMissing", true)
-    }
     // files can be empty when partition pruning excluded every file — an
     // empty scan needs no parquet predicate (and has no index to splice).
     // Under mergeSchema evolution a filtered column may be missing from
@@ -1618,7 +1620,7 @@ class PjScan(
             r -> t
           })
         } catch { case scala.util.control.NonFatal(_) => None }
-      val sigs = activeFiles.map(sig)
+      val sigs = files.map(sig)
       sigs.forall(_.isDefined) && sigs.distinct.size <= 1
     }
     // nested-fallback files skip the reader FilterPredicate (their physical
@@ -1634,34 +1636,49 @@ class PjScan(
     // computed per selected group). Filters still re-evaluate above the
     // scan, so this is a perf concession on vector-carrying tables only.
     val needExactPositions =
-      posPartOrdinal >= 0 || rowIdPartOrdinal >= 0 || activeFiles.exists(_.dv.isDefined)
-    if (activeFiles.nonEmpty && !activeFiles.exists(_.rawFooter) &&
-        pushedFilters.nonEmpty && !rowLevel && !needExactPositions &&
-        PjSparkShims.parquetFilterPushDownEnabled(sqlConf) && allFilesHaveFilterCols) {
-      // Schema + rebase spec come from the index (schema-only splice), so
-      // building the predicate costs no footer parse. Partition-column
-      // filters have no physical column and simply produce no predicate.
-      val schemaFooter = graft.core.PalletJack.materialize(
-        graft.core.PJSplice.splice(indexOf(activeFiles.head), Nil, Nil, Nil, schemaOnly = true))
-      val physSchema = schemaFooter.getFileMetaData.getSchema
-      // PJ_3-planned nested schemas skip the reader FilterPredicate (the
-      // flat predicate builder does not cover group nodes); filters are
-      // always re-evaluated above the scan, so only pushdown is forgone
-      val allPrimitive = {
-        import scala.jdk.CollectionConverters._
-        physSchema.getFields.asScala.forall(_.isPrimitive)
+      posPartOrdinal >= 0 || rowIdPartOrdinal >= 0 || files.exists(_.dv.isDefined)
+    val predicate =
+      if (files.isEmpty || files.exists(_.rawFooter) ||
+          pushedFilters.isEmpty || rowLevel || needExactPositions ||
+          !PjSparkShims.parquetFilterPushDownEnabled(sqlConf) || !allFilesHaveFilterCols) None
+      else {
+        // Schema + rebase spec come from the index (schema-only splice), so
+        // building the predicate costs no footer parse. Partition-column
+        // filters have no physical column and simply produce no predicate.
+        val schemaFooter = graft.core.PalletJack.materialize(
+          graft.core.PJSplice.splice(indexOf(files.head), Nil, Nil, Nil, schemaOnly = true))
+        val physSchema = schemaFooter.getFileMetaData.getSchema
+        // PJ_3-planned nested schemas skip the reader FilterPredicate (the
+        // flat predicate builder does not cover group nodes); filters are
+        // always re-evaluated above the scan, so only pushdown is forgone
+        val allPrimitive = {
+          import scala.jdk.CollectionConverters._
+          physSchema.getFields.asScala.forall(_.isPrimitive)
+        }
+        if (!allPrimitive) None
+        else {
+          val rebaseSpec = PjSparkShims.datetimeRebaseSpec(
+            schemaFooter, PjSparkShims.rebaseModeInReadConf(sqlConf))
+          PjSparkShims.buildFilterPredicate(physSchema, pushedFilters, sqlConf, rebaseSpec)
+        }
       }
-      if (allPrimitive) {
-        val rebaseSpec = PjSparkShims.datetimeRebaseSpec(
-          schemaFooter, PjSparkShims.rebaseModeInReadConf(sqlConf))
-        PjSparkShims.buildFilterPredicate(physSchema, pushedFilters, sqlConf, rebaseSpec)
-          .foreach(p => PjSparkShims.setFilterPredicate(hadoopConf, p))
+    val conf = PjHadoopConf.shipWith(spark) { c =>
+      PjSparkShims.configureReadConf(c, dataPhysical, sqlConf)
+      // id column-mapping mode: the vectorized reader aligns requested
+      // columns by their stamped parquet field ids. ignoreMissingIds is the
+      // id-less-file backstop: without it Spark 4.x HARD-ERRORS on any file
+      // whose schema carries no ids ("Spark read schema expects field Ids,
+      // but Parquet file schema doesn't contain any field Ids") — with it,
+      // adopted/legacy id-less files fall back to name matching, which is
+      // exact for our own files (they store the physical names).
+      if (fieldIds.nonEmpty) {
+        c.setBoolean("spark.sql.parquet.fieldId.read.enabled", true)
+        c.setBoolean("spark.sql.parquet.fieldId.read.ignoreMissing", true)
       }
+      predicate.foreach(p => PjSparkShims.setFilterPredicate(c, p))
     }
-    val broadcast: Broadcast[SerializableConfiguration] =
-      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     PjPartitionReaderFactory(
-      broadcast,
+      conf,
       dataPhysical.json,
       partRequired.json,
       sqlConf.parquetVectorizedReaderBatchSize,

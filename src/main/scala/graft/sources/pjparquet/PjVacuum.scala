@@ -54,8 +54,7 @@ object PjVacuum {
     * wall-clock drops from O(victims) to O(victims / cluster).
     */
   private def deleteAll(
-      spark: SparkSession, hconf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem, paths: Seq[Path],
+      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, paths: Seq[Path],
       withSidecars: Boolean): Unit = {
     if (paths.isEmpty) return
     if (paths.size < ParallelDeleteMinFiles) {
@@ -65,7 +64,7 @@ object PjVacuum {
       }
     } else {
       distributedDeleteJobs.incrementAndGet()
-      val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
+      val shipped = PjHadoopConf.ship(spark)
       val strs = paths.map(_.toString)
       spark.sparkContext
         .parallelize(strs, math.max(1, math.min(strs.size / 16 + 1, 512)))
@@ -73,7 +72,7 @@ object PjVacuum {
           var pfs: org.apache.hadoop.fs.FileSystem = null
           it.foreach { s =>
             val p = new Path(s)
-            if (pfs == null) pfs = p.getFileSystem(serConf.value)
+            if (pfs == null) pfs = p.getFileSystem(shipped.newConf())
             if (withSidecars) PjBatchWrite.deleteWithSidecars(pfs, p)
             else pfs.delete(p, false)
           }
@@ -92,10 +91,10 @@ object PjVacuum {
   private[pjparquet] def bfsList(
       spark: SparkSession, hconf: org.apache.hadoop.conf.Configuration,
       root: Path): (Seq[FileLite], Seq[String]) = {
-    val serConf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    def listOne(dirStr: String): (Seq[FileLite], Seq[String], Seq[String]) = {
+    def listOne(conf: org.apache.hadoop.conf.Configuration, dirStr: String)
+        : (Seq[FileLite], Seq[String], Seq[String]) = {
       val d = new Path(dirStr)
-      val dfs = d.getFileSystem(serConf.value)
+      val dfs = d.getFileSystem(conf)
       val files = Seq.newBuilder[FileLite]
       val dirs = Seq.newBuilder[String]
       val work = Seq.newBuilder[String]
@@ -116,10 +115,14 @@ object PjVacuum {
       val wave: Seq[(Seq[FileLite], Seq[String], Seq[String])] =
         if (frontier.size >= ParallelListMinDirs) {
           distributedWaves.incrementAndGet()
+          val shipped = PjHadoopConf.ship(spark)
           spark.sparkContext
             .parallelize(frontier, math.min(frontier.size, 512))
-            .map(listOne).collect().toSeq
-        } else frontier.map(listOne)
+            .mapPartitions { it =>
+              val conf = shipped.newConf()
+              it.map(listOne(conf, _))
+            }.collect().toSeq
+        } else frontier.map(listOne(hconf, _))
       frontier = wave.flatMap(_._2)
       wave.foreach { case (f, _, w) => files ++= f; work ++= w }
     }
@@ -163,7 +166,7 @@ object PjVacuum {
             new Path(sc.getParent, sc.getName.stripPrefix(".").stripSuffix(suffix))
               .toString) => sc
     }
-    deleteAll(spark, hconf, fs, orphanVictims.toSeq, withSidecars = false)
+    deleteAll(spark, fs, orphanVictims.toSeq, withSidecars = false)
     orphans += orphanVictims.size
     Report(orphans, workDirs)
   }
@@ -300,7 +303,7 @@ object PjVacuum {
       }
     }
     if (!dryRun)
-      deleteAll(spark, spark.sessionState.newHadoopConf(), fs, victims.toSeq,
+      deleteAll(spark, fs, victims.toSeq,
         withSidecars = true)
     reclaimed += victims.size
     // unreferenced deletion vectors under _pj_dv/
@@ -319,7 +322,7 @@ object PjVacuum {
       }
     }
     if (!dryRun)
-      deleteAll(spark, spark.sessionState.newHadoopConf(), fs, dvVictims.toSeq,
+      deleteAll(spark, fs, dvVictims.toSeq,
         withSidecars = false)
     reclaimed += dvVictims.size
     if (!dryRun) {

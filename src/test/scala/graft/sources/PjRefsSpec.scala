@@ -152,4 +152,43 @@ class PjRefsSpec extends AnyFunSuite {
         assert(spark.read.format("pjparquet").option("tag", name).load(t).count() >= 3)
     }
   }
+
+  test("a ref write racing a table rename refuses and leaves no _pj_log husk") {
+    // the local file system, with a rename of the whole table planted at
+    // the moment a ref write creates `_pj_log/_refs`: the race a catalog
+    // RENAME runs against a tag or a branch staging
+    def racing(root: Path, movedTo: Path) =
+      new org.apache.hadoop.fs.FilterFileSystem(fsOf(root.toString)) {
+        private var planted = false
+        override def mkdirs(f: Path): Boolean = {
+          if (!planted && f.getName == PjRefs.DirName) {
+            planted = true
+            assert(fs.rename(root, movedTo))
+          }
+          super.mkdirs(f)
+        }
+      }
+    def table(tag: String): (Path, Path) = {
+      val t = freshDir(tag)
+      spark.sql(s"CREATE TABLE pjref.`$t` (k BIGINT) USING pjparquet")
+      spark.range(0, 5).select($"id".as("k")).writeTo(s"pjref.`$t`").append()
+      (new Path(t), new Path(s"$t-moved"))
+    }
+    def assertRefused(root: Path, movedTo: Path)(write: => Unit): Unit = {
+      val e = intercept[PJException](write)
+      assert(e.getMessage.contains("vanished"), e.getMessage)
+      assert(!fsOf(root.toString).exists(PjCommitLog.logDir(root)),
+        "the ref write left a resurrected _pj_log at the stale path")
+      assert(PjCommitLog.versions(fsOf(movedTo.toString), movedTo).nonEmpty)
+    }
+    val (tagRoot, tagMoved) = table("pj_refs_race_tag")
+    assertRefused(tagRoot, tagMoved) {
+      PjRefs.tag(racing(tagRoot, tagMoved), tagRoot, "audited", None)
+    }
+    val (branchRoot, branchMoved) = table("pj_refs_race_branch")
+    val base = PjCommitLog.versions(fsOf(branchRoot.toString), branchRoot).last
+    assertRefused(branchRoot, branchMoved) {
+      PjRefs.stageBranch(racing(branchRoot, branchMoved), branchRoot, "wip", base, Nil)
+    }
+  }
 }
