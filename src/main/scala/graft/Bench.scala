@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Verify.q
 import graft.core.{PJIndex, PJSplice, PalletJack}
 
 /** Per-round benchmark main.
@@ -58,13 +59,6 @@ object Bench {
   private def fmt(v: Double, decimals: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Corpus fingerprint for cross-round drift adjudication: the driver
     * REGENERATES the testdata every round, so a "no code change" timing
     * drift on a corpus-bound query (the r17 q65/q88 flag) needs the
@@ -90,52 +84,8 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy-testdata shim (timestamp[ns] events), same as Verify
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Loaded-box survival: local-mode runs driver + executor in ONE JVM,
-      // and Executor self-exits with code 56 after
-      // spark.executor.heartbeat.maxFailures consecutive missed heartbeats
-      // (this killed the round-7 driver bench outright). Longer intervals +
-      // timeouts make a GC/scheduler stall a slow run, not a dead one.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.rpc.askTimeout", "600s")
-      // r7's driver bench STILL died with exit 56 despite the longer
-      // interval. In local mode driver and executor share the JVM, so
-      // self-terminating over missed in-process heartbeats can never be
-      // right — disable the failure bound outright.
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      // Round 13 drift fix: ContextCleaner only reclaims broadcast blocks
-      // and shuffle files when a GC actually runs, and its own periodic GC
-      // defaults to 30 MIN — longer than the whole suite. With a 128 GiB
-      // heap no organic GC fires either, so ~460 runs' broadcasts and
-      // shuffle files accumulated and dragged every later query (+20 %
-      // suite-wide in r12, q105 3.7x / q107 2.6x with zero code change).
-      // The fix is the UNTIMED per-query System.gc() in the query loop —
-      // any GC drains the cleaner's reference queue. (A 60 s
-      // spark.cleaner.periodicGC.interval was tried first and REJECTED:
-      // it fires full STW collections inside timed runs and cost 2-4x on
-      // whichever queries it landed in.) Adjudication note: the in-suite
-      // drift is fixed (q105 0.95→0.26, q107 1.58→0.66 in-suite), but
-      // round-13 absolute numbers also carry HOST noise — the same
-      // CPU-bound queries (q59, q32) measured 3.5x slower than r12 even
-      // on the UNCHANGED r12 commit via `git stash`, on an idle guest.
-      // Cross-round totals are only comparable run-to-run on equal hosts.
-      // Keep the in-memory SQL/app status stores bounded: 151 queries x 3
-      // runs of retained execution graphs is pure ballast in local mode.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // Warm the JVM (codegen, shuffle, noop-sink, MLlib classloading paths)
     // on synthetic data so the first timed query doesn't absorb one-time
@@ -320,13 +270,9 @@ object Bench {
     // iterative lineage) — one untimed warm-up run each, so median ~ min.
     val warmupQueries: Set[String] = Set("q69_dedup_clusters")
 
-    // Local-iteration filter: SPARK_GRAFT_BENCH_ONLY=q80,q32 runs only the
-    // named queries (prefix match on the qNN_ name). Never set by the driver.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(p => name == p || name.startsWith(p + "_")))
-    }
+    // Local-iteration filter (SPARK_GRAFT_ONLY); never set by the driver.
+    val selected =
+      SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => GraftSession.only(name) }
     for ((name, fn) <- selected) {
       if (!degraded && elapsedS > deadlineS) {
         degraded = true
@@ -361,16 +307,9 @@ object Bench {
       medians(name) = if (runs.isEmpty) -1.0 else median(runs.toSeq)
       rawRuns(name) = runs.toSeq
       writeReport("{}", partial = true)
-      // Untimed inter-query hygiene (round 13): drop graft's own layout /
-      // snapshot caches (each logged-table query leaves its temp table's
-      // resolved layout pinned) and run one GC so the ContextCleaner can
-      // actually reclaim this query's broadcasts and shuffle files — see
-      // the periodicGC note on the session builder. Runs BETWEEN queries,
-      // never between the N runs of one query, so within-query warmth is
-      // untouched.
-      graft.sources.pjparquet.PjParquetTable.clearLayoutCache()
-      graft.sources.pjparquet.PjCommitLog.clearSnapshotCache()
-      System.gc()
+      // Runs BETWEEN queries, never between the N runs of one query, so
+      // within-query warmth is untouched.
+      GraftSession.resetBetweenQueries()
     }
 
     // Suite-level calibration: min-of-3 of the code-independent probe,
@@ -414,9 +353,7 @@ object Bench {
           timeOne(name, fn, "ab").foreach(qRuns += _)
           timeCalib().foreach(cRuns += _)
         }
-        graft.sources.pjparquet.PjParquetTable.clearLayoutCache()
-        graft.sources.pjparquet.PjCommitLog.clearSnapshotCache()
-        System.gc()
+        GraftSession.resetBetweenQueries()
         val prev = previousMins(name)
         val finalMin = (qRuns :+ suiteMin).min
         val cMin =
@@ -649,8 +586,7 @@ object Bench {
     */
   private def dvDeleteBench(spark: SparkSession): String = {
     import org.apache.spark.sql.functions._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val base = graft.Tables.orders(spark, sfDir)
+    val base = graft.Tables.orders(spark, GraftSession.sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
     val maxCust = base.agg(max(col("o_custkey").cast("long"))).head().getLong(0)

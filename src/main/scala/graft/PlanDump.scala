@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool (guide §1.1/§7.2): dumps
   * `.explain("formatted")` for every declared query to a directory —
   * `plans/r18/<query>_<tag>.txt` — so plan-shape claims (Exchange count,
@@ -9,10 +7,10 @@ import org.apache.spark.sql.SparkSession
   * artifacts the judge can check without running Spark.
   *
   * Usage: `sbt "runMain graft.PlanDump <outDir> <tag>"` with the same
-  * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` env as the bench; session
-  * confs mirror Bench so the captured initial plans match what the bench
-  * executes. `SPARK_GRAFT_PLANS_ONLY=q104,q116` restricts to named
-  * queries (same prefix-match rule as the bench's BENCH_ONLY).
+  * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` env as the bench; it runs on
+  * the bench's session ([[GraftSession.local]]), so the captured initial
+  * plans match what the bench executes. `SPARK_GRAFT_ONLY=q104,q116`
+  * restricts to named queries (see [[GraftSession.queryFilter]]).
   *
   * Construction of a query's DataFrame may itself run fixture actions
   * (the same work the bench times); the dump records the FINAL returned
@@ -25,27 +23,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r18")
     val tag = if (args.length > 1) args(1) else "before"
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_PLANS_ONLY").map(_.split(",").map(_.trim).toSet)
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
     val dir = new java.io.File(outDir)
     dir.mkdirs()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(p => name == p || name.startsWith(p + "_")))
-    }
+    val selected =
+      SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => GraftSession.only(name) }
     for ((name, fn) <- selected) {
       val body =
         try {
@@ -61,9 +44,7 @@ object PlanDump {
         java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       spark.sqlContext.clearCache()
-      graft.sources.pjparquet.PjParquetTable.clearLayoutCache()
-      graft.sources.pjparquet.PjCommitLog.clearSnapshotCache()
-      System.gc()
+      GraftSession.resetBetweenQueries()
     }
     spark.stop()
     println(s"[plans] wrote ${selected.size} plans to $outDir tag=$tag")

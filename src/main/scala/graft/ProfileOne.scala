@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement tool (guide §1/§7.1 without a UI): runs
   * ONE declared query N times and prints, for the LAST (warm) run, every
@@ -11,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * in a headless sandbox where the UI is off.
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *   sbt "runMain graft.ProfileOne q116_ivfpq_ann [runs]"`
+  *   sbt "runMain graft.ProfileOne q116_ivfpq_ann [runs]"`; it runs on the
+  * bench's session ([[GraftSession.local]], 4 task threads unless
+  * `SPARK_GRAFT_CPUS` says otherwise).
   */
 object ProfileOne {
   private final case class JobRec(
@@ -22,46 +23,38 @@ object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileOne <query> [runs]"))
     val runs = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
+    val sc = spark.sparkContext
 
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
 
+    // Each run submits its jobs under its own job group; only the final
+    // run's group is recorded, whenever its events reach the listener.
+    val finalGroup = s"profile-$runs"
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    @volatile var recording = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
-        val rec = JobRec(e.jobId, e.time,
-          desc = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        rec.stages = e.stageIds.size
-        jobs.put(e.jobId, rec)
-        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).contains(finalGroup)) {
+          val rec = JobRec(e.jobId, e.time,
+            desc = props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+          rec.stages = e.stageIds.size
+          jobs.put(e.jobId, rec)
+          e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
+        }
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = if (recording) {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(jobs.get(e.jobId)).foreach(_.finished = e.time)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (recording) {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(stageToJob.get(e.stageId)).map(jobs.get).filter(_ != null).foreach { r =>
           r.tasks += 1
           if (e.taskMetrics != null) r.taskRunMs += e.taskMetrics.executorRunTime
         }
-      }
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
 
     // Driver-side sampling profiler for the final run: the interesting
     // time in metadata queries is BETWEEN jobs (planning, commit-log I/O,
@@ -94,23 +87,18 @@ object ProfileOne {
 
     var lastWall = 0.0
     for (r <- 1 to runs) {
-      jobs.clear(); stageToJob.clear()
-      recording = r == runs // record only the final (warm) run
-      sampling = r == runs
+      sampling = r == runs // sample only the final (warm) run
+      sc.setJobGroup(s"profile-$r", null) // null keeps the queries' own job descriptions
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       lastWall = (System.nanoTime() - t0) / 1e9
-      recording = false
+      sc.clearJobGroup()
       sampling = false
       println(f"[profile] $name run $r/$runs wall=${lastWall}%.3f s")
       spark.sqlContext.clearCache()
-      graft.sources.pjparquet.PjParquetTable.clearLayoutCache()
-      graft.sources.pjparquet.PjCommitLog.clearSnapshotCache()
-      System.gc()
+      GraftSession.resetBetweenQueries()
     }
-    // drain listener events (the bus is private; a short sleep suffices
-    // for a measurement tool)
-    Thread.sleep(500)
+    org.apache.spark.GraftListenerBus.drain(sc)
     val recs = scala.jdk.CollectionConverters.CollectionHasAsScala(jobs.values())
       .asScala.toSeq.sortBy(_.submitted)
     println(f"[profile] $name FINAL wall=${lastWall}%.3f s, ${recs.size} jobs:")

@@ -1,40 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `sbt "runMain graft.Verify <sfDir> <outDir>"`; `SPARK_GRAFT_ONLY`
+  * restricts the run to named queries (see [[GraftSession.queryFilter]]).
+  */
 object Verify {
+  /** JSON string literal: escapes backslash, quote and every control char
+    * (< 0x20). A tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness.
+    */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Legacy-testdata shim: older driver testdata stored events.ts as
-      // timestamp[ns], which Spark only reads as Long under this flag.
-      // Static for the whole run (Tables.events normalizes both shapes),
-      // so no query builder ever mutates session conf.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same loaded-box survival settings as Bench: local mode runs driver
-      // and executor in one JVM, and a GC/scheduler stall that misses enough
-      // in-process heartbeats would otherwise kill the whole run (the
-      // round-7 driver bench died exactly this way, exit 56).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.rpc.askTimeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated name substrings); the driver
-    // sets no filter and always runs everything
-    val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSeq).getOrElse(Nil)
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.exists(n.contains) }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.queries.filter { case (n, _) => GraftSession.only(n) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,21 +33,9 @@ object Verify {
       }
       // some verification queries persist() intermediates as a compute /
       // pushdown barrier; release them so cached blocks don't accumulate
-      // across the 59-query run
+      // across the run
       finally spark.sqlContext.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -29,35 +29,6 @@ object MetadataQueries {
   private val q166Facts = new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Boolean, Boolean)]()
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Once-per-JVM sibling session carrying the parser extension
-    * ([[org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions]])
-    * so driver queries can exercise the SQL STATEMENT face (COPY INTO,
-    * RESTORE, OPTIMIZE, VACUUM, DESCRIBE HISTORY) — the Verify/Bench base
-    * session is extension-free on purpose (it must prove stock-Spark
-    * behavior for everything else). Shares the SparkContext; the active
-    * and default session registrations are restored after creation.
-    */
-  @volatile private var sqlExt: SparkSession = null
-  private def sqlStatementSession(base: SparkSession): SparkSession = synchronized {
-    if (sqlExt == null) {
-      val oldDefault = SparkSession.getDefaultSession
-      val oldActive = SparkSession.getActiveSession
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      sqlExt = SparkSession.builder()
-        .config("spark.sql.shuffle.partitions",
-          base.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone",
-          base.conf.get("spark.sql.session.timeZone"))
-        .withExtensions(
-          new org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions())
-        .getOrCreate()
-      oldDefault.foreach(SparkSession.setDefaultSession)
-      oldActive.foreach(SparkSession.setActiveSession)
-    }
-    sqlExt
-  }
-
   private def fixtureDir(key: String, dir: String)(build: String => Unit): String =
     fixtures.computeIfAbsent(s"$key:$dir", { _ =>
       val d = java.nio.file.Files.createTempDirectory(key).toString
@@ -660,7 +631,7 @@ object MetadataQueries {
       s.conf.set("spark.sql.catalog.pj_q143", "graft.sources.pjparquet.PjCatalog")
       // the restore verb runs through its SQL STATEMENT face (round 17):
       // RESTORE TABLE t TO VERSION AS OF n — same report as the CALL form
-      val rep = sqlStatementSession(s)
+      val rep = graft.GraftSession.withPjExtensions(s)
         .sql(s"RESTORE TABLE '$tmp' TO VERSION AS OF 2").collect().head
       val v2 = s.read.format("pjparquet").option("versionAsOf", "2").load(tmp)
         .select($"k").as[Long].collect().sorted.toSeq
@@ -1952,7 +1923,7 @@ object MetadataQueries {
         "o_orderstatus STRING) USING pjparquet")
       // the ingest verb runs through its SQL STATEMENT face (round 17):
       // COPY INTO t FROM src — pure sugar over PjCopyInto, same report
-      val ext = sqlStatementSession(s)
+      val ext = graft.GraftSession.withPjExtensions(s)
       def copySql() = ext.sql(
         s"COPY INTO '$tmp' FROM '$srcDir' FILEFORMAT = PARQUET").collect().head
       val r1 = copySql()

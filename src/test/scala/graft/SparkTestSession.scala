@@ -2,15 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all ScalaTest suites (forked JVM). */
+/** One shared local session for all ScalaTest suites (forked JVM); 4 task
+  * threads whatever `SPARK_GRAFT_CPUS` says.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // same legacy-testdata shim as Verify/Bench (timestamp[ns] events)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

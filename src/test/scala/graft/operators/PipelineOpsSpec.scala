@@ -149,8 +149,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     try {
       val plan = PipelineOps.lshAnnPairs(emb, emb, minCosine = 0.5, dim = 8)
       plan.queryExecution.executedPlan // force planning
-      // listener events are delivered async; give the bus a moment to drain
-      Thread.sleep(500)
+      // listener events are delivered async: wait until every one is in
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       assert(listener.jobs.get() == 0,
         s"plan construction must be lazy, fired ${listener.jobs.get()} job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)

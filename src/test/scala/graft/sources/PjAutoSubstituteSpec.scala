@@ -14,22 +14,8 @@ class PjAutoSubstituteSpec extends AnyFunSuite {
   /** A second session (same SparkContext) built with the extensions; the
     * shared default session is restored afterwards.
     */
-  private lazy val extSpark: SparkSession = {
-    val base = SparkTestSession.spark // ensure the context exists
-    val old = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions())
-      .getOrCreate()
-    old.foreach(SparkSession.setDefaultSession)
-    SparkSession.setActiveSession(s)
-    assert(s ne base)
-    s
-  }
+  private lazy val extSpark: SparkSession =
+    graft.GraftSession.withPjExtensions(SparkTestSession.spark)
 
   test("parquet scans with sidecars are substituted; without, left alone") {
     import org.apache.spark.sql.functions._

@@ -11,22 +11,8 @@ import graft.SparkTestSession
   */
 class PjSqlFunctionsSpec extends AnyFunSuite {
 
-  private lazy val extSpark: SparkSession = {
-    val base = SparkTestSession.spark
-    val old = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions())
-      .getOrCreate()
-    old.foreach(SparkSession.setDefaultSession)
-    SparkSession.setActiveSession(s)
-    assert(s ne base)
-    s
-  }
+  private lazy val extSpark: SparkSession =
+    graft.GraftSession.withPjExtensions(SparkTestSession.spark)
 
   test("pj_simhash64 / pj_dot / pj_sorted_intersect_count evaluate from SQL") {
     val row = extSpark.sql(

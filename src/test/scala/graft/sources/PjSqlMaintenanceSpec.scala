@@ -12,22 +12,8 @@ import graft.sources.pjparquet.PjCommitLog
   */
 class PjSqlMaintenanceSpec extends AnyFunSuite {
 
-  private lazy val extSpark: SparkSession = {
-    val base = SparkTestSession.spark
-    val old = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions())
-      .getOrCreate()
-    old.foreach(SparkSession.setDefaultSession)
-    SparkSession.setActiveSession(s)
-    assert(s ne base)
-    s
-  }
+  private lazy val extSpark: SparkSession =
+    graft.GraftSession.withPjExtensions(SparkTestSession.spark)
 
   private def freshLogged(tag: String, nFiles: Int): String = {
     import extSpark.implicits._
