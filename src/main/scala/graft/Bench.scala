@@ -528,6 +528,19 @@ object Bench {
       s""""submissions_footer":$footerSubs,"pools":$poolJson}}"""
   }
 
+  /** Runs `body` with a maker of fresh temp directories (`prefix =>
+    * path`); every directory it made is deleted afterwards, even on
+    * failure.
+    */
+  private def withTempDirs[T](body: (String => String) => T): T = {
+    val made = scala.collection.mutable.ArrayBuffer.empty[String]
+    try body { prefix =>
+      val d = java.nio.file.Files.createTempDirectory(prefix).toString
+      made += d
+      d
+    } finally made.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+  }
+
   /** CDF backlog drain under rate limits (round 18, verdict #6): a
     * restarted change-feed consumer 100 versions behind must recover in
     * BOUNDED batches, not one giant catch-up batch. Builds a 100-version
@@ -538,12 +551,12 @@ object Bench {
     * batch rows / rowsPerCommit EXACTLY — `max_files_per_batch` proves
     * the cap held, `batches` proves the backlog split (>= versions/cap).
     */
-  private def cdfDrainBench(spark: SparkSession): String = {
+  private def cdfDrainBench(spark: SparkSession): String = withTempDirs { tempDir =>
     import org.apache.spark.sql.functions._
     val versions = 100
     val rowsPerCommit = 20
     val maxFiles = 8
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_cdf").toString
+    val dir = tempDir("graft_bench_cdf")
     for (i <- 0 until versions)
       spark.range(i.toLong * rowsPerCommit, (i + 1).toLong * rowsPerCommit)
         .select(col("id"), (col("id") * 2).as("v"))
@@ -584,7 +597,7 @@ object Bench {
     * kilobytes of position bitmaps; the copy-on-write side rewrites every
     * hit file. The byte ratio is the quantity that scales to 100 TB.
     */
-  private def dvDeleteBench(spark: SparkSession): String = {
+  private def dvDeleteBench(spark: SparkSession): String = withTempDirs { tempDir =>
     import org.apache.spark.sql.functions._
     val base = graft.Tables.orders(spark, GraftSession.sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -608,8 +621,7 @@ object Bench {
       walk(new java.io.File(dir))
     }
     def run(dvEnabled: Boolean): (Double, Long, Long) = {
-      val dir = java.nio.file.Files.createTempDirectory(
-        s"graft_bench_dv_$dvEnabled").toString
+      val dir = tempDir(s"graft_bench_dv_$dvEnabled")
       base.repartition(8).write.format("pjparquet")
         .mode("overwrite").option("log.enabled", "true").save(dir)
       val table = s"graft_bench_dv_${if (dvEnabled) "on" else "off"}"
@@ -642,7 +654,7 @@ object Bench {
     * This is the round-10 headline: Delta-`add.stats`-parity planning
     * from ONE log read instead of O(files) sidecar opens.
     */
-  private def logPlanningBench(spark: SparkSession): String = {
+  private def logPlanningBench(spark: SparkSession): String = withTempDirs { tempDir =>
     import org.apache.spark.sql.functions._
     import graft.sources.pjparquet.{PjCommitLog, PjParquetTable}
     // Min-of-N for every RESOLVE metric: these are single-digit-second
@@ -657,7 +669,7 @@ object Bench {
     System.gc(); Thread.sleep(500); System.gc()
     val entries = 50000
     // seed: one real logged file supplies a template entry + data schema
-    val seedDir = java.nio.file.Files.createTempDirectory("graft_bench_log_seed").toString
+    val seedDir = tempDir("graft_bench_log_seed")
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1)
       .write.format("pjparquet").mode("overwrite")
@@ -667,7 +679,7 @@ object Bench {
     val seed = PjCommitLog.latest(fs, seedPath).get
     val template = seed.entries.head
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_log50k").toString
+    val dir = tempDir("graft_bench_log50k")
     val root = new org.apache.hadoop.fs.Path(dir)
     fs.mkdirs(PjCommitLog.logDir(root))
     val synth = (0 until entries).map(i =>
@@ -698,7 +710,7 @@ object Bench {
     // live session) writes the entry table as parquet, so the cold
     // resolution below replays ONE engine-read checkpoint — the scale
     // path for 1M-file tables — instead of a driver-parsed JSON document.
-    val dir5 = java.nio.file.Files.createTempDirectory("graft_bench_log500k").toString
+    val dir5 = tempDir("graft_bench_log500k")
     val root5 = new org.apache.hadoop.fs.Path(dir5)
     fs.mkdirs(PjCommitLog.logDir(root5))
     val per = 50000

@@ -2774,7 +2774,13 @@ object MetadataQueries {
       val nestedParts = partsOf(iso.read.format("pjparquet").load(tmp).select(col("doc_id")))
       val flatParts = partsOf(
         iso.read.format("pjparquet").load(s"$dir/documents.parquet").select(col("doc_id")))
-      val nestedSpliced = nestedParts.nonEmpty && nestedParts.forall(!_.rawFooter)
+      // spliced: every split ships a footer cut down to exactly its own
+      // row groups (a whole-file footer would carry every block)
+      def spliced(parts: Seq[graft.sources.pjparquet.PjInputPartition]): Boolean =
+        parts.nonEmpty && parts.forall { p =>
+          graft.core.PalletJack.materialize(p.prunedFooter).getBlocks.size == p.rowGroups.length
+        }
+      val nestedSpliced = spliced(nestedParts)
       // the doc_id-only projection's spliced footer must have dropped the
       // meta subtree entirely — metadata-level column pruning for nested
       val subtreePruned = nestedParts.nonEmpty && nestedParts.forall { p =>
@@ -2782,7 +2788,7 @@ object MetadataQueries {
           .getFileMetaData.getSchema
         mt.getFieldCount == 1 && mt.getFields.get(0).getName == "doc_id"
       }
-      val flatSpliced = flatParts.nonEmpty && flatParts.forall(!_.rawFooter)
+      val flatSpliced = spliced(flatParts)
       s.read.format("pjparquet").load(tmp)
         .select($"meta.lang".as("lang"), $"meta.n_chars".as("n_chars"), $"doc_id")
         .groupBy($"lang")

@@ -97,7 +97,6 @@ object PjCommitLog {
       rows: Long = -1L,
       rowGroups: Int = -1,
       fingerprint: Option[Long] = None,
-      nested: Boolean = false,
       cols: Option[Seq[String]] = None,
       stats: Map[String, ColStat] = Map.empty,
       dv: Option[DvRef] = None,
@@ -1107,6 +1106,8 @@ object PjCommitLog {
       StructField("r", LongType, nullable = false),
       StructField("g", IntegerType, nullable = false),
       StructField("f", LongType, nullable = true),
+      // retired nested-file flag: always written false and never read, so
+      // the checkpoint layout stays fixed
       StructField("n", BooleanType, nullable = false),
       StructField("c", ArrayType(StringType, containsNull = false), nullable = true),
       StructField("st", ArrayType(StructType(Seq(
@@ -1131,7 +1132,7 @@ object PjCommitLog {
     org.apache.spark.sql.Row(
       e.path, e.size, e.rows, e.rowGroups,
       e.fingerprint.map(java.lang.Long.valueOf).orNull,
-      e.nested, e.cols.orNull,
+      false, e.cols.orNull,
       if (e.stats.isEmpty) null
       else e.stats.toSeq.sortBy(_._1).map { case (name, cs) =>
         org.apache.spark.sql.Row(name, cs.physType, cs.nullCount, cs.min.orNull, cs.max.orNull)
@@ -1326,14 +1327,12 @@ object PjCommitLog {
       out(i) = FileEntry(
         row.getString(0), row.getLong(1), row.getLong(2), row.getInt(3),
         if (row.isNullAt(4)) None else Some(row.getLong(4)),
-        row.getBoolean(5),
         if (row.isNullAt(6)) None else Some(row.getSeq[String](6).toList),
         stats,
         if (row.isNullAt(8)) None
         else Some(DvRef(row.getString(8), if (row.isNullAt(9)) 0L else row.getLong(9))),
-        baseRowId = if (row.length <= 10 || row.isNullAt(10)) -1L else row.getLong(10),
-        clusteredBy =
-          if (row.length <= 11 || row.isNullAt(11)) None else Some(row.getString(11)))
+        baseRowId = if (row.isNullAt(10)) -1L else row.getLong(10),
+        clusteredBy = if (row.isNullAt(11)) None else Some(row.getString(11)))
     }
     scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
@@ -1504,8 +1503,7 @@ object PjCommitLog {
     var rows = 0L
     var rg = 0
     while (rg < rgs) { rows += idx.rowNumber(rg); rg += 1 }
-    FileEntry(relPath, size, rows, rgs, Some(idx.footerFnv64), nested = false,
-      Some(names), aggregateStats(idx))
+    FileEntry(relPath, size, rows, rgs, Some(idx.footerFnv64), Some(names), aggregateStats(idx))
   }
 
   /** Whole-file stats envelope from an index's per-chunk statistics:
@@ -1929,7 +1927,6 @@ object PjCommitLog {
     if (e.rows >= 0) n.put("r", e.rows)
     if (e.rowGroups >= 0) n.put("g", e.rowGroups)
     e.fingerprint.foreach(f => n.put("f", java.lang.Long.toHexString(f)))
-    if (e.nested) n.put("n", true)
     e.cols.foreach { cs =>
       val arr = n.putArray("c")
       cs.foreach(arr.add)
@@ -1971,7 +1968,6 @@ object PjCommitLog {
       n.path("r").asLong(-1L),
       n.path("g").asInt(-1),
       Option(n.get("f")).map(f => java.lang.Long.parseUnsignedLong(f.asText, 16)),
-      n.path("n").asBoolean(false),
       Option(n.get("c")).map(_.elements().asScala.map(_.asText).toSeq),
       stats,
       Option(n.get("dv")).map(d => DvRef(d.asText, n.path("dn").asLong(0L))),

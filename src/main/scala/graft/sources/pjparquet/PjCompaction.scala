@@ -50,12 +50,65 @@ object PjCompaction {
     * every race.
     */
   private def unpublish(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
-      rels: Seq[String]): Unit = rels.foreach { rel =>
-    val p = new Path(rootPath, rel)
-    fs.delete(p, false)
-    val sidecar = PjParquetTable.hiddenSidecar(p)
-    if (fs.exists(sidecar)) fs.delete(sidecar, false)
-    fs.delete(PjBloom.bloomSidecar(p), false)
+      rels: Seq[String]): Unit =
+    rels.foreach(rel => PjBatchWrite.deleteWithSidecars(fs, new Path(rootPath, rel)))
+
+  /** Live data files a maintenance rewrite plans over. A snapshot with
+    * recorded sizes supplies the set directly — ZERO directory I/O on a
+    * million-file table (Delta parity; the walk was O(table) per pass).
+    * Excluded exactly like the walk excluded them: empty-file logical
+    * entries (no physical file) and shallow-clone external entries
+    * (absolute paths outside the root — [[materialize]] owns those).
+    * Unlogged dirs (and snapshots missing a size) keep the
+    * internal-dir-skipping walk (PjBatchWrite.walkDataFiles): a plain
+    * recursive listFiles would descend into a CONCURRENT maintenance
+    * op's live .compact_tmp_* scratch and race its committer's deletes.
+    */
+  private def liveDataFiles(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
+      prevSnap: Option[PjCommitLog.Snapshot]): Seq[DataFile] = {
+    val fromSnapshot: Option[Seq[DataFile]] = prevSnap
+      .filter(_.entries.forall(e =>
+        e.size >= 0 || e.isEmptyFile || e.path.startsWith("/")))
+      .map(_.entries
+        .filterNot(e => e.isEmptyFile || e.path.startsWith("/"))
+        .map { e =>
+          val p = new Path(rootPath, e.path)
+          DataFile(p.toString, p.getParent.toString, e.size)
+        })
+    fromSnapshot.getOrElse {
+      val baseSnapshot: Option[Set[String]] = prevSnap.map(_.files.toSet)
+      PjBatchWrite.walkDataFiles(fs, rootPath).flatMap { s =>
+        val rel = PjCommitLog.relativize(fs, rootPath, s.getPath)
+        if (!PjBatchWrite.isInternalRel(rel) && baseSnapshot.forall(_.contains(rel)))
+          Some(DataFile(s.getPath.toString, s.getPath.getParent.toString, s.getLen))
+        else None
+      }
+    }
+  }
+
+  /** Publish a rewrite's outputs: rename each data file under `tmp` into
+    * its real directory (names carry a fresh task UUID — collision-free).
+    * Returns the published root-relative paths, sorted; `op` names the
+    * rewrite in the failure message.
+    */
+  private def publishFromTemp(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
+      tmp: Path, op: String): Seq[String] = {
+    val tmpPrefix = fs.makeQualified(tmp).toString
+    val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
+    val it = fs.listFiles(tmp, true)
+    while (it.hasNext) {
+      val s = it.next()
+      val n = s.getPath.getName
+      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
+        val rel = s.getPath.getParent.toString.stripPrefix(tmpPrefix).stripPrefix("/")
+        val destDir = if (rel.isEmpty) rootPath else new Path(rootPath, rel)
+        fs.mkdirs(destDir)
+        require(fs.rename(s.getPath, new Path(destDir, n)),
+          s"$op publish failed: could not move ${s.getPath} to $destDir")
+        newRels += (if (rel.isEmpty) n else s"$rel/$n")
+      }
+    }
+    newRels.toSeq.sorted
   }
 
   /** What the pass did, for observability and assertions. */
@@ -451,39 +504,13 @@ object PjCompaction {
     // (same semantics as batch resolution and the write commits).
     val logging = PjCommitLog.isEnabled(fs, rootPath)
     val prevSnap = if (logging) PjCommitLog.latest(fs, rootPath) else None
-    val baseSnapshot: Option[Set[String]] = prevSnap.map(_.files.toSet)
     // deletion-vector rel per live file: compaction is where vectors get
     // MATERIALIZED — a dv-carrying file is always consumed (regardless of
     // size), its deleted rows dropped from the rewrite, and the
     // replacement entries carry no vector
     val dvByRel: Map[String, String] = prevSnap.toSeq.flatMap(_.entries)
       .flatMap(e => e.dv.map(d => e.path -> d.path)).toMap
-    // Candidate planning: a snapshot with recorded sizes supplies the
-    // live file set directly — ZERO directory I/O on a million-file
-    // table (Delta parity; the walk was O(table) per maintenance pass).
-    // Excluded exactly like the walk excluded them: empty-file logical
-    // entries (no physical file) and shallow-clone external entries
-    // (absolute paths outside the root — [[materialize]] owns those).
-    // Unlogged dirs (and legacy snapshots missing a size) keep the
-    // internal-dir-skipping walk (PjBatchWrite.walkDataFiles): a plain
-    // recursive listFiles would descend into a CONCURRENT maintenance
-    // op's live .compact_tmp_* scratch and race its committer's deletes.
-    val fromSnapshot: Option[Seq[DataFile]] = prevSnap
-      .filter(_.entries.forall(e =>
-        e.size >= 0 || e.isEmptyFile || e.path.startsWith("/")))
-      .map(_.entries
-        .filterNot(e => e.isEmptyFile || e.path.startsWith("/"))
-        .map { e =>
-          val p = new Path(rootPath, e.path)
-          DataFile(p.toString, p.getParent.toString, e.size)
-        })
-    val all = fromSnapshot.getOrElse(
-      PjBatchWrite.walkDataFiles(fs, rootPath).flatMap { s =>
-        val rel = PjCommitLog.relativize(fs, rootPath, s.getPath)
-        if (!PjBatchWrite.isInternalRel(rel) && baseSnapshot.forall(_.contains(rel)))
-          Some(DataFile(s.getPath.toString, s.getPath.getParent.toString, s.getLen))
-        else None
-      })
+    val all = liveDataFiles(fs, rootPath, prevSnap)
     // OPTIMIZE ... WHERE: only partitions the predicate admits are
     // candidates; `all` (the full live set) still backs first-commit
     // adoption so out-of-scope files are never dropped from the snapshot
@@ -654,35 +681,19 @@ object PjCompaction {
         (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp.toString)
       }
 
-      // publish: rename each compacted file into its real directory (names
-      // carry a fresh task UUID — collision-free), then drop the inputs
-      var newFiles = 0L
-      val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(tmp, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-          val rel = s.getPath.getParent.toString.stripPrefix(
-            fs.makeQualified(tmp).toString).stripPrefix("/")
-          val destDir = if (rel.isEmpty) rootPath else new Path(rootPath, rel)
-          fs.mkdirs(destDir)
-          require(fs.rename(s.getPath, new Path(destDir, n)),
-            s"compaction publish failed: could not move ${s.getPath} to $destDir")
-          newRels += (if (rel.isEmpty) n else s"$rel/$n")
-          newFiles += 1
-        }
-      }
+      // publish the compacted files, then drop the inputs
+      val newRels = publishFromTemp(fs, rootPath, tmp, "compaction")
+      val newFiles = newRels.size.toLong
       // fresh sidecars for the compacted outputs, commit-scoped (never a
       // whole-table rewalk); the facts feed the logged commit's entries
-      val newPaths = newRels.toSeq.sorted.map(rel => s"$root/$rel")
+      val newPaths = newRels.map(rel => s"$root/$rel")
       val facts = PjIndexJob.generateForPaths(spark, newPaths).map(f => f.path -> f).toMap
       if (logging) {
         // logged table: consumed files retire via the snapshot, bytes stay
         // for time travel until PjVacuum.expireVersions reclaims them
         val consumedRel = consumed.map(f =>
           PjCommitLog.relativize(fs, rootPath, new Path(f.path))).toSet
-        val addEntries = newRels.toSeq.sorted.map(rel => facts(s"$root/$rel").toEntry(rel))
+        val addEntries = newRels.map(rel => facts(s"$root/$rel").toEntry(rel))
         // pure-move proof: every consumed entry was row-tracked and the
         // rewrite materialized the SAME ids — the change feed may then
         // skip this version outright (no diff, no scan)
@@ -702,7 +713,7 @@ object PjCompaction {
               preservedRows = preserved)
             catch {
               case e: PJException =>
-                unpublish(fs, rootPath, newRels.toSeq); throw e
+                unpublish(fs, rootPath, newRels); throw e
             }
           case None =>
             // first logged commit: adopt the untouched survivors
@@ -711,13 +722,7 @@ object PjCompaction {
                 PjCommitLog.relativize(fs, rootPath, new Path(f.path)), f.bytes))
             PjCommitLog.commit(fs, rootPath, "compact", adopted ++ addEntries, Set.empty)
         }
-      } else consumed.foreach { f =>
-        val p = new Path(f.path)
-        fs.delete(p, false)
-        val sidecar = PjParquetTable.hiddenSidecar(p)
-        if (fs.exists(sidecar)) fs.delete(sidecar, false)
-        fs.delete(PjBloom.bloomSidecar(p), false) // stale-by-fingerprint anyway
-      }
+      } else consumed.foreach(f => PjBatchWrite.deleteWithSidecars(fs, new Path(f.path)))
       // compaction rewrote source files: reconcile a persisted ANN index
       // (stale-by-content keys drop, compacted files encode)
       graft.operators.PqIndex.maintainIfPresent(spark, root)
@@ -787,26 +792,7 @@ object PjCompaction {
 
     val logging = PjCommitLog.isEnabled(fs, rootPath)
     val prevSnap = if (logging) PjCommitLog.latest(fs, rootPath) else None
-    val baseSnapshot: Option[Set[String]] = prevSnap.map(_.files.toSet)
-    // snapshot-first candidate planning (see [[compact]]): zero directory
-    // I/O when the snapshot carries sizes; the walk remains the unlogged/
-    // legacy fallback
-    val fromSnapshot: Option[Seq[DataFile]] = prevSnap
-      .filter(_.entries.forall(e =>
-        e.size >= 0 || e.isEmptyFile || e.path.startsWith("/")))
-      .map(_.entries
-        .filterNot(e => e.isEmptyFile || e.path.startsWith("/"))
-        .map { e =>
-          val p = new Path(rootPath, e.path)
-          DataFile(p.toString, p.getParent.toString, e.size)
-        })
-    val all = fromSnapshot.getOrElse(
-      PjBatchWrite.walkDataFiles(fs, rootPath).flatMap { s =>
-        val rel = PjCommitLog.relativize(fs, rootPath, s.getPath)
-        if (!PjBatchWrite.isInternalRel(rel) && baseSnapshot.forall(_.contains(rel)))
-          Some(DataFile(s.getPath.toString, s.getPath.getParent.toString, s.getLen))
-        else None
-      })
+    val all = liveDataFiles(fs, rootPath, prevSnap)
     if (all.isEmpty) return Report(0, 0, 0, 0, 0, 0)
     // OPTIMIZE ... WHERE: rewrite only the admitted partitions; the full
     // live set still backs first-commit adoption and the report's totals
@@ -922,31 +908,16 @@ object PjCompaction {
       withFieldIdWrite(spark, rewriteIds.nonEmpty) {
         (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp.toString)
       }
-      var newFiles = 0L
-      val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(tmp, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-          val rel = s.getPath.getParent.toString.stripPrefix(
-            fs.makeQualified(tmp).toString).stripPrefix("/")
-          val destDir = if (rel.isEmpty) rootPath else new Path(rootPath, rel)
-          fs.mkdirs(destDir)
-          require(fs.rename(s.getPath, new Path(destDir, n)),
-            s"optimize publish failed: could not move ${s.getPath} to $destDir")
-          newRels += (if (rel.isEmpty) n else s"$rel/$n")
-          newFiles += 1
-        }
-      }
-      val newPaths = newRels.toSeq.sorted.map(rel => s"$root/$rel")
+      val newRels = publishFromTemp(fs, rootPath, tmp, "optimize")
+      val newFiles = newRels.size.toLong
+      val newPaths = newRels.map(rel => s"$root/$rel")
       val facts = PjIndexJob.generateForPaths(spark, newPaths).map(f => f.path -> f).toMap
       if (logging) {
         val consumedRel = candidates.map(f =>
           PjCommitLog.relativize(fs, rootPath, new Path(f.path))).toSet
         // outputs carry the provenance tag — the next same-spec OPTIMIZE
         // skips them outright
-        val addEntries = newRels.toSeq.sorted.map(rel =>
+        val addEntries = newRels.map(rel =>
           facts(s"$root/$rel").toEntry(rel).copy(clusteredBy = Some(clusterSpec)))
         val preserved = materializeIds && candidates.nonEmpty &&
           candidates.forall(f => entryByRel.get(
@@ -960,7 +931,7 @@ object PjCompaction {
             preservedRows = preserved)
           catch {
             case e: PJException =>
-              unpublish(fs, rootPath, newRels.toSeq); throw e
+              unpublish(fs, rootPath, newRels); throw e
           }
         }
         else {
@@ -972,13 +943,7 @@ object PjCompaction {
           PjCommitLog.commit(fs, rootPath, "optimize-zorder",
             adopted ++ addEntries, Set.empty)
         }
-      } else candidates.foreach { f =>
-        val p = new Path(f.path)
-        fs.delete(p, false)
-        val sidecar = PjParquetTable.hiddenSidecar(p)
-        if (fs.exists(sidecar)) fs.delete(sidecar, false)
-        fs.delete(PjBloom.bloomSidecar(p), false)
-      }
+      } else candidates.foreach(f => PjBatchWrite.deleteWithSidecars(fs, new Path(f.path)))
       // a natural-column sort claim cannot survive a Morton reorder
       PjSortMarker.delete(fs, rootPath)
       graft.operators.PqIndex.maintainIfPresent(spark, root)

@@ -19,7 +19,6 @@ final case class PjFileFacts(
     rows: Long,
     rowGroups: Int,
     fingerprint: Long,
-    nested: Boolean,
     zeroRowGroups: Boolean,
     cols: Seq[String],
     dataSchemaJson: String,
@@ -28,11 +27,9 @@ final case class PjFileFacts(
 
   def toEntry(relPath: String): PjCommitLog.FileEntry =
     if (zeroRowGroups)
-      PjCommitLog.FileEntry(relPath, size, 0L, 0, Some(fingerprint), nested = false,
-        Some(cols), Map.empty)
+      PjCommitLog.FileEntry(relPath, size, 0L, 0, Some(fingerprint), Some(cols))
     else
-      PjCommitLog.FileEntry(relPath, size, rows, rowGroups, Some(fingerprint),
-        nested = nested, cols = Some(cols), stats = stats)
+      PjCommitLog.FileEntry(relPath, size, rows, rowGroups, Some(fingerprint), Some(cols), stats)
 }
 
 /** Fleet-scale index lifecycle (SURVEY.md §7 step 4): build `.index`
@@ -42,6 +39,11 @@ final case class PjFileFacts(
   * `palletjack_cython.pyx:18-23`, maps to executor tasks here).
   */
 object PjIndexJob {
+
+  /** Largest commit whose sidecars [[generateForPaths]] builds on the
+    * driver; larger ones run as an executor job.
+    */
+  val LocalMaxPaths = 32
 
   /** Returns the number of sidecars written. Skips files whose sidecar is
     * already newer than the data file; `overwrite=true` forces regeneration.
@@ -92,11 +94,8 @@ object PjIndexJob {
     // (sampled at ~240 ms/query on the DML-heavy bench queries). Small
     // commits run on the driver over a bounded thread pool; bulk backfills
     // (CONVERT, compaction fan-ins past the threshold) keep the
-    // executor-parallel job. Threshold parameterized for cluster tuning.
-    val localMax =
-      try spark.conf.get("spark.graft.indexJob.localThreshold", "32").toInt
-      catch { case _: NumberFormatException => 32 }
-    if (paths.size <= localMax) {
+    // executor-parallel job.
+    if (paths.size <= LocalMaxPaths) {
       val conf = spark.sessionState.newHadoopConf()
       if (paths.size == 1) return Seq(buildOne(conf, paths.head))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -135,7 +134,7 @@ object PjIndexJob {
       val schemaJson =
         PjSparkShims.toSparkSchema(PalletJack.readSchemaFromIndexData(bytes)).json
       PjFileFacts(pathStr, status.getLen, entry.rows, entry.rowGroups, fp,
-        nested = false, zeroRowGroups = false, entry.cols.getOrElse(Nil), schemaJson,
+        zeroRowGroups = false, entry.cols.getOrElse(Nil), schemaJson,
         entry.stats, sidecarWritten = true)
     } catch {
       // zero-row-group files are legal parquet (Spark writes one for
@@ -145,8 +144,7 @@ object PjIndexJob {
           if e.getMessage == "Number of row groups is not set!" =>
         val pm = PalletJack.materialize(footerBytes)
         val mt = pm.getFileMetaData.getSchema
-        PjFileFacts(pathStr, status.getLen, 0L, 0, fp, nested = false,
-          zeroRowGroups = true,
+        PjFileFacts(pathStr, status.getLen, 0L, 0, fp, zeroRowGroups = true,
           (0 until mt.getFieldCount).map(i => mt.getFields.get(i).getName),
           PjSparkShims.toSparkSchema(mt).json, Map.empty, sidecarWritten = false)
       // nested schema: the PJ_2 compat format can't index it (reference
@@ -162,7 +160,7 @@ object PjIndexJob {
         val schemaJson =
           PjSparkShims.toSparkSchema(PalletJack.readSchemaFromIndexData(bytes)).json
         PjFileFacts(pathStr, status.getLen, entry.rows, entry.rowGroups, fp,
-          nested = false, zeroRowGroups = false, entry.cols.getOrElse(Nil), schemaJson,
+          zeroRowGroups = false, entry.cols.getOrElse(Nil), schemaJson,
           entry.stats, sidecarWritten = true)
     }
   }

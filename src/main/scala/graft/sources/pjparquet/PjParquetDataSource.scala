@@ -2,8 +2,6 @@ package graft.sources.pjparquet
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -95,9 +93,8 @@ class PjParquetDataSource extends TableProvider with DataSourceRegister {
   }
 }
 
-/** Memoized handle to a file's index bytes (or raw footer bytes for
-  * nested-fallback files). Logged tables construct these LAZILY — the
-  * loader runs only if planning actually needs the file's index (it
+/** Memoized handle to a file's index bytes. Logged tables construct these
+  * LAZILY — the loader runs only if planning actually needs the file's index (it
   * survived partition + log-stats pruning), which is how a logged 50k-file
   * table resolves with one log read and zero sidecar opens. The unlogged
   * path constructs them eagerly, byte-for-byte the old behavior. The
@@ -127,12 +124,9 @@ object PjIndexRef {
   * `partitionValues` align with the layout's partition schema; the Hive null
   * sentinel is preserved raw and interpreted at read time.
   *
-  * `rawFooter=true` marks a NESTED-schema file: the PJ_2 format indexes flat
-  * schemas only (reference restriction, `palletjack.cc:266-279,483-487`), so
-  * `indexBytes` holds the file's RAW footer bytes instead of an index and
-  * the scan plans it from a driver-side footer parse — the stock-Spark cost
-  * for exactly the files the index format cannot cover, with flat files in
-  * the same session keeping full index planning.
+  * A NESTED-schema file carries a PJ_3 subtree-offset index (the PJ_2
+  * format indexes flat schemas only, `palletjack.cc:266-279,483-487`) and
+  * plans through the same splice as a flat file.
   *
   * `entry` is the commit-log record for this file when the table is
   * logged: row count, footer fingerprint, column names, and the
@@ -143,7 +137,6 @@ final case class PjFile(
     fileLen: Long,
     index: PjIndexRef,
     partitionValues: Seq[String] = Nil,
-    rawFooter: Boolean = false,
     entry: Option[PjCommitLog.FileEntry] = None,
     /** Deletion vector: (absolute sidecar path, cardinality) — logged
       * tables only ([[PjDeletionVector]]); reads filter these positions.
@@ -657,23 +650,17 @@ object PjParquetTable {
   /** Name of the file-provenance metadata column. */
   val FileMetaName = "_file"
 
-  /** Physical parquet schema of a layout file: from the index's schema-only
-    * splice (no footer parse) for flat files; from the raw footer for
-    * nested-fallback files (that parse already happened once to detect
-    * nestedness — this materialization is driver-side and cached by the
-    * layout cache holding the bytes).
+  /** Physical parquet schema of a layout file, from the index's schema-only
+    * splice (no footer parse).
     */
   private[pjparquet] def messageTypeOf(f: PjFile): org.apache.parquet.schema.MessageType =
-    if (f.rawFooter) PalletJack.materialize(f.indexBytes).getFileMetaData.getSchema
-    else PalletJack.readSchemaFromIndexData(f.indexBytes)
+    PalletJack.readSchemaFromIndexData(f.indexBytes)
 
   /** Top-level column names (= leaf names for flat files, where every leaf
     * is top-level) — the uniform-schema guard's comparison key.
     */
   private[pjparquet] def topLevelNames(f: PjFile): Seq[String] =
-    if (f.rawFooter)
-      messageTypeOf(f).getFields.asScala.map(_.getName).toSeq
-    else graft.core.PJSplice.Index.fromBytes(f.indexBytes).columnNames.toSeq
+    graft.core.PJSplice.Index.fromBytes(f.indexBytes).columnNames.toSeq
 
   object FileMetadataColumn extends org.apache.spark.sql.connector.catalog.MetadataColumn {
     override def name(): String = FileMetaName
@@ -1117,7 +1104,7 @@ object PjParquetTable {
   /** Eager per-file load shared by the unlogged directory walk and path-only
     * log entries: validate + use the sidecar, else autogen
     * from the footer, with the walk's zero-row-group (None) and
-    * nested-schema (rawFooter) handling.
+    * nested-schema (PJ_3 index) handling.
     */
   private def loadWithSidecar(
       fs: FileSystem,
@@ -1243,7 +1230,7 @@ object PjParquetTable {
           val abs = new Path(qualifiedRoot, e.path)
           m += e.path -> PjFile(abs.toString, e.size,
             PjIndexRef.lazily(logIndexLoader(conf, abs.toString, e, autogen, snap.version)),
-            alignedValues(partPairsOf(e.path)), rawFooter = e.nested, entry = Some(e),
+            alignedValues(partPairsOf(e.path)), entry = Some(e),
             dv = e.dv.map(dd => (new Path(qualifiedRoot, dd.path).toString, dd.deleted)))
         }
       }
@@ -1378,7 +1365,7 @@ object PjParquetTable {
         if (e.isEmptyFile) None // zero-row-group: contributes nothing
         else Some(PjFile(abs.toString, e.size,
           PjIndexRef.lazily(logIndexLoader(conf, abs.toString, e, autogen, snap.version)),
-          alignedValues(parts), rawFooter = e.nested, entry = Some(e),
+          alignedValues(parts), entry = Some(e),
           dv = e.dv.map(d => (new Path(qualifiedRoot, d.path).toString, d.deleted))))
       } else {
         // path-only (adopted) entry: eager load, exactly the unlogged path —
@@ -1504,26 +1491,23 @@ object PjParquetTable {
             s"version $version (in-place rewrite?); snapshot isolation cannot be served")
       fb
     }
-    if (e.nested) footerBytes()
-    else {
-      val fromSidecar = sidecarCandidates(path).iterator.flatMap { c =>
-        try {
-          val bytes = readAll(pfs, c)
-          val idx = graft.core.PJSplice.Index.fromBytes(bytes)
-          if (idx.footerFnv64 == expected) Some(bytes) else None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }.nextOption()
-      fromSidecar.getOrElse {
-        if (!autogen)
-          throw new PjMissingSidecarException(
-            s"Missing or mismatched index sidecar for '$absPath' and index.autogen=false")
-        log.warn(
-          "pjparquet: no fingerprint-matching sidecar for '{}'; regenerating from the footer",
-          absPath)
-        val fb = footerBytes()
-        if (PJIndex.footerHasNestedSchema(fb)) PJIndex.generateNestedFromFooter(fb, absPath)
-        else PJIndex.generateFromFooter(fb, absPath)
-      }
+    val fromSidecar = sidecarCandidates(path).iterator.flatMap { c =>
+      try {
+        val bytes = readAll(pfs, c)
+        val idx = graft.core.PJSplice.Index.fromBytes(bytes)
+        if (idx.footerFnv64 == expected) Some(bytes) else None
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }.nextOption()
+    fromSidecar.getOrElse {
+      if (!autogen)
+        throw new PjMissingSidecarException(
+          s"Missing or mismatched index sidecar for '$absPath' and index.autogen=false")
+      log.warn(
+        "pjparquet: no fingerprint-matching sidecar for '{}'; regenerating from the footer",
+        absPath)
+      val fb = footerBytes()
+      if (PJIndex.footerHasNestedSchema(fb)) PJIndex.generateNestedFromFooter(fb, absPath)
+      else PJIndex.generateFromFooter(fb, absPath)
     }
   }
 

@@ -66,18 +66,7 @@ final case class PjPartitionReaderFactory(
 
   private def openReader(p: PjInputPartition, returningBatch: Boolean)
       : (VectorizedParquetRecordReader, org.apache.parquet.hadoop.metadata.ParquetMetadata) = {
-    val materialized = PalletJack.materialize(p.prunedFooter)
-    // nested-fallback split: the shipped bytes are the file's RAW footer —
-    // keep only this split's row groups so row-group parallelism matches
-    // the spliced (flat) path
-    val footer =
-      if (!p.rawFooter) materialized
-      else {
-        val blocks = new java.util.ArrayList[org.apache.parquet.hadoop.metadata.BlockMetaData]()
-        p.rowGroups.foreach(rg => blocks.add(materialized.getBlocks.get(rg)))
-        new org.apache.parquet.hadoop.metadata.ParquetMetadata(
-          materialized.getFileMetaData, blocks)
-      }
+    val footer = PalletJack.materialize(p.prunedFooter)
     val datetimeSpec = PjSparkShims.datetimeRebaseSpec(footer, datetimeRebaseModeConf)
     val int96Spec = PjSparkShims.int96RebaseSpec(footer, int96RebaseModeConf)
     val reader = new VectorizedParquetRecordReader(

@@ -42,7 +42,7 @@ object PjRestore {
   private def sameEntry(a: PjCommitLog.FileEntry, b: PjCommitLog.FileEntry): Boolean =
     a.path == b.path && a.size == b.size && a.rows == b.rows &&
       a.rowGroups == b.rowGroups && a.fingerprint == b.fingerprint &&
-      a.nested == b.nested && a.cols == b.cols && a.dv == b.dv &&
+      a.cols == b.cols && a.dv == b.dv &&
       a.clusteredBy == b.clusteredBy
 
   def restore(spark: SparkSession, root: String, version: Long): RestoreReport = {

@@ -689,11 +689,7 @@ class PjScanBuilder(
     // claimed (fully-pushed partition-exact) filters FIRST: files that do
     // not definitely match are dropped, never re-filtered row-side
     val survivingFiles = genPrunedFiles.filter { f =>
-      if (f.rawFooter)
-        // nested-fallback file: no index, so no chunk-stat/bloom pruning —
-        // partition values still prune whole files
-        pushed.forall(p => layout.partitionSchema.isEmpty || mightMatch(f, p))
-      else if (physPushed.exists { case (p, pp) =>
+      if (physPushed.exists { case (p, pp) =>
           !(layout.partitionSchema.isEmpty || mightMatch(f, p)) ||
             f.entry.exists(e => !PjStatsFilter.mightMatchEntry(
               e, fileSchema, partNameSet, caseSensitiveNow, pp)) })
@@ -1190,19 +1186,8 @@ class PjScan(
   private def indexOf(f: PjFile): PJSplice.Index =
     idxCache.computeIfAbsent(f.path, _ => PJSplice.Index.fromBytes(f.indexBytes))
 
-  /** Nested-fallback files carry raw footer bytes: parse once per scan,
-    * driver-side (the stock planning cost for exactly the files PJ_2 cannot
-    * index; flat files never pay it).
-    */
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.parquet.hadoop.metadata.ParquetMetadata]()
-  private def rawFooterOf(f: PjFile): org.apache.parquet.hadoop.metadata.ParquetMetadata =
-    footerCache.computeIfAbsent(f.path, _ => graft.core.PalletJack.materialize(f.indexBytes))
-
-  private def rgCountOf(f: PjFile): Int =
-    if (f.rawFooter) rawFooterOf(f).getBlocks.size else indexOf(f).header.rowGroups
-  private def rowCountOf(f: PjFile, rg: Int): Long =
-    if (f.rawFooter) rawFooterOf(f).getBlocks.get(rg).getRowCount else indexOf(f).rowNumber(rg)
+  private def rgCountOf(f: PjFile): Int = indexOf(f).header.rowGroups
+  private def rowCountOf(f: PjFile, rg: Int): Long = indexOf(f).rowNumber(rg)
 
   /** Per-file row-group selection with the pushed LIMIT applied: walk files
     * in layout order keeping row groups until the cumulative index row
@@ -1323,17 +1308,8 @@ class PjScan(
   private val fileIdNamesCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[Long, String]]()
   private def fileFieldIdNames(f: PjFile): Map[Long, String] =
-    fileIdNamesCache.computeIfAbsent(f.path, { _ =>
-      import scala.jdk.CollectionConverters._
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.path), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .flatMap(t => Option(t.getId).map(id => id.intValue().toLong -> t.getName))
-        .toMap
-      finally r.close()
-    })
+    fileIdNamesCache.computeIfAbsent(f.path, path =>
+      PjColumnMapping.fileFieldIdNames(SparkSession.active.sessionState.newHadoopConf(), path))
 
   // Column splice only when a strict subset of top-level fields is needed;
   // name-based selection follows reference O5 semantics (exact match).
@@ -1389,32 +1365,6 @@ class PjScan(
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
   private def rgByteSums(f: PjFile): Array[Long] =
     rgBytesCache.computeIfAbsent(f.path, { _ =>
-      if (f.rawFooter) rgByteSumsNested(f)
-      else rgByteSumsFlat(f)
-    })
-
-  /** Exact per-row-group bytes for a nested-fallback file, from its parsed
-    * footer: compressed size of the required TOP-LEVEL columns (a pruned
-    * struct still reads all its leaves' chunks).
-    */
-  private def rgByteSumsNested(f: PjFile): Array[Long] = {
-    import scala.jdk.CollectionConverters._
-    val pm = rawFooterOf(f)
-    val blocks = pm.getBlocks.asScala
-    if (dataPhysical.isEmpty)
-      blocks.map(b => math.max(1L, b.getRowCount * 8L)).toArray
-    else {
-      val req = prunedColumnNames.toSet
-      blocks.map { b =>
-        val cols = b.getColumns.asScala
-        val kept = if (req.isEmpty) cols
-          else cols.filter(c => req.contains(c.getPath.toArray.apply(0)))
-        math.max(1L, kept.map(_.getTotalSize).sum)
-      }.toArray
-    }
-  }
-
-  private def rgByteSumsFlat(f: PjFile): Array[Long] = {
       val idx = indexOf(f)
       val rgCount = idx.header.rowGroups
       if (dataPhysical.isEmpty)
@@ -1437,7 +1387,7 @@ class PjScan(
           if (exact) math.max(1L, sum) else -1L
         }
       }
-  }
+    })
 
   override def planInputPartitions(): Array[InputPartition] = {
     val sqlConf = SQLConf.get
@@ -1468,10 +1418,6 @@ class PjScan(
       }
       if (selected.isEmpty) Iterator.empty
       else {
-        if (f.rawFooter && selected.exists(rg => rg < 0 || rg >= rgCount))
-          throw new graft.core.PJException(
-            s"pjparquet: row group selection ${selected.mkString(",")} out of range " +
-              s"for '${f.path}' ($rgCount row groups)")
         // Bin-pack toward maxPartitionBytes using the EXACT compressed
         // bytes each row group contributes for the REQUIRED columns. A
         // whole-file mean misprices splits twice over: skewed row-group
@@ -1502,7 +1448,7 @@ class PjScan(
           if (rowIdPartOrdinal < 0) -1L else f.entry.map(_.baseRowId).getOrElse(-1L)
         val ridFromCol: Boolean = rowIdPartOrdinal >= 0 &&
           (f.entry.exists(_.materializedRowIds) ||
-            (f.entry.isEmpty && !f.rawFooter &&
+            (f.entry.isEmpty &&
               PJSplice.Index.fromBytes(f.indexBytes).columnNames
                 .exists(_.equalsIgnoreCase(PjCommitLog.RowIdColName))))
         val rgStarts: Array[Long] =
@@ -1515,56 +1461,40 @@ class PjScan(
             starts
           }
         val dvPath = f.dv.map(_._1).getOrElse("")
-        if (f.rawFooter) {
-          // nested fallback: ship the RAW footer bytes; the reader filters
-          // its blocks to this split's row groups after materializing, so
-          // row-group parallelism and bin-packing are preserved — only the
-          // footer-size pruning of the splice is lost, for these files only
-          groups.iterator.map { rgs =>
-            PjInputPartition(f.path, f.fileLen, rgs.toArray, f.indexBytes, partValues,
-              keyValues = f.partitionValues.toArray,
-              keySchemaJson = if (partitionSchema.isEmpty) "" else partitionSchema.json,
-              rawFooter = true,
-              dvPath = dvPath,
-              rgStartRows = if (needPos) rgs.iterator.map(rgStarts(_)).toArray else Array.empty,
-              baseRowId = baseRid, rowIdFromColumn = ridFromCol)
-          }
-        } else {
-          val idx = indexOf(f)
-          // mergeSchema evolution: a file may lack some requested columns —
-          // splice only what it has (the vectorized reader null-fills the
-          // rest from the requested schema). An empty intersection keeps the
-          // whole footer (Nil = no pruning); the reader then reads no column
-          // data at all, so the only cost is footer bytes.
-          val fileColNames =
-            if (colNames.isEmpty) Nil
+        val idx = indexOf(f)
+        // mergeSchema evolution: a file may lack some requested columns —
+        // splice only what it has (the vectorized reader null-fills the
+        // rest from the requested schema). An empty intersection keeps the
+        // whole footer (Nil = no pruning); the reader then reads no column
+        // data at all, so the only cost is footer bytes.
+        val fileColNames =
+          if (colNames.isEmpty) Nil
+          else {
+            val avail = idx.columnNames.toSet
+            val present = colNames.filter(avail.contains)
+            if (present.size == colNames.size || fieldIds.isEmpty) present
             else {
-              val avail = idx.columnNames.toSet
-              val present = colNames.filter(avail.contains)
-              if (present.size == colNames.size || fieldIds.isEmpty) present
-              else {
-                // id mode, foreign file: its column NAMES differ (an
-                // id-keyed engine renamed on its side) — translate each
-                // missing requested name through the assigned field id to
-                // the FILE's own name so the splice prunes correctly; the
-                // reader then aligns the kept columns by id
-                val idToName = fileFieldIdNames(f)
-                colNames.flatMap { n =>
-                  if (avail.contains(n)) Some(n)
-                  else fieldIds.get(n.toLowerCase(java.util.Locale.ROOT))
-                    .flatMap(idToName.get).filter(avail.contains)
-                }
+              // id mode, foreign file: its column NAMES differ (an
+              // id-keyed engine renamed on its side) — translate each
+              // missing requested name through the assigned field id to
+              // the FILE's own name so the splice prunes correctly; the
+              // reader then aligns the kept columns by id
+              val idToName = fileFieldIdNames(f)
+              colNames.flatMap { n =>
+                if (avail.contains(n)) Some(n)
+                else fieldIds.get(n.toLowerCase(java.util.Locale.ROOT))
+                  .flatMap(idToName.get).filter(avail.contains)
               }
             }
-          groups.iterator.map { rgs =>
-            val footer = PJSplice.splice(idx, rgs, Nil, fileColNames, schemaOnly = false)
-            PjInputPartition(f.path, f.fileLen, rgs.toArray, footer, partValues,
-              keyValues = f.partitionValues.toArray,
-              keySchemaJson = if (partitionSchema.isEmpty) "" else partitionSchema.json,
-              dvPath = dvPath,
-              rgStartRows = if (needPos) rgs.iterator.map(rgStarts(_)).toArray else Array.empty,
-              baseRowId = baseRid, rowIdFromColumn = ridFromCol)
           }
+        groups.iterator.map { rgs =>
+          val footer = PJSplice.splice(idx, rgs, Nil, fileColNames, schemaOnly = false)
+          PjInputPartition(f.path, f.fileLen, rgs.toArray, footer, partValues,
+            keyValues = f.partitionValues.toArray,
+            keySchemaJson = if (partitionSchema.isEmpty) "" else partitionSchema.json,
+            dvPath = dvPath,
+            rgStartRows = if (needPos) rgs.iterator.map(rgStarts(_)).toArray else Array.empty,
+            baseRowId = baseRid, rowIdFromColumn = ridFromCol)
         }
       }
     }.toArray
@@ -1623,10 +1553,6 @@ class PjScan(
       val sigs = files.map(sig)
       sigs.forall(_.isDefined) && sigs.distinct.size <= 1
     }
-    // nested-fallback files skip the reader FilterPredicate (their physical
-    // schema has group nodes the flat predicate builder does not cover);
-    // filters are always re-evaluated above the scan, so this is a perf
-    // concession for exactly those files, never a wrong answer
     // position arithmetic (deletion vectors / `_pos`) requires the reader
     // to deliver EVERY physical row of each planned row group: a reader
     // FilterPredicate would drop row groups (and page-index row ranges)
@@ -1638,7 +1564,7 @@ class PjScan(
     val needExactPositions =
       posPartOrdinal >= 0 || rowIdPartOrdinal >= 0 || files.exists(_.dv.isDefined)
     val predicate =
-      if (files.isEmpty || files.exists(_.rawFooter) ||
+      if (files.isEmpty ||
           pushedFilters.isEmpty || rowLevel || needExactPositions ||
           !PjSparkShims.parquetFilterPushDownEnabled(sqlConf) || !allFilesHaveFilterCols) None
       else {
@@ -1838,10 +1764,6 @@ final case class PjInputPartition(
     /** The file materializes ids as the hidden `_pj_row_id` column. */
     rowIdFromColumn: Boolean = false,
     keySchemaJson: String = "",
-    /** Nested-fallback split: `prunedFooter` holds the file's RAW footer;
-      * the reader keeps only `rowGroups` of its blocks after materializing.
-      */
-    rawFooter: Boolean = false,
     /** Deletion vector (absolute sidecar path; empty = none): the reader
       * filters these file-absolute positions out ([[PjDeletionVector]]).
       */

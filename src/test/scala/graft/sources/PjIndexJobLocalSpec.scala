@@ -18,15 +18,15 @@ class PjIndexJobLocalSpec extends AnyFunSuite {
   test("driver-local lane facts == executor-job lane facts") {
     import spark.implicits._
     val dir = Files.createTempDirectory("pj_idxjob_local").toString
-    (0L until 100L).map(i => (i, s"v$i")).toDF("id", "name")
-      .repartition(3).write.mode("overwrite").parquet(dir)
+    (0L until 400L).map(i => (i, s"v$i")).toDF("id", "name")
+      .repartition(40).write.mode("overwrite").parquet(dir)
     val paths = Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .map(_.getPath).sorted
-    assert(paths.size == 3)
+    assert(paths.size == 40 && paths.size > PjIndexJob.LocalMaxPaths)
     def norm(fs: Seq[graft.sources.pjparquet.PjFileFacts]) =
       fs.sortBy(_.path).map(f =>
-        (f.path, f.size, f.rows, f.rowGroups, f.fingerprint, f.nested,
+        (f.path, f.size, f.rows, f.rowGroups, f.fingerprint,
           f.zeroRowGroups, f.cols.toList, f.dataSchemaJson,
           // ColStat bounds are Array[Byte]: compare by value, not reference
           f.stats.toSeq.sortBy(_._1).map { case (c, st) =>
@@ -35,11 +35,9 @@ class PjIndexJobLocalSpec extends AnyFunSuite {
               case x => x
             }.toList)
           }))
-    spark.conf.set("spark.graft.indexJob.localThreshold", "32")
-    val local = PjIndexJob.generateForPaths(spark, paths)
-    spark.conf.set("spark.graft.indexJob.localThreshold", "0") // force the job lane
+    // batches of 20 stay on the driver; all 40 at once take the job lane
+    val local = paths.grouped(20).flatMap(PjIndexJob.generateForPaths(spark, _)).toSeq
     val dist = PjIndexJob.generateForPaths(spark, paths)
-    spark.conf.unset("spark.graft.indexJob.localThreshold")
     assert(norm(local) == norm(dist))
     assert(local.forall(_.sidecarWritten))
   }

@@ -580,8 +580,8 @@ class PjLogV2Spec extends AnyFunSuite {
     assert(viaParquet.entries.map(normStats) == head.entries.map(normStats),
       "stats envelopes must survive the parquet round-trip byte-for-byte")
     assert(viaParquet.entries.map(e => (e.size, e.rows, e.rowGroups, e.fingerprint,
-      e.nested, e.cols)) == head.entries.map(e => (e.size, e.rows, e.rowGroups,
-      e.fingerprint, e.nested, e.cols)))
+      e.cols)) == head.entries.map(e => (e.size, e.rows, e.rowGroups,
+      e.fingerprint, e.cols)))
     assert(viaParquet.dataSchemaJson == head.dataSchemaJson)
     // and the table still reads correctly through the parquet checkpoint
     val got = spark.read.format("pjparquet").load(dir)
@@ -628,8 +628,8 @@ class PjLogV2Spec extends AnyFunSuite {
     assert(after.entries.map(_.path) == before.entries.map(_.path))
     assert(after.entries.map(normStats) == before.entries.map(normStats))
     assert(after.entries.map(e => (e.size, e.rows, e.rowGroups, e.fingerprint,
-      e.nested, e.cols, e.dv)) == before.entries.map(e => (e.size, e.rows, e.rowGroups,
-      e.fingerprint, e.nested, e.cols, e.dv)))
+      e.cols, e.dv)) == before.entries.map(e => (e.size, e.rows, e.rowGroups,
+      e.fingerprint, e.cols, e.dv)))
     assert(after.dataSchemaJson == before.dataSchemaJson)
     // the table still reads correctly (DV applied) through the checkpoint
     assert(spark.read.format("pjparquet").load(dir).orderBy("id")

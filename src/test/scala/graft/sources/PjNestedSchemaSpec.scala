@@ -40,6 +40,14 @@ class PjNestedSchemaSpec extends AnyFunSuite {
     d
   }
 
+  /** Every split ships a footer cut down to exactly its own row groups —
+    * a whole-file raw footer would carry every block of the file.
+    */
+  private def spliced(parts: Seq[PjInputPartition]): Boolean =
+    parts.nonEmpty && parts.forall { p =>
+      graft.core.PalletJack.materialize(p.prunedFooter).getBlocks.size == p.rowGroups.length
+    }
+
   private def scanPartitions(df: DataFrame): Seq[PjInputPartition] = {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try {
@@ -64,7 +72,7 @@ class PjNestedSchemaSpec extends AnyFunSuite {
 
   test("nested splits are SPLICED (no raw footers), with top-level subtree pruning") {
     val nested = scanPartitions(spark.read.format("pjparquet").load(nestedDir).select($"id"))
-    assert(nested.nonEmpty && nested.forall(!_.rawFooter),
+    assert(spliced(nested),
       "nested files must plan as spliced PJ_3 splits, never raw footers")
     // the spliced footer of an id-only projection carries ONLY the id
     // subtree — the wide struct and the array are gone from the metadata
@@ -84,7 +92,7 @@ class PjNestedSchemaSpec extends AnyFunSuite {
       "id + meta.a + meta.b + pair.element = 4 leaf chunks")
     // flat files in the same session keep PJ_2 spliced planning
     val flat = scanPartitions(spark.read.format("pjparquet").load(flatDir).select($"id"))
-    assert(flat.nonEmpty && flat.forall(!_.rawFooter))
+    assert(spliced(flat))
   }
 
   test("struct-only projection splices away the other subtrees and reads exactly") {
