@@ -363,7 +363,28 @@ object PJSplice {
         }.toIndexedSeq
       } else columnIndices.toIndexedSeq
 
-    val out = new ByteArrayOutputStream(h.metadataLength)
+    val rowGroupFiltering = rowGroups.nonEmpty || schemaOnly
+    val selectedRgs: Seq[Int] = if (rowGroupFiltering) rowGroups else 0 until h.rowGroups
+
+    // sized to the selection, not the whole footer: everything outside the
+    // row-group list (schema, column orders, key-value metadata) as an upper
+    // bound, each selected row group with only its selected column chunks,
+    // and room for the re-encoded list headers and counts
+    val outSize = {
+      var n = 64L + index.rowGroupsOffset(1) +
+        (h.metadataLength - index.rowGroupsOffset(1 + h.rowGroups))
+      for (rg <- selectedRgs) {
+        n += 8 + index.rowGroupsOffset(2 + rg) - index.rowGroupsOffset(1 + rg)
+        if (columns.nonEmpty) {
+          n -= index.columnChunkOffset(rg, 1 + h.columns) - index.columnChunkOffset(rg, 1)
+          for (c <- columns)
+            n += index.columnChunkOffset(rg, 2 + c) - index.columnChunkOffset(rg, 1 + c)
+        }
+      }
+      // a corrupt index fails in copyRange below, not here
+      math.max(64L, math.min(n, h.metadataLength + 64L)).toInt
+    }
+    val out = new ByteArrayOutputStream(outSize)
     var srcIdx = 0 // cursor into the metadata bytes (reference's index_src)
 
     def copyRange(from: Int, len: Int): Unit = {
@@ -398,7 +419,6 @@ object PJSplice {
       srcIdx = index.schemaOffset(2 + h.columns)
     }
 
-    val rowGroupFiltering = rowGroups.nonEmpty || schemaOnly
     if (rowGroupFiltering) {
       //> 3: required i64 num_rows
       var numRows = 0L
@@ -418,7 +438,6 @@ object PJSplice {
       srcIdx = index.rowGroupsOffset(1)
     }
 
-    val selectedRgs: Seq[Int] = if (rowGroupFiltering) rowGroups else 0 until h.rowGroups
     for (rgIdx <- selectedRgs) {
       val rgAt = index.rowGroupsOffset(1 + rgIdx)
       srcIdx = rgAt

@@ -29,9 +29,25 @@ object MetadataQueries {
   private val q166Facts = new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Boolean, Boolean)]()
   private val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Every temp directory the queries make, deleted when the JVM exits:
+    * the returned DataFrames read from them lazily, and the fixtures are
+    * cached for the JVM's life, so none can go sooner.
+    */
+  private val madeDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private lazy val deleteMadeDirsAtExit: Unit = sys.addShutdownHook {
+    madeDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+  }
+
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    deleteMadeDirsAtExit
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    madeDirs.add(d.toFile)
+    d
+  }
+
   private def fixtureDir(key: String, dir: String)(build: String => Unit): String =
     fixtures.computeIfAbsent(s"$key:$dir", { _ =>
-      val d = java.nio.file.Files.createTempDirectory(key).toString
+      val d = tempDir(key).toString
       build(d)
       d
     })
@@ -111,7 +127,7 @@ object MetadataQueries {
       // sidecars the write path just produced (autogen stays enabled only
       // for the driver's re-runs). Oracle = the same aggregate over the
       // whole nation table, so the round-trip must be lossless.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q55_insert").toString
+      val tmp = tempDir("pj_q55_insert").toString
       val nation = graft.Tables.nation(s, dir)
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         nation.filter($"n_regionkey" === 0).coalesce(1), tmp)
@@ -131,7 +147,7 @@ object MetadataQueries {
       // aggregate over all of nation, so the partitioned round-trip must be
       // lossless. The partition column is directory-inferred as BIGINT;
       // both sides cast so the comparison is type-exact.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q62_insert").toString
+      val tmp = tempDir("pj_q62_insert").toString
       val nation = graft.Tables.nation(s, dir)
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         nation.filter($"n_regionkey" <= 1), tmp, partitionBy = Seq("n_regionkey"))
@@ -154,7 +170,7 @@ object MetadataQueries {
       // lose regions 0-1) and touched partitions must be REPLACED (an
       // append would leave the stale keys inflating key_sum) — the
       // whole-nation oracle catches either failure.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q64_dyn").toString
+      val tmp = tempDir("pj_q64_dyn").toString
       val nation = graft.Tables.nation(s, dir)
       val stale = nation.filter($"n_regionkey" > 1)
         .withColumn("n_nationkey", $"n_nationkey" + 1000)
@@ -187,7 +203,7 @@ object MetadataQueries {
       // commit RETIRED v1's files into the snapshot history instead of
       // deleting them (reclamation is PjVacuum.expireVersions's job).
       // DuckDB recomputes both states from the source table.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q125_tt").toString
+      val tmp = tempDir("pj_q125_tt").toString
       val nation = graft.Tables.nation(s, dir)
       nation.write.format("pjparquet").mode("append")
         .option("log.enabled", "true").save(tmp) // v1
@@ -216,7 +232,7 @@ object MetadataQueries {
       // exactly three versions with the right actions and live-file
       // counts, with non-decreasing commit timestamps (wall-clock, so the
       // ts itself rides as an asserted monotonicity bit, not a value).
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q126_hist").toString
+      val tmp = tempDir("pj_q126_hist").toString
       val r = graft.Tables.region(s, dir)
       def slice(k: Int) = r.filter($"r_regionkey" === k)
         .withColumn("k", lit(k.toLong)).coalesce(1)
@@ -248,7 +264,7 @@ object MetadataQueries {
       // snapshots. Same two-version lifecycle as q125, driven purely
       // through SQL on an isolated child session (q64 convention: the
       // harness session's catalog config is never touched).
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q129_sqltt").toString
+      val tmp = tempDir("pj_q129_sqltt").toString
       val nation = graft.Tables.nation(s, dir)
       nation.write.format("pjparquet").mode("append")
         .option("log.enabled", "true").save(tmp) // v1
@@ -275,7 +291,7 @@ object MetadataQueries {
       // diff and must not appear. Zero write amplification: the feed is
       // computed from the retained versions' files at read time; DuckDB
       // recomputes the expected pre/postimages from the source table.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q131_cdf").toString
+      val tmp = tempDir("pj_q131_cdf").toString
       graft.Tables.nation(s, dir).coalesce(1).write.format("pjparquet")
         .mode("append").option("log.enabled", "true").save(tmp) // v1
       s.sql("DROP TABLE IF EXISTS pj_q131_t")
@@ -298,7 +314,7 @@ object MetadataQueries {
       // sink) and emits the streamed rows, with a bit asserting the
       // change files really were persisted by the commit (not recomputed
       // here). DuckDB recomputes the expected pre/postimages from nation.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q134_cdc").toString
+      val tmp = tempDir("pj_q134_cdc").toString
       graft.Tables.nation(s, dir).coalesce(1).write.format("pjparquet")
         .mode("append").option("log.enabled", "true").save(tmp) // v1
       s.sql("DROP TABLE IF EXISTS pj_q134_t")
@@ -338,7 +354,7 @@ object MetadataQueries {
       // carried-over rows cancel in the diff), v3 appends the region-0
       // slice again. DuckDB recomputes all three versions' change rows
       // from the source table.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q135_cdf").toString
+      val tmp = tempDir("pj_q135_cdf").toString
       graft.Tables.nation(s, dir).coalesce(1).write.format("pjparquet")
         .mode("append").option("log.enabled", "true").save(tmp) // v1
       s.sql("DROP TABLE IF EXISTS pj_q135_t")
@@ -366,7 +382,7 @@ object MetadataQueries {
       // in the vectorized reader, and the commit path refuses lossy
       // changes. DuckDB recomputes the expected union with explicit
       // casts.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q136_widen").toString
+      val tmp = tempDir("pj_q136_widen").toString
       graft.Tables.nation(s, dir)
         .select(col("n_nationkey").cast("int").as("k"), col("n_name"))
         .coalesce(1).write.format("pjparquet")
@@ -399,7 +415,7 @@ object MetadataQueries {
       // CALL vacuum finds nothing left to sweep, and the table's rows
       // survive bit-exactly (DuckDB recomputes the row facts; the
       // procedure reports are engine-checked literals).
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q137_call").toString
+      val tmp = tempDir("pj_q137_call").toString
       for (r <- 0 to 2)
         graft.Tables.nation(s, dir).filter(col("n_regionkey") === r)
           .coalesce(1).write.format("pjparquet")
@@ -429,7 +445,7 @@ object MetadataQueries {
       // requests the column, and post-drop appends carry the narrowed
       // schema. DuckDB recomputes the row facts and the pre-drop
       // distinct-name count.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q138_drop").toString
+      val tmp = tempDir("pj_q138_drop").toString
       graft.Tables.nation(s, dir)
         .select(col("n_nationkey").cast("long").as("k"), col("n_name"),
           col("n_regionkey").cast("long").as("r"))
@@ -459,7 +475,7 @@ object MetadataQueries {
       // omit it (omitting writers' files null-fill too — Delta append
       // semantics), and the recorded schema keeps the added column
       // either way. DuckDB recomputes the union with explicit NULLs.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q139_add").toString
+      val tmp = tempDir("pj_q139_add").toString
       graft.Tables.nation(s, dir)
         .select(col("n_nationkey").cast("long").as("k"),
           col("n_regionkey").cast("long").as("r"))
@@ -495,7 +511,7 @@ object MetadataQueries {
       // metadata-rate (rows − vector cardinality), and a second DELETE
       // merges vectors. DuckDB recomputes the surviving aggregation; the
       // no-rewrite/one-vector-per-file facts ride as asserted bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q140_dv").toString
+      val tmp = tempDir("pj_q140_dv").toString
       graft.Tables.orders(s, dir)
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
           round($"o_totalprice" * 100).cast("long").as("price_cents"))
@@ -531,7 +547,7 @@ object MetadataQueries {
       // files — base files keep their bytes. A follow-up MERGE upserts
       // through the same delta write. DuckDB recomputes the final state;
       // the no-rewrite/vector facts ride as asserted bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q141_mor").toString
+      val tmp = tempDir("pj_q141_mor").toString
       graft.Tables.customer(s, dir)
         .select($"c_custkey", $"c_nationkey",
           round($"c_acctbal" * 100).cast("long").as("bal_cents"))
@@ -576,7 +592,7 @@ object MetadataQueries {
       // logged table, then deduped BY CONTENT with one window + one
       // vector commit — zero files rewritten, exactly one representative
       // per distinct text survives. DuckDB recomputes the distinct facts.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q142_dedup").toString
+      val tmp = tempDir("pj_q142_dedup").toString
       val docs = graft.Tables.documents(s, dir)
         .select($"doc_id".cast("long").as("doc_id"), $"text")
       docs.unionAll(docs.limit(40)).unionAll(docs.limit(15))
@@ -616,7 +632,7 @@ object MetadataQueries {
       // gains a "restore" version, and time travel to v3/v4 still works.
       // DuckDB recomputes the v2 row facts; the protocol facts ride as
       // asserted bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q143_restore").toString
+      val tmp = tempDir("pj_q143_restore").toString
       val nation = graft.Tables.nation(s, dir)
         .select($"n_nationkey".cast("long").as("k"), $"n_name", $"n_regionkey")
       nation.coalesce(1).write.format("pjparquet")
@@ -664,7 +680,7 @@ object MetadataQueries {
       // column, pre-existing rows null-fill. Without the clause the same
       // merge refuses at analysis. DuckDB recomputes the full-outer-merge
       // facts per segment.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q144_mse").toString
+      val tmp = tempDir("pj_q144_mse").toString
       val cust = graft.Tables.customer(s, dir)
       cust.filter($"c_custkey" % 3 === 0)
         .select($"c_custkey", round($"c_acctbal" * 100).cast("long").as("cents"))
@@ -716,7 +732,7 @@ object MetadataQueries {
       // FAILS THE JOB and commits nothing, a clean append lands, and
       // adding a constraint existing rows violate refuses with the
       // violation count. DuckDB recomputes the surviving row facts.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q145_chk").toString
+      val tmp = tempDir("pj_q145_chk").toString
       val orders = graft.Tables.orders(s, dir)
         .select($"o_orderkey", $"o_orderstatus",
           round($"o_totalprice" * 100).cast("long").as("price_cents"))
@@ -764,7 +780,7 @@ object MetadataQueries {
       // stay uniform), filters/aggregates on the new logical name answer
       // exactly, and a stale writer naming the old column refuses.
       // DuckDB recomputes the merged-generation facts.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q146_rename").toString
+      val tmp = tempDir("pj_q146_rename").toString
       val part = graft.Tables.part(s, dir)
         .select($"p_partkey", $"p_type",
           round($"p_retailprice" * 100).cast("long").as("price_cents"))
@@ -809,7 +825,7 @@ object MetadataQueries {
       // a reserved-namespace typo refuses at DDL time; SHOW
       // TBLPROPERTIES reads the map back. DuckDB recomputes the
       // surviving-row facts and the delete-change-row count.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q147_props").toString
+      val tmp = tempDir("pj_q147_props").toString
       val cust = graft.Tables.customer(s, dir)
         .select($"c_custkey", $"c_mktsegment",
           round($"c_acctbal" * 100).cast("long").as("cents"))
@@ -864,8 +880,8 @@ object MetadataQueries {
       // copied at clone time, source row count unchanged after the
       // clone's DELETE, clone aggregates reflect only its own DML.
       // DuckDB recomputes the surviving-clone aggregate and source count.
-      val src = java.nio.file.Files.createTempDirectory("pj_q148_src").toString
-      val tgtDir = java.nio.file.Files.createTempDirectory("pj_q148_tgt")
+      val src = tempDir("pj_q148_src").toString
+      val tgtDir = tempDir("pj_q148_tgt")
       java.nio.file.Files.delete(tgtDir) // clone requires a fresh target
       val tgt = tgtDir.toString
       val ord = graft.Tables.orders(s, dir)
@@ -908,7 +924,7 @@ object MetadataQueries {
       // attributeStats. DuckDB recomputes the exact facts (null counts,
       // byte lengths, min/max); the HLL NDV is checked as exact for the
       // low-cardinality column and within 5 % for the key column.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q149_analyze").toString
+      val tmp = tempDir("pj_q149_analyze").toString
       val cust = graft.Tables.customer(s, dir)
         .select($"c_custkey", $"c_mktsegment",
           round($"c_acctbal" * 100).cast("long").as("cents"))
@@ -947,7 +963,7 @@ object MetadataQueries {
       // generation expression, and Spark fills the DEFAULT. An UPDATE on
       // a base column then recomputes its generated dependent. DuckDB
       // recomputes every fact from customer.
-      val tgtDir = java.nio.file.Files.createTempDirectory("pj_q150_ddl")
+      val tgtDir = tempDir("pj_q150_ddl")
       java.nio.file.Files.delete(tgtDir)
       val tgt = tgtDir.toString
       s.conf.set("spark.sql.catalog.pj_q150", "graft.sources.pjparquet.PjCatalog")
@@ -985,7 +1001,7 @@ object MetadataQueries {
       // rate (no multiset diff, no data scan). DuckDB recomputes the
       // surviving row facts; the id-stability facts are engine-checked
       // bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q155_rt").toString
+      val tmp = tempDir("pj_q155_rt").toString
       val src = graft.Tables.supplier(s, dir)
         .select($"s_suppkey".cast("long").as("k"), $"s_nationkey".cast("long").as("n"))
       src.filter($"k" % 2 === 0).coalesce(1).write.format("pjparquet")
@@ -1055,7 +1071,7 @@ object MetadataQueries {
       // it via Spark's own default resolution, and explicit values —
       // including explicit NULL — win. DuckDB recomputes every value;
       // the narrow pre-add time-travel schema rides as an asserted bit.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q156_def")
+      val tmpDir = tempDir("pj_q156_def")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       val nation = graft.Tables.nation(s, dir)
@@ -1100,7 +1116,7 @@ object MetadataQueries {
       // scopes the rewrite; out-of-scope partitions stay byte-untouched
       // (file-identity bits), content is DuckDB-recomputed, and a
       // non-partition-column predicate refuses loudly.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q158_scoped")
+      val tmpDir = tempDir("pj_q158_scoped")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       val src = graft.Tables.supplier(s, dir)
@@ -1153,7 +1169,7 @@ object MetadataQueries {
       // rows take the source balance, unmatched source rows insert, and
       // by-source rows (in target, absent from source) DELETE when
       // c_nationkey < 10 and zero their balance otherwise.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q159_mbs").toString
+      val tmp = tempDir("pj_q159_mbs").toString
       val cust = graft.Tables.customer(s, dir)
         .select($"c_custkey", ($"c_acctbal" * 100).cast("long").as("bal_cents"),
           $"c_nationkey".cast("long").as("c_nationkey"))
@@ -1185,7 +1201,7 @@ object MetadataQueries {
       // end-state from nation; the staging/audit/pin facts ride as bits.
       // Fresh table per run (refs are single-use: fast_forward consumes
       // the branch) — the timed operator IS the WAP cycle.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q176_wap")
+      val tmp = tempDir("pj_q176_wap")
       java.nio.file.Files.delete(tmp)
       val t = tmp.toString
       s.conf.set("spark.sql.catalog.pj_q176", "graft.sources.pjparquet.PjCatalog")
@@ -1432,7 +1448,7 @@ object MetadataQueries {
       // "foreign" file whose names differ but whose ids match both keep
       // reads exact. DuckDB recomputes the row facts from nation; the
       // id-machinery facts ride as engine-checked bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q172_idmode")
+      val tmp = tempDir("pj_q172_idmode")
       java.nio.file.Files.delete(tmp)
       val t = tmp.toString
       s.conf.set("spark.sql.catalog.pj_q172", "graft.sources.pjparquet.PjCatalog")
@@ -1462,7 +1478,7 @@ object MetadataQueries {
       }
       // a FOREIGN id-keyed file: different column names, same ids — the
       // id pairing (not the names) must serve its bytes
-      val stage = java.nio.file.Files.createTempDirectory("pj_q172_stage")
+      val stage = tempDir("pj_q172_stage")
       java.nio.file.Files.delete(stage)
       val foreign = s.range(100, 103).select(
         $"id".as("ident", new org.apache.spark.sql.types.MetadataBuilder()
@@ -1507,7 +1523,7 @@ object MetadataQueries {
       // fixed at the catalog's FIRST initialization — reuse it on re-runs
       // (Bench runs every query several times) and rebuild the table
       val wh = s.conf.getOption("spark.sql.catalog.pj_q171.warehouse").getOrElse {
-        val d = java.nio.file.Files.createTempDirectory("pj_q171_wh").toString
+        val d = tempDir("pj_q171_wh").toString
         s.conf.set("spark.sql.catalog.pj_q171", "graft.sources.pjparquet.PjCatalog")
         s.conf.set("spark.sql.catalog.pj_q171.warehouse", d)
         d
@@ -1605,7 +1621,7 @@ object MetadataQueries {
       // replays (same version, twice; an older version, once) change
       // nothing. DuckDB recomputes the exactly-once content from the
       // source relation; engine-checked literals pin the no-op facts.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q169_txn")
+      val tmpDir = tempDir("pj_q169_txn")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       val orders = graft.Tables.orders(s, dir)
@@ -1650,7 +1666,7 @@ object MetadataQueries {
       // routed to the new one, so the layout stays partition-pure.
       // DuckDB recomputes the full post-MERGE state relationally — a
       // hash-exact oracle over update-move + delete + insert at once.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q168_xpm")
+      val tmpDir = tempDir("pj_q168_xpm")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       s.conf.set("spark.sql.catalog.pj_q168", "graft.sources.pjparquet.PjCatalog")
@@ -1696,7 +1712,7 @@ object MetadataQueries {
       // the previous generation still time-travelable. DuckDB recomputes
       // the final (replaced) content from the source relation; literals
       // pin the atomicity facts.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q167_ctas")
+      val tmpDir = tempDir("pj_q167_ctas")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       s.conf.set("spark.sql.catalog.pj_q167", "graft.sources.pjparquet.PjCatalog")
@@ -1810,7 +1826,7 @@ object MetadataQueries {
       // adopted snapshot. DuckDB recomputes the post-DELETE aggregate from
       // the source relation; the engine-checked literals pin the adoption
       // facts (v1, files adopted untouched, every entry plannable).
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q164_conv")
+      val tmpDir = tempDir("pj_q164_conv")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       val orders = graft.Tables.orders(s, dir)
@@ -1872,7 +1888,7 @@ object MetadataQueries {
       // — no small-file storm — while files stay partition-pure. The
       // engine literal pins the file economics (3 partition values from
       // an 8-task upstream = exactly 3 files); DuckDB recomputes the data.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q165_ow")
+      val tmpDir = tempDir("pj_q165_ow")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       s.conf.set("spark.sql.catalog.pj_q165", "graft.sources.pjparquet.PjCatalog")
@@ -1908,8 +1924,8 @@ object MetadataQueries {
       // markers), and a late-arriving file picks up incrementally. The
       // oracle recomputes the final table from the full orders relation;
       // the engine-checked literals pin the idempotence facts.
-      val srcDir = java.nio.file.Files.createTempDirectory("pj_q161_src").toString
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q161_tbl")
+      val srcDir = tempDir("pj_q161_src").toString
+      val tmpDir = tempDir("pj_q161_tbl")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       val orders = graft.Tables.orders(s, dir).select(
@@ -1951,7 +1967,7 @@ object MetadataQueries {
       // old generation's rows read era as NULL, both generations prune,
       // and the guards refuse silent-NULL evolutions. DuckDB recomputes
       // the union (old rows with NULL era, new with era=1).
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q154_pevo")
+      val tmpDir = tempDir("pj_q154_pevo")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       s.conf.set("spark.sql.catalog.pj_q154", "graft.sources.pjparquet.PjCatalog")
@@ -2002,7 +2018,7 @@ object MetadataQueries {
       // feature makes reads fail with a clear upgrade message instead of
       // silently resurrecting deleted rows. DuckDB recomputes the
       // surviving row facts; the protocol facts are engine-checked bits.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q152_proto").toString
+      val tmp = tempDir("pj_q152_proto").toString
       graft.Tables.nation(s, dir)
         .select($"n_nationkey".cast("long").as("k"), $"n_name", $"n_regionkey")
         .coalesce(1).write.format("pjparquet")
@@ -2070,7 +2086,7 @@ object MetadataQueries {
       // day-partitioned fact table. Plan-shape bit: the filtered scan
       // plans strictly fewer files than the full scan. DuckDB recomputes
       // the per-day aggregate under the same timestamp range.
-      val tmpDir = java.nio.file.Files.createTempDirectory("pj_q153_genprune")
+      val tmpDir = tempDir("pj_q153_genprune")
       java.nio.file.Files.delete(tmpDir)
       val tmp = tmpDir.toString
       s.conf.set("spark.sql.catalog.pj_q153", "graft.sources.pjparquet.PjCatalog")
@@ -2108,8 +2124,8 @@ object MetadataQueries {
       // then deleted outright and the clone must keep serving the same
       // rows from its own bytes. DuckDB recomputes the surviving
       // aggregate.
-      val src = java.nio.file.Files.createTempDirectory("pj_q151_src").toString
-      val tgtDir = java.nio.file.Files.createTempDirectory("pj_q151_tgt")
+      val src = tempDir("pj_q151_src").toString
+      val tgtDir = tempDir("pj_q151_tgt")
       java.nio.file.Files.delete(tgtDir)
       val tgt = tgtDir.toString
       graft.Tables.supplier(s, dir)
@@ -2149,7 +2165,7 @@ object MetadataQueries {
       // retired v1 file is the ONLY unreferenced byte and must be the
       // one reclaimed; HEAD stays exact; and reading the expired v1
       // fails with the verbatim available-range error.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q132_ret").toString
+      val tmp = tempDir("pj_q132_ret").toString
       val region = graft.Tables.region(s, dir)
       region.coalesce(1).write.format("pjparquet")
         .mode("append").option("log.enabled", "true").save(tmp) // v1
@@ -2251,7 +2267,7 @@ object MetadataQueries {
       // the structural invariants (file counts fell to the per-partition
       // bin counts, every partition survived, sidecars regenerated) ride
       // as exact 0/1 columns.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q89_compact").toString
+      val tmp = tempDir("pj_q89_compact").toString
       val docs = graft.Tables.documents(s, dir)
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         docs.repartition(6), tmp, partitionBy = Seq("lang"))
@@ -2399,7 +2415,7 @@ object MetadataQueries {
       // mergeSchema read must union the schemas and null-fill the old
       // files; the oracle recomputes every aggregate from the original
       // table with the generation split replayed in SQL.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q94_evo").toString
+      val tmp = tempDir("pj_q94_evo").toString
       val n = graft.Tables.nation(s, dir)
       n.filter($"n_nationkey" < 12)
         .select($"n_nationkey", $"n_name", $"n_regionkey")
@@ -2424,7 +2440,7 @@ object MetadataQueries {
       // drop, zero data I/O — SupportsDelete with the exact three-valued
       // partition evaluator), then aggregate what survives. The oracle
       // replays the delete as a WHERE clause over the original table.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q99_delete").toString
+      val tmp = tempDir("pj_q99_delete").toString
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         graft.Tables.nation(s, dir), tmp, partitionBy = Seq("n_regionkey"))
       s.sql("DROP TABLE IF EXISTS pj_q99_t")
@@ -2440,7 +2456,7 @@ object MetadataQueries {
       // rewrite exactly the files whose chunk stats admit o_orderstatus='F',
       // flip their priority, and leave every other file byte-identical. The
       // oracle replays the update as a CASE over the original table.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q100_update").toString
+      val tmp = tempDir("pj_q100_update").toString
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         graft.Tables.orders(s, dir)
           .select("o_orderkey", "o_orderstatus", "o_orderpriority"), tmp)
@@ -2456,7 +2472,7 @@ object MetadataQueries {
       // SQL MERGE INTO (upsert): target = every 3rd customer, source = every
       // 2nd with a 100k-cent bonus; matched rows update, unmatched insert.
       // Balances are integer cents so the oracle compares exactly.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q101_merge").toString
+      val tmp = tempDir("pj_q101_merge").toString
       val cust = graft.Tables.customer(s, dir)
         .select($"c_custkey", ($"c_acctbal" * 100).cast("long").as("bal_cents"),
           $"c_nationkey".cast("long").as("c_nationkey"))
@@ -2479,7 +2495,7 @@ object MetadataQueries {
       // Row-level SQL DELETE with a data-column predicate (the case the
       // metadata-rate path refuses): copy-on-write replaces only the files
       // whose stats admit o_totalprice < 100000.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q102_delete").toString
+      val tmp = tempDir("pj_q102_delete").toString
       graft.sources.pjparquet.PjWriter.writeWithIndex(
         graft.Tables.orders(s, dir)
           .select("o_orderkey", "o_orderstatus", "o_totalprice"), tmp)
@@ -2903,7 +2919,7 @@ object MetadataQueries {
         graft.sources.pjparquet.PjWriter.writeWithIndex(
           graft.Tables.customer(s, dir).repartition(4), d)
       }
-      val ckpt = java.nio.file.Files.createTempDirectory("pj_q96_ckpt").toString
+      val ckpt = tempDir("pj_q96_ckpt").toString
       val tbl = s"pj_q96_out_${streamRuns.incrementAndGet()}"
       val q = s.readStream.format("pjparquet").load(src)
         .writeStream.format("memory").queryName(tbl)
@@ -2929,7 +2945,7 @@ object MetadataQueries {
       // bytes — the zombie file must NOT leak into reads); the structural
       // half (exactly the planted garbage collected, sidecar fleet
       // intact) rides as 0/1 columns.
-      val tmp = java.nio.file.Files.createTempDirectory("pj_q92_vacuum").toString
+      val tmp = tempDir("pj_q92_vacuum").toString
       val docs = graft.Tables.documents(s, dir)
       graft.sources.pjparquet.PjWriter.writeWithIndex(docs.repartition(4), tmp)
       def countSidecars(): Long =

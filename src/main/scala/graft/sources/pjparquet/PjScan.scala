@@ -1389,11 +1389,29 @@ class PjScan(
       }
     })
 
+  /** The splits planned for the file set and split size they were planned
+    * from. Spark asks every copy of the scan node, and AQE makes copies
+    * (its prep rules, [[PjSingleSplitExchange]], each re-optimization);
+    * all of them get this one plan. A runtime [[filter]] that changes the
+    * file set plans again.
+    */
+  @volatile private var partitionsMemo: (Seq[PjFile], Long, Array[InputPartition]) = _
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val sqlConf = SQLConf.get
-    val maxPartitionBytes = sqlConf.filesMaxPartitionBytes
-    val colNames = prunedColumnNames
     val current = activeFiles
+    val maxPartitionBytes = SQLConf.get.filesMaxPartitionBytes
+    val memo = partitionsMemo
+    if (memo != null && (memo._1 eq current) && memo._2 == maxPartitionBytes) memo._3
+    else {
+      val planned = planPartitions(current, maxPartitionBytes)
+      partitionsMemo = (current, maxPartitionBytes, planned)
+      planned
+    }
+  }
+
+  private def planPartitions(
+      current: Seq[PjFile], maxPartitionBytes: Long): Array[InputPartition] = {
+    val colNames = prunedColumnNames
     lazy val planConf = SparkSession.active.sessionState.newHadoopConf()
     current.iterator.zip(effectiveSelections(current).iterator).flatMap { case (f, selected0) =>
       val rgCount = rgCountOf(f)

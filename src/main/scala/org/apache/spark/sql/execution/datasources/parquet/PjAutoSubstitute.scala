@@ -79,8 +79,10 @@ class PjAutoSubstituteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 /** `spark.sql.extensions=org.apache.spark.sql.execution.datasources.parquet.PjSparkExtensions`
   * (or `builder.withExtensions(new PjSparkExtensions)`).
   *
-  * Besides the scan substitution rule, registers the library's codegen'd
-  * expressions as SQL functions so pure-SQL pipelines reach them:
+  * Besides the scan substitution rule and the one-split exchange removal
+  * ([[graft.sources.pjparquet.PjSingleSplitExchange]]), registers the
+  * library's codegen'd expressions as SQL functions so pure-SQL pipelines
+  * reach them:
   * `pj_simhash64(array<string>)`, `pj_dot(array<double>, array<double>)`,
   * `pj_sorted_intersect_count(sorted array<bigint> × 2)`.
   */
@@ -103,6 +105,9 @@ class PjSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => 
 
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(spark => new PjAutoSubstituteRule(spark))
+    // a read planning one split runs as one stage under a global
+    // aggregate, limit or window (AQE only)
+    ext.injectQueryStagePrepRule(_ => graft.sources.pjparquet.PjSingleSplitExchange)
     // Delta-parity maintenance SQL: OPTIMIZE ... [WHERE] [ZORDER BY (...)]
     // [FULL] and VACUUM ... [RETAIN n HOURS] [DRY RUN] over root paths —
     // sugar over the CALL pj.system.* procedures; everything else (and

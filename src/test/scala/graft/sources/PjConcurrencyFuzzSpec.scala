@@ -275,21 +275,25 @@ class PjConcurrencyFuzzSpec extends AnyFunSuite {
                 val ids = freshIds(opId, 3)
                 val src = java.nio.file.Files.createTempDirectory(
                   f"pj_fuzz_copy_$opId%06d").toString
-                rows(ids).coalesce(1).write.mode("overwrite").parquet(src)
-                var landed = false
-                if (attempt(seed, s"copy#$opId") {
-                  var tries = 0
-                  var pending = 1L
-                  while (pending > 0 && tries < 4) {
-                    tries += 1
-                    val r = spark.sql(s"CALL pjfuzz.system.copy_into(" +
-                      s"table => '$t', source => '$src', " +
-                      s"reclaim_claims => ${tries > 1})").head()
-                    pending = r.getLong(2)
-                    if (r.getLong(0) + r.getLong(1) > 0) landed = true
-                  }
-                  if (pending > 0) throw new PJException_Like_Conflict()
-                }) { if (landed) appended.add(ids) }
+                // COPY INTO copies the rows, so the staged source goes
+                // once the op is over
+                try {
+                  rows(ids).coalesce(1).write.mode("overwrite").parquet(src)
+                  var landed = false
+                  if (attempt(seed, s"copy#$opId") {
+                    var tries = 0
+                    var pending = 1L
+                    while (pending > 0 && tries < 4) {
+                      tries += 1
+                      val r = spark.sql(s"CALL pjfuzz.system.copy_into(" +
+                        s"table => '$t', source => '$src', " +
+                        s"reclaim_claims => ${tries > 1})").head()
+                      pending = r.getLong(2)
+                      if (r.getLong(0) + r.getLong(1) > 0) landed = true
+                    }
+                    if (pending > 0) throw new PJException_Like_Conflict()
+                  }) { if (landed) appended.add(ids) }
+                } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
               case 7 => // idempotent txn-append: EVERY thread races the
                 // same (appId, version=1) with the SAME ids — exactly one
                 // lands, the rest skip as replays, content identical. (A

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjChangeFeed, PjCommitLog, PjParquetTable, PjVacuum}
 
 /** Round-10 commit-log v2: per-file stats in log entries (Delta
@@ -13,11 +13,10 @@ import graft.sources.pjparquet.{PjChangeFeed, PjCommitLog, PjParquetTable, PjVac
   * concurrency for disjoint appends, change data feed, and time-based
   * vacuum retention.
   */
-class PjLogV2Spec extends AnyFunSuite {
+class PjLogV2Spec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"pj_logv2_$tag").toString
+  override protected def tempDir(tag: String): String = super.tempDir(s"pj_logv2_$tag")
 
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())

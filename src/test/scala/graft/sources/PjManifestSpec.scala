@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.core.PJException
 import graft.sources.pjparquet.{PjCommitLog, PjManifest}
 
@@ -13,16 +13,17 @@ import graft.sources.pjparquet.{PjCommitLog, PjManifest}
   * file list — retired files invisible, stale partition manifests removed
   * on regeneration, DV tables refused.
   */
-class PjManifestSpec extends AnyFunSuite {
+class PjManifestSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   spark.conf.set("spark.sql.catalog.pjman", "graft.sources.pjparquet.PjCatalog")
 
+  /** A path that does not exist yet; deleted when the test ends. */
   private def freshDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(tag)
-    java.nio.file.Files.delete(d)
-    d.toString
+    val d = tempDir(tag)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(d))
+    d
   }
 
   private def readManifest(t: String, rel: String): Seq[String] = {

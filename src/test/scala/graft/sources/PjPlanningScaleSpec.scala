@@ -23,70 +23,77 @@ class PjPlanningScaleSpec extends AnyFunSuite {
 
   /** One real indexed file, byte-copied into p=0..99/ × 20 — content is
     * irrelevant to planning cost, file COUNT is the variable under test.
+    * Both directories are deleted when `body` returns.
     */
-  private lazy val layoutDir: String = {
+  private def withLayout(body: String => Unit): Unit = {
     import org.apache.spark.sql.functions._
     val src = Files.createTempDirectory("pjscale_src").toString
-    graft.sources.pjparquet.PjWriter.writeWithIndex(
-      spark.range(10).select(col("id"), (col("id") * 2).as("v")).coalesce(1), src)
-    val data = new java.io.File(src).listFiles().find(_.getName.endsWith(".parquet")).get
-    val sidecar = new java.io.File(src, "." + data.getName + ".index")
-    assert(sidecar.isFile)
-
     val root = Files.createTempDirectory("pjscale").toString
-    for (p <- 0 until nPartitions; j <- 0 until filesPerPartition) {
-      val dir = Paths.get(root, s"p=$p")
-      Files.createDirectories(dir)
-      val name = f"part-$j%05d.parquet"
-      Files.copy(data.toPath, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-      Files.copy(sidecar.toPath, dir.resolve("." + name + ".index"),
-        StandardCopyOption.REPLACE_EXISTING)
+    try {
+      graft.sources.pjparquet.PjWriter.writeWithIndex(
+        spark.range(10).select(col("id"), (col("id") * 2).as("v")).coalesce(1), src)
+      val data = new java.io.File(src).listFiles().find(_.getName.endsWith(".parquet")).get
+      val sidecar = new java.io.File(src, "." + data.getName + ".index")
+      assert(sidecar.isFile)
+      for (p <- 0 until nPartitions; j <- 0 until filesPerPartition) {
+        val dir = Paths.get(root, s"p=$p")
+        Files.createDirectories(dir)
+        val name = f"part-$j%05d.parquet"
+        Files.copy(data.toPath, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+        Files.copy(sidecar.toPath, dir.resolve("." + name + ".index"),
+          StandardCopyOption.REPLACE_EXISTING)
+      }
+      body(root)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
-    root
   }
 
   test(s"${nPartitions * filesPerPartition}-file partitioned layout: bounded cold resolve, instance-cached warm resolve") {
-    val conf = spark.sessionState.newHadoopConf()
-    // unmeasured warm-up on a tiny layout: JIT-compiles the resolution path
-    // and initializes Hadoop's FS classes, so the timed run below measures
-    // file-count scaling, not first-call class loading
-    PjParquetTable.resolveFiles(s"$layoutDir/p=0", conf, autogen = true)
-    PjParquetTable.clearLayoutCache()
+    withLayout { layoutDir =>
+      val conf = spark.sessionState.newHadoopConf()
+      // unmeasured warm-up on a tiny layout: JIT-compiles the resolution path
+      // and initializes Hadoop's FS classes, so the timed run below measures
+      // file-count scaling, not first-call class loading
+      PjParquetTable.resolveFiles(s"$layoutDir/p=0", conf, autogen = true)
+      PjParquetTable.clearLayoutCache()
 
-    val t0 = System.nanoTime()
-    val cold = PjParquetTable.resolveFiles(layoutDir, conf, autogen = true)
-    val coldMs = (System.nanoTime() - t0) / 1e6
+      val t0 = System.nanoTime()
+      val cold = PjParquetTable.resolveFiles(layoutDir, conf, autogen = true)
+      val coldMs = (System.nanoTime() - t0) / 1e6
 
-    assert(cold.files.size == nPartitions * filesPerPartition)
-    assert(cold.partitionSchema.fieldNames.toSeq == Seq("p"))
+      assert(cold.files.size == nPartitions * filesPerPartition)
+      assert(cold.partitionSchema.fieldNames.toSeq == Seq("p"))
 
-    // warm: min-of-5 so a scheduler hiccup can't flake the bound; each hit
-    // pays ONE listing walk for the freshness signature and nothing per-file
-    val warmRuns = (1 to 5).map { _ =>
-      val t = System.nanoTime()
-      val l = PjParquetTable.resolveFiles(layoutDir, conf, autogen = true)
-      val ms = (System.nanoTime() - t) / 1e6
-      (l, ms)
+      // warm: min-of-5 so a scheduler hiccup can't flake the bound; each hit
+      // pays ONE listing walk for the freshness signature and nothing per-file
+      val warmRuns = (1 to 5).map { _ =>
+        val t = System.nanoTime()
+        val l = PjParquetTable.resolveFiles(layoutDir, conf, autogen = true)
+        val ms = (System.nanoTime() - t) / 1e6
+        (l, ms)
+      }
+      val warmMs = warmRuns.map(_._2).min
+      // cache hit is observable, not inferred: the same PjLayout INSTANCE
+      // comes back, so no sidecar was re-read and no index re-parsed
+      warmRuns.foreach { case (l, _) => assert(l eq cold, "warm resolve missed the layout cache") }
+
+      info(f"cold resolve: $coldMs%.1f ms for ${cold.files.size} files; warm (min of 5): $warmMs%.2f ms")
+      // generous ceilings always (order-of-magnitude regressions only);
+      // strict design-point bounds opt-in, like ReadmeSpec's perf assertion,
+      // so a loaded CI box can't flake the functional suite
+      assert(coldMs < 10000, f"cold resolution took $coldMs%.1f ms — per-file cost crept into planning")
+      assert(warmMs < 1000, f"warm resolution took $warmMs%.2f ms — signature walk is no longer cheap")
+      if (sys.env.get("GRAFT_PERF_ASSERTS").contains("1")) {
+        assert(coldMs < 2000, f"cold resolution took $coldMs%.1f ms (strict bound 2s)")
+        assert(warmMs < 250, f"warm resolution took $warmMs%.2f ms (strict bound 250ms)")
+      }
+
+      // and the layout actually plans: partition pruning reaches file selection
+      val pruned = spark.read.format("pjparquet").load(layoutDir)
+        .where("p = 3").count()
+      assert(pruned == filesPerPartition * 10)
     }
-    val warmMs = warmRuns.map(_._2).min
-    // cache hit is observable, not inferred: the same PjLayout INSTANCE
-    // comes back, so no sidecar was re-read and no index re-parsed
-    warmRuns.foreach { case (l, _) => assert(l eq cold, "warm resolve missed the layout cache") }
-
-    info(f"cold resolve: $coldMs%.1f ms for ${cold.files.size} files; warm (min of 5): $warmMs%.2f ms")
-    // generous ceilings always (order-of-magnitude regressions only);
-    // strict design-point bounds opt-in, like ReadmeSpec's perf assertion,
-    // so a loaded CI box can't flake the functional suite
-    assert(coldMs < 10000, f"cold resolution took $coldMs%.1f ms — per-file cost crept into planning")
-    assert(warmMs < 1000, f"warm resolution took $warmMs%.2f ms — signature walk is no longer cheap")
-    if (sys.env.get("GRAFT_PERF_ASSERTS").contains("1")) {
-      assert(coldMs < 2000, f"cold resolution took $coldMs%.1f ms (strict bound 2s)")
-      assert(warmMs < 250, f"warm resolution took $warmMs%.2f ms (strict bound 250ms)")
-    }
-
-    // and the layout actually plans: partition pruning reaches file selection
-    val pruned = spark.read.format("pjparquet").load(layoutDir)
-      .where("p = 3").count()
-    assert(pruned == filesPerPartition * 10)
   }
 }
