@@ -504,9 +504,10 @@ object MetadataQueries {
     }),
     "q140_dv_delete" -> ((s, dir) => {
       import s.implicits._
-      // Merge-on-read DELETE via deletion vectors (round 11, PjDvDelete):
-      // a data-predicate DELETE on a logged table writes per-file position
-      // vectors instead of rewriting files — ONE commit, zero data files
+      // Merge-on-read DELETE via deletion vectors (the SupportsDelta
+      // writer, PjDeltaRowLevelOperation): a data-predicate DELETE on a
+      // logged table writes per-file position vectors instead of
+      // rewriting files — ONE commit, zero data files
       // rewritten, reads filter positions columnar-side, count(*) stays
       // metadata-rate (rows − vector cardinality), and a second DELETE
       // merges vectors. DuckDB recomputes the surviving aggregation; the

@@ -1256,6 +1256,22 @@ private[sources] object PjBatchWrite {
   /** Remove `key=value` directories left empty by an overwrite, deepest
     * first (stock dynamic partition overwrite drops the directory too).
     */
+  /** Delete `dir` and then each parent while it is empty, up to (not
+    * including) `root`.
+    */
+  def pruneEmptyParents(fs: FileSystem, root: Path, dir: Path): Unit = {
+    val rootQ = fs.makeQualified(root)
+    var d = dir
+    var done = false
+    while (!done && d != null && fs.makeQualified(d) != rootQ) {
+      val empty =
+        try fs.listStatus(d).isEmpty
+        catch { case _: java.io.FileNotFoundException => false }
+      if (empty) { fs.delete(d, false); d = d.getParent }
+      else done = true
+    }
+  }
+
   def pruneEmptyPartitionDirs(fs: FileSystem, root: Path): Unit = {
     def prune(dir: Path): Boolean = { // returns "dir is now empty"
       val children = fs.listStatus(dir)

@@ -16,9 +16,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import graft.core.PJException
 
 /** Delta-based (merge-on-read) row-level DML — Spark's `SupportsDelta`
-  * protocol carried onto deletion vectors: `UPDATE` and `MERGE INTO` (and
-  * non-pushable `DELETE`s) on a commit-log table no longer copy-on-write
-  * whole files. The rewrite plan feeds each matched row's identity
+  * protocol carried onto deletion vectors: `DELETE` (every data predicate,
+  * pushable or not), `UPDATE` and `MERGE INTO` on a commit-log table never
+  * copy-on-write whole files. The rewrite plan feeds each matched row's identity
   * (`_file`, `_pos`) to [[PjDeltaWriter.delete]] and every new/updated row
   * to [[PjDeltaWriter.insert]]:
   *
@@ -35,7 +35,10 @@ import graft.core.PJException
   *
   * An UPDATE touching 0.1 % of a 100 TB table therefore writes the new
   * rows plus kilobytes of vectors — never the untouched 99.9 % of the hit
-  * files. Copy-on-write remains for unlogged tables and
+  * files; a DELETE writes only the vectors, and on an unpartitioned table
+  * runs as one job with one stage (no required distribution, just a local
+  * sort on (`_file`, `_pos`)). A DML that matches no row commits nothing.
+  * Copy-on-write remains for unlogged tables and
   * `deletionVectors.enabled=false`.
   */
 final class PjDeltaRowLevelOperation(
@@ -217,6 +220,8 @@ final class PjDeltaBatchWrite(
     val partialsByFile: Map[String, Seq[(String, Long)]] =
       msgs.flatMap(_.partials).groupBy(_._1)
         .map { case (f, ps) => f -> ps.map(p => (p._2, p._3)) }
+    // nothing matched and nothing inserted: no version, like any no-op DML
+    if (manifest.isEmpty && partialsByFile.isEmpty) return
 
     // failed/speculative attempt files die before anything commits —
     // listing only the dirs this job's committed tasks wrote (a retried
@@ -302,7 +307,8 @@ final class PjDeltaBatchWrite(
         bloomColumns.map(PjColumnMapping.toPhysical(nameMap, _)))
     val addEntries = manifest.map(rel => facts(s"$root/$rel").toEntry(rel))
     // file-derived schemas carry PHYSICAL names; translate back to the
-    // recorded LOGICAL names (column mapping) before widening
+    // recorded LOGICAL names (column mapping) before widening. A commit
+    // that adds no data file records no schema (replay keeps the last)
     val newSchemaJson = manifest.headOption.map { rel =>
       // the hidden materialized row-id column is engine-internal: strip
       // it before the file-derived schema is recorded
@@ -314,12 +320,12 @@ final class PjDeltaBatchWrite(
         case None => phys
       }
     }
-    val schemaJson = (prev.dataSchemaJson, newSchemaJson) match {
-      case (Some(p), Some(n)) => Some(PjBatchWrite.widenRecordedSchema(p, n))
-      case (p, n) => n.orElse(p)
-    }
+    val schemaJson = newSchemaJson.map(n =>
+      prev.dataSchemaJson.fold(n)(PjBatchWrite.widenRecordedSchema(_, n)))
 
-    val v = PjCommitLog.commit(fs, rootPath, "write-delta",
+    // a DELETE records the action every deletion-vector DELETE recorded
+    val action = if (command == "delete") "delete-dv" else "write-delta"
+    val v = PjCommitLog.commit(fs, rootPath, action,
       (adds.result() ++ addEntries).toSeq, removes.result(), schemaJson,
       operation = Some(command),
       readVersion = Some(readVersion),
@@ -344,9 +350,11 @@ final class PjDeltaBatchWrite(
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-    for ((status, _, _) <- PjBatchWrite.listDataFiles(fs, rootPath)
-         if status.getPath.getName.contains(jobUUID))
+    val jobDirs = for ((status, _, _) <- PjBatchWrite.listDataFiles(fs, rootPath)
+         if status.getPath.getName.contains(jobUUID)) yield {
       PjBatchWrite.deleteWithSidecars(fs, status.getPath)
+      status.getPath.getParent
+    }
     // partial vectors carry the job tag in their names
     val dvDir = PjDeletionVector.dvDir(rootPath)
     if (fs.exists(dvDir)) {
@@ -356,7 +364,9 @@ final class PjDeltaBatchWrite(
         if (s.getPath.getName.contains(jobUUID)) fs.delete(s.getPath, false)
       }
     }
-    PjBatchWrite.pruneEmptyPartitionDirs(fs, rootPath)
+    // only the directories this job wrote into: a table-wide prune races a
+    // concurrent writer between its mkdirs and its first file
+    jobDirs.distinct.foreach(PjBatchWrite.pruneEmptyParents(fs, rootPath, _))
   }
 }
 

@@ -1,114 +1,35 @@
 package graft.sources.pjparquet
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.PJException
 
-/** The merge-on-read DELETE path: `DELETE FROM t WHERE <data predicate>`
-  * on a commit-log table writes [[PjDeletionVector]]s instead of
-  * copy-on-write file rewrites — Delta's deletion-vector semantics:
+/** Merge-on-read deletion of EXPLICIT (file, position) identities — Delta's
+  * deletion-vector semantics for position-driven operators such as in-place
+  * dedup ([[graft.operators.PipelineOps.dedupInPlace]]). SQL `DELETE`,
+  * `UPDATE` and `MERGE` write their vectors through the `SupportsDelta`
+  * writer instead ([[PjDeltaRowLevelOperation]]).
   *
-  *  1. ONE distributed job scans the pinned base snapshot with the
-  *     predicate (partition values, stats envelopes, and blooms bound the
-  *     read set exactly as any query), emitting each match's
-  *     (`_file`, `_pos`);
-  *  2. matches shuffle by file and sort by position; each executor run
-  *     stream-encodes one vector per file — merged with the file's
-  *     EXISTING vector (delete-on-delete composes) — and publishes it
-  *     under `_pj_dv/` with O(1) memory;
-  *  3. the driver collects only (file → vector, cardinality) and commits
+  *  1. the caller's Dataset of (`_file`, `_pos`) matches shuffles by file
+  *     and sorts by position; each executor run stream-encodes one vector
+  *     per file — merged with the file's EXISTING vector (delete-on-delete
+  *     composes) — and publishes it under `_pj_dv/` with O(1) memory;
+  *  2. the driver collects only (file → vector, cardinality) and commits
   *     one delta: each touched file's entry re-added with its new
   *     [[PjCommitLog.DvRef]] (fully-deleted files simply retire), with
   *     the declared read base + partition read set so disjoint concurrent
   *     DML rebases instead of failing.
   *
-  * A DELETE hitting 0.1 % of a 100 TB table therefore writes kilobytes of
-  * vectors, not terabytes of rewritten files. Reads stay columnar
-  * ([[PjPositionAwareColumnarReader]]); compaction and copy-on-write
-  * rewrites materialize the vectors away.
+  * Reads stay columnar ([[PjPositionAwareColumnarReader]]); compaction and
+  * copy-on-write rewrites materialize the vectors away.
   */
 object PjDvDelete {
 
-  /** V1 filter → Column, for re-evaluating the pushed DELETE predicate in
-    * the position-collecting job. None = untranslatable (the caller must
-    * then refuse `canDeleteWhere` so Spark keeps the copy-on-write plan).
-    */
-  def toColumn(f: org.apache.spark.sql.sources.Filter): Option[Column] = {
-    import org.apache.spark.sql.sources._
-    def c(a: String): Column = col(s"`${a.replace("`", "``")}`")
-    f match {
-      case EqualTo(a, v) => Some(c(a) === lit(v))
-      case EqualNullSafe(a, v) => Some(c(a) <=> lit(v))
-      case GreaterThan(a, v) => Some(c(a) > lit(v))
-      case GreaterThanOrEqual(a, v) => Some(c(a) >= lit(v))
-      case LessThan(a, v) => Some(c(a) < lit(v))
-      case LessThanOrEqual(a, v) => Some(c(a) <= lit(v))
-      case In(a, vs) => Some(c(a).isin(vs.toIndexedSeq.map(lit(_)): _*))
-      case IsNull(a) => Some(c(a).isNull)
-      case IsNotNull(a) => Some(c(a).isNotNull)
-      case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-      case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-      case Not(x) => toColumn(x).map(!_)
-      case StringStartsWith(a, v) => Some(c(a).startsWith(v))
-      case StringEndsWith(a, v) => Some(c(a).endsWith(v))
-      case StringContains(a, v) => Some(c(a).contains(v))
-      case AlwaysTrue() => Some(lit(true))
-      case AlwaysFalse() => Some(lit(false))
-      case _ => None
-    }
-  }
-
-  def translatable(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    filters.forall(toColumn(_).isDefined)
-
-  /** Run the deletion-vector DELETE. Assumes `canDeleteWhere` accepted:
-    * the table is a resolved commit-log snapshot and every filter
-    * translates. Returns the committed version, or None when nothing
-    * matched (no commit).
-    */
-  def run(
-      spark: SparkSession,
-      fs: FileSystem,
-      rootPath: Path,
-      layout: PjLayout,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Option[Long] = {
-    val baseVersion = layout.logVersion.getOrElse(
-      throw new PJException("pjparquet: deletion-vector DELETE requires a commit-log table"))
-    val cond = filters.map(f => toColumn(f).getOrElse(
-      throw new PJException(s"pjparquet: untranslatable DELETE predicate $f"))) match {
-      case Array() => lit(true)
-      case cs => cs.reduce(_ && _)
-    }
-    val rootQ = fs.makeQualified(rootPath).toString
-
-    // 1. the position-collecting job, pinned to the base snapshot
-    import spark.implicits._
-    val matches = spark.read.format("pjparquet")
-      .option("versionAsOf", baseVersion.toString)
-      .load(rootQ)
-      .filter(cond)
-      .select(col(PjParquetTable.FileMetaName).as("f"), col(PjParquetTable.PosMetaName).as("p"))
-      .as[(String, Long)]
-
-    // partition-level read set (pre-stats-pruning, like the CoW scans):
-    // every partition tuple the predicate might admit
-    val readPartitions: Set[Seq[String]] =
-      layout.files.filter(f => filters.forall(p =>
-        layout.partitionSchema.isEmpty ||
-          PjPartitionFilter.mightMatch(layout.partitionSchema, f, p)))
-        .map(_.partitionValues).toSet
-    deletePositions(spark, fs, rootPath, layout, matches,
-      operation = "delete", readPartitions = readPartitions)
-  }
-
-  /** Delete EXPLICIT (file, position) identities — the general merge-on-
-    * read primitive behind [[run]] and position-driven operators like
-    * in-place dedup ([[graft.operators.PipelineOps.dedupInPlace]]):
-    * `matches` is any Dataset of (absolute file path as the scan's
-    * `_file` renders it, file-absolute `_pos`). Vectors build
-    * distributedly exactly as for a predicate DELETE; returns the
+  /** Delete the (file, position) identities in `matches`: any Dataset of
+    * (absolute file path as the scan's `_file` renders it, file-absolute
+    * `_pos`) read from the snapshot `layout` resolved. Returns the
     * committed version (None when `matches` is empty).
     */
   def deletePositions(
@@ -131,7 +52,7 @@ object PjDvDelete {
     val oldB = spark.sparkContext.broadcast(oldDvByFile)
     val rootQB = rootQ
 
-    // 2. per-file vector build: shuffle by file, sort by position, one
+    // 1. per-file vector build: shuffle by file, sort by position, one
     // streaming encode per (file) run — O(1) executor memory
     val shuffleP = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, layout.files.size))
@@ -177,7 +98,7 @@ object PjDvDelete {
 
     if (results.isEmpty) return None
 
-    // 3. one commit: re-add touched entries with their new vectors;
+    // 2. one commit: re-add touched entries with their new vectors;
     // fully-deleted files retire outright
     val entryByRel: Map[String, PjCommitLog.FileEntry] =
       layout.files.flatMap(_.entry.map(e => e.path -> e)).toMap

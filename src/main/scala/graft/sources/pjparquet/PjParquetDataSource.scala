@@ -429,53 +429,26 @@ class PjParquetTable(
     * their sidecars) with zero data I/O — the SQL-level form of dropping a
     * partition on a 100 TB day/tenant-partitioned table. `canDeleteWhere`
     * claims only predicates whose SQL truth value is exact for EVERY file
-    * ([[PjPartitionFilter.exactMatch]] three-valued evaluation); anything
-    * referencing a data column refuses, and Spark raises its standard
-    * "cannot delete" error instead of us silently over- or under-deleting.
-    */
-  /** Every filter partition-decidable for every file — the whole-file
-    * metadata-delete precondition.
+    * ([[PjPartitionFilter.exactMatch]] three-valued evaluation); any other
+    * DELETE stays on the row-level plan ([[newRowLevelOperationBuilder]]):
+    * merge-on-read deletion vectors on a logged table, copy-on-write
+    * otherwise.
     */
   private def allPartitionExact(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     layout.files.forall(f =>
       filters.forall(p =>
         PjPartitionFilter.exactMatch(layout.partitionSchema, f, p).isDefined))
 
-  /** Deletion-vector DELETEs (merge-on-read, [[PjDvDelete]]) are the
-    * default for commit-log tables; `deletionVectors.enabled=false` opts a
-    * table back into copy-on-write rewrites for data-predicate DELETEs.
-    */
-  private def dvDeletesEnabled: Boolean =
-    layout.logVersion.isDefined && PjTableProperties.effectiveBool(options,
-      layout.propertiesJson, "deletionVectors.enabled",
-      PjTableProperties.DeletionVectorsEnabled, default = true)
-
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    allPartitionExact(filters) ||
-      (dvDeletesEnabled && PjDvDelete.translatable(filters))
+    allPartitionExact(filters)
 
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     if (options.containsKey("versionAsOf") || options.containsKey("timestampAsOf"))
       throw new graft.core.PJException(
         "pjparquet: cannot DELETE from a time-travel snapshot (snapshot reads are read-only)")
-    if (!allPartitionExact(filters)) {
-      // data-dependent predicate: the deletion-vector path (the only way
-      // canDeleteWhere accepted it). Partition-exact predicates stay on
-      // the whole-file metadata path below — faster, and vector-free.
-      val spark = org.apache.spark.sql.SparkSession.active
-      val rootPath = new org.apache.hadoop.fs.Path(Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("pjparquet: 'path' option is required")))
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val committed = PjDvDelete.run(spark, fs, rootPath, layout, filters)
-      // persisted change rows (cdc.enabled tables) ride the same post-commit
-      // hook as the copy-on-write writes; failure is non-fatal by contract
-      if (cdcEnabled(options))
-        committed.foreach { v =>
-          try PjChangeFeed.persistCommitDiff(spark, rootPath.toString, v)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-      return
-    }
+    if (!allPartitionExact(filters))
+      throw new graft.core.PJException(
+        s"pjparquet: deleteWhere needs a partition-exact predicate, got ${filters.mkString(", ")}")
     val victims = layout.files.filter(f =>
       filters.forall(p =>
         PjPartitionFilter.exactMatch(layout.partitionSchema, f, p).contains(true)))
@@ -517,19 +490,7 @@ class PjParquetTable(
       val fs = p.getFileSystem(conf)
       fs.delete(p, false)
       fs.delete(new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.index"), false)
-      // prune now-empty partition directories up to (not including) the root
-      rootPath.foreach { r =>
-        val root = fs.makeQualified(r)
-        var dir = p.getParent
-        var done = false
-        while (!done && dir != null && fs.makeQualified(dir) != root) {
-          val empty =
-            try fs.listStatus(dir).isEmpty
-            catch { case _: java.io.FileNotFoundException => false }
-          if (empty) { fs.delete(dir, false); dir = dir.getParent }
-          else done = true
-        }
-      }
+      rootPath.foreach(PjBatchWrite.pruneEmptyParents(fs, _, p.getParent))
     }
   }
 
@@ -546,11 +507,12 @@ class PjParquetTable(
     Array(PjParquetTable.FileMetadataColumn, PjParquetTable.PosMetadataColumn,
       PjParquetTable.RowIdMetadataColumn)
 
-  /** SQL `DELETE` with arbitrary predicates, `UPDATE`, `MERGE INTO`:
-    * copy-on-write at file granularity, with the rewrite set bounded by
-    * partition values and the index's chunk statistics — see
-    * [[PjRowLevelOperation]]. Partition-only DELETEs stay on the
-    * metadata-rate `deleteWhere` path via Spark's
+  /** SQL `DELETE` with data predicates, `UPDATE`, `MERGE INTO`:
+    * merge-on-read deletion vectors on a logged table
+    * ([[PjDeltaRowLevelOperation]]), otherwise copy-on-write at file
+    * granularity ([[PjRowLevelOperation]]); either way the scan is bounded
+    * by partition values and the index's chunk statistics. Partition-only
+    * DELETEs stay on the metadata-rate `deleteWhere` path via Spark's
     * `OptimizeMetadataOnlyDeleteFromTable`.
     */
   override def newRowLevelOperationBuilder(

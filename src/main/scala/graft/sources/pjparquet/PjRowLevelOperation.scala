@@ -7,10 +7,15 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Group-based (copy-on-write) row-level DML for pjparquet tables: SQL
-  * `DELETE` with arbitrary predicates, `UPDATE`, and `MERGE INTO`, via
-  * Spark's `SupportsRowLevelOperations` framework. The "group" — the
-  * replacement granularity — is the FILE:
+/** Row-level DML for pjparquet tables — SQL `DELETE` with data predicates,
+  * `UPDATE` and `MERGE INTO` — via Spark's `SupportsRowLevelOperations`
+  * framework. [[PjRowLevelOperationBuilder]] picks the mechanism: on a
+  * commit-log table every one of them is a merge-on-read delta command
+  * ([[PjDeltaRowLevelOperation]]: deletion vectors plus appended rows);
+  * the group-based (copy-on-write) operation below serves unlogged tables,
+  * `deletionVectors.enabled=false`, and the generated/identity-column cases
+  * the builder lists. The "group" — the replacement granularity — is the
+  * FILE:
   *
   *  1. Spark's rewrite rules (`RewriteDeleteFromTable` /
   *     `RewriteUpdateTable` / `RewriteMergeIntoTable`) plan a `ReplaceData`
@@ -59,8 +64,8 @@ final class PjRowLevelOperationBuilder(
     // the [[PjGenerated]]-augmented write provides (the merge-on-read
     // writer applies no augmentation). UPDATE on identity-only tables
     // stays merge-on-read — updated rows carry their identity values.
-    // DELETE never changes row values, so it always keeps the
-    // deletion-vector fast path.
+    // DELETE never changes row values, so every data-predicate DELETE —
+    // pushable or not — is a delta command: vectors only, no rewrite.
     if (layout.logVersion.isDefined &&
         (info.command == RowLevelOperation.Command.DELETE ||
           (!PjGenerated.hasGenerated(layout.dataSchema) &&

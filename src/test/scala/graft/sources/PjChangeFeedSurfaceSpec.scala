@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjChangeFeed, PjCommitLog}
 
 /** First-class change-data-feed read surface (round 11):
@@ -13,11 +13,8 @@ import graft.sources.pjparquet.{PjChangeFeed, PjCommitLog}
   * offsets are commit versions (exactly-once per version across
   * restarts).
   */
-class PjChangeFeedSurfaceSpec extends AnyFunSuite {
+class PjChangeFeedSurfaceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
-
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"pj_cdfsurf_$tag").toString
 
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -25,7 +22,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
   /** v1: append ids 1..4; v2: UPDATE id>=3 (+10); v3: append ids 5..6. */
   private def threeVersionTable(cdc: Boolean): String = {
     import spark.implicits._
-    val dir = tempDir(if (cdc) "cdc3" else "plain3")
+    val dir = tempDir(if (cdc) "pj_cdfsurf_cdc3" else "pj_cdfsurf_plain3")
     Seq(1L, 2L, 3L, 4L).toDF("id").coalesce(1).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // v1
     val t = s"pj_cdfsurf_${System.nanoTime()}"
@@ -97,7 +94,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
 
   test("long range plans as ONE labeled scan, not one union branch per version") {
     import spark.implicits._
-    val dir = tempDir("long")
+    val dir = tempDir("pj_cdfsurf_long")
     val root = new Path(dir)
     val fs = fsOf(dir)
     Seq(100L).toDF("id").coalesce(1).write.format("pjparquet")
@@ -135,8 +132,8 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
   test("streaming CDF delivers each version exactly once across restarts") {
     import spark.implicits._
     val dir = threeVersionTable(cdc = true)
-    val ckpt = tempDir("ckpt")
-    val sink = tempDir("sink")
+    val ckpt = tempDir("pj_cdfsurf_ckpt")
+    val sink = tempDir("pj_cdfsurf_sink")
     // file sink: the one sink class that supports checkpoint RECOVERY, so
     // the restart below genuinely resumes from the committed version cursor
     def runOnce(): Unit = {
@@ -175,7 +172,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
     val dir = threeVersionTable(cdc = false) // UPDATE at v2 did NOT persist
     val fs = fsOf(dir)
     assert(!fs.exists(new Path(dir, "_pj_cdc/v=2")), "fixture: v2 unpersisted")
-    val ckpt = tempDir("ckpt_mat")
+    val ckpt = tempDir("pj_cdfsurf_ckpt_mat")
     val out = s"pj_cdf_stream_m_${System.nanoTime()}"
     val q = spark.readStream.format("pjparquet")
       .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
@@ -191,14 +188,14 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
 
   test("streaming CDF over deletion-vector commits: exactly the deleted positions") {
     import spark.implicits._
-    val dir = tempDir("dvstream")
+    val dir = tempDir("pj_cdfsurf_dvstream")
     spark.range(0, 40).select($"id", lit("a").as("s")).coalesce(1)
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir) // v1
     spark.sql(s"DROP TABLE IF EXISTS pj_cdf_dv")
     spark.sql(s"CREATE TABLE pj_cdf_dv USING pjparquet OPTIONS (path '$dir')")
     spark.sql("DELETE FROM pj_cdf_dv WHERE id IN (5, 9)")       // v2: vector
     spark.sql("UPDATE pj_cdf_dv SET s = 'b' WHERE id = 11")      // v3: merge-on-read
-    val ckpt = tempDir("ckpt_dv")
+    val ckpt = tempDir("pj_cdfsurf_ckpt_dv")
     val out = s"pj_cdf_stream_dv_${System.nanoTime()}"
     val q = spark.readStream.format("pjparquet")
       .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
@@ -218,7 +215,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
 
   test("partitioned table: one-plan feed aligns partition types and survives hostile values") {
     import spark.implicits._
-    val dir = tempDir("part")
+    val dir = tempDir("pj_cdfsurf_part")
     // long-typed partition column (the inference convention) PLUS a
     // second table with URL-hostile string partition values
     Seq((1L, 10L), (2L, 10L), (3L, 20L)).toDF("id", "k").coalesce(1)
@@ -244,7 +241,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
       (3L, 20L, "update_preimage", 3L), (103L, 20L, "update_postimage", 3L)))
     // URL-hostile string partition values round-trip through the
     // broadcast canonical-path map (encoded dirs, spaces, '#')
-    val dir2 = tempDir("hostile")
+    val dir2 = tempDir("pj_cdfsurf_hostile")
     Seq((1L, "a b#c"), (2L, "plain")).toDF("id", "p").coalesce(1)
       .write.format("pjparquet").mode("append")
       .option("log.enabled", "true").partitionBy("p").save(dir2)
@@ -282,7 +279,7 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite {
     import spark.implicits._
     // 30-version backlog, one 1-file commit each (the restart-100-behind
     // shape, scaled for test time)
-    val dir = tempDir("cdf_budget")
+    val dir = tempDir("pj_cdfsurf_cdf_budget")
     for (i <- 1 to 30)
       Seq(i.toLong).toDF("id").coalesce(1).write.format("pjparquet")
         .mode("append").option("log.enabled", "true").save(dir)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.PjDeletionVector
 
 /** Merge-on-read DELETE via deletion vectors: codec round-trip, the `_pos`
@@ -11,7 +11,7 @@ import graft.sources.pjparquet.PjDeletionVector
   * interactions (count pushdown adjustment, time travel, vacuum,
   * compaction materialization).
   */
-class PjDeletionVectorSpec extends AnyFunSuite {
+class PjDeletionVectorSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -41,7 +41,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("DV DELETE: merge-on-read, no file rewritten, reads exact, count pushdown adjusts") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_del").toString
+    val dir = tempDir("pj_dv_del")
     spark.range(0, 1000).select($"id", ($"id" % 10).as("m"))
       .repartition(2).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // v1: 2 files
@@ -96,7 +96,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
     // partition keys, but a pure DELETE's projection carries no data
     // columns — planning failed with "Unable to resolve <partition col>"
     // on ANY partitioned table (the delete command keys on `_file` alone)
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_part").toString
+    val dir = tempDir("pj_dv_part")
     spark.range(0, 1000).select($"id", ($"id" % 4).as("p"))
       .write.format("pjparquet").partitionBy("p")
       .mode("append").option("log.enabled", "true").save(dir)
@@ -124,7 +124,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("DV DELETE: full-file deletion retires the file; no-match deletes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_full").toString
+    val dir = tempDir("pj_dv_full")
     spark.range(0, 100).select($"id", ($"id" < 50).as("lo"))
       .repartition(col("lo")) // two files split by lo
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir)
@@ -148,7 +148,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("DV interactions: opt-out CoW UPDATE materializes, vacuum protects then sweeps") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_mix").toString
+    val dir = tempDir("pj_dv_mix")
     spark.range(0, 200).select($"id", ($"id" % 2 === 0).as("even"), lit(1L).as("v"))
       .coalesce(1).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // v1
@@ -198,7 +198,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("merge-on-read UPDATE: vectors + appended rows, no file rewritten") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_mor_upd").toString
+    val dir = tempDir("pj_mor_upd")
     spark.range(0, 1000).select($"id", ($"id" % 10).as("m"), lit(1L).as("v"))
       .repartition(2).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // v1: 2 files
@@ -241,7 +241,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("merge-on-read MERGE INTO: matched update + delete, not-matched insert") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_mor_mrg").toString
+    val dir = tempDir("pj_mor_mrg")
     spark.range(0, 100).select($"id", lit(10L).as("v"))
       .coalesce(1).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir)
@@ -273,7 +273,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
 
   test("DV + CDF range read and streaming-shape classification") {
     import graft.sources.pjparquet.PjChangeFeed
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_cdf").toString
+    val dir = tempDir("pj_dv_cdf")
     spark.range(0, 30).select($"id", lit("x").as("s"))
       .coalesce(1).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // v1
@@ -301,7 +301,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("fully-deleted row groups never plan (contiguous delete on a sorted layout)") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_rgdrop").toString
+    val dir = tempDir("pj_dv_rgdrop")
     spark.conf.set("parquet.block.size", (16 * 1024).toString)
     try {
       spark.range(0, 20000).select($"id", ($"id" % 4).as("m"))
@@ -352,47 +352,52 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("stale-base DV delete rebases over a disjoint concurrent delete") {
-    import org.apache.spark.sql.sources.{EqualTo, LessThan}
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_conc").toString
+    import graft.sources.pjparquet.{PjCommitLog, PjDeltaWrite}
+    val dir = tempDir("pj_dv_conc")
     spark.range(0, 200).select($"id", ($"id" % 2).as("k"))
       .repartition(col("k")).write.format("pjparquet")
       .mode("append").option("log.enabled", "true")
       .option("partitionedBy", "k").partitionBy("k").save(dir) // v1
-    val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    // both writers plan against v1
-    val staleLayout = graft.sources.pjparquet.PjParquetTable.resolveFiles(
-      dir, conf, autogen = true)
-    assert(staleLayout.logVersion.contains(1L))
-    // writer A lands first: DV delete in k=0
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     spark.sql(s"DROP TABLE IF EXISTS pj_dv_race")
     spark.sql(s"CREATE TABLE pj_dv_race USING pjparquet OPTIONS (path '$dir')")
-    spark.sql("DELETE FROM pj_dv_race WHERE k = 0 AND id < 20") // v2
-    // writer B, still holding the v1 layout, deletes in k=1 ONLY — its
-    // partition read set is disjoint from A's touched files, so the
-    // commit must REBASE onto v2 and land as v3
-    val committed = graft.sources.pjparquet.PjDvDelete.run(
-      spark, fs, root, staleLayout,
-      Array(EqualTo("k", 1L), LessThan("id", 20L)))
-    assert(committed.contains(3L), s"got $committed")
+    /** Run `stale` with `winner` committing inside its tasks-done-to-commit
+      * window, so `stale` commits against a read base one version behind.
+      */
+    def racing(stale: String, winner: String): Unit = {
+      PjDeltaWrite.testHookBeforeCommit = { () =>
+        PjDeltaWrite.testHookBeforeCommit = () => ()
+        spark.sql(winner)
+      }
+      try spark.sql(stale)
+      finally PjDeltaWrite.testHookBeforeCommit = () => ()
+    }
+    // writer B plans against v1 and deletes in k=1 ONLY; writer A's DV
+    // delete in k=0 lands first (v2). B's partition read set is disjoint
+    // from A's touched files, so B's commit must REBASE onto v2 as v3
+    racing(stale = "DELETE FROM pj_dv_race WHERE k = 1 AND id < 20",
+      winner = "DELETE FROM pj_dv_race WHERE k = 0 AND id < 20")
+    val head = PjCommitLog.latest(fs, root).get
+    assert(head.version == 3L, s"got v${head.version}")
+    def touched(v: Long): Set[String] =
+      PjCommitLog.delta(fs, root, v).add.map(_.path.takeWhile(_ != '/')).toSet
+    assert(touched(2L) == Set("k=0") && touched(3L) == Set("k=1"),
+      "A lands as v2, B rebases to v3")
     val t = spark.table("pj_dv_race")
     assert(t.count() == 180L, "both deletes must be live")
     assert(t.filter($"id" < 20).count() == 0L)
-    // an OVERLAPPING stale delete (same partition A touched) conflicts
-    val stale2 = graft.sources.pjparquet.PjParquetTable.resolveFiles(
-      dir, conf, autogen = true)
-    spark.sql("DELETE FROM pj_dv_race WHERE k = 0 AND id >= 190") // v4 via head
-    val e = intercept[graft.core.PJException] {
-      graft.sources.pjparquet.PjDvDelete.run(
-        spark, fs, root, stale2, // base v3; v4 touched k=0 too
-        Array(EqualTo("k", 0L), LessThan("id", 40L)))
-    }
-    assert(e.getMessage.contains("conflict"), s"got: ${e.getMessage}")
+    // an OVERLAPPING stale delete (same partition the winner touched) conflicts
+    val e = intercept[Throwable](racing(
+      stale = "DELETE FROM pj_dv_race WHERE k = 0 AND id < 40", // base v3
+      winner = "DELETE FROM pj_dv_race WHERE k = 0 AND id >= 190")) // v4
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("conflict"))), s"got: $e")
+    assert(PjCommitLog.latest(fs, root).get.version == 4L)
   }
 
   test("DV reads through NESTED schemas: struct and array columns remap per selection") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_nested").toString
+    val dir = tempDir("pj_dv_nested")
     spark.range(0, 300)
       .select($"id",
         struct(($"id" * 2).as("a"), concat(lit("s"), $"id").as("b")).as("st"),
@@ -424,7 +429,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("dedupInPlace: one rep per key, vectors only, idempotent rerun") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_dedup").toString
+    val dir = tempDir("pj_dv_dedup")
     val base = spark.range(0, 90).select(($"id" % 30).as("k"), $"id".as("payload"))
     base.repartition(2).write.format("pjparquet")
       .mode("append").option("log.enabled", "true").save(dir) // 30 keys × 3 copies
@@ -454,7 +459,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_dedup_slim").toString
+    val dir = tempDir("pj_dv_dedup_slim")
     spark.range(0, 60)
       .select(concat(lit("shared document text payload "), ($"id" % 20).cast("string")).as("text"),
         $"id".as("payload"))
@@ -490,7 +495,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
 
   test("DV entries survive JSON and parquet checkpoints bit-identically") {
     import graft.sources.pjparquet.PjCommitLog
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_ckpt").toString
+    val dir = tempDir("pj_dv_ckpt")
     spark.range(0, 100).select($"id", lit("z").as("s")).coalesce(1)
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir)
     spark.sql(s"DROP TABLE IF EXISTS pj_dv_ck")
@@ -502,12 +507,12 @@ class PjDeletionVectorSpec extends AnyFunSuite {
     val replayed = PjCommitLog.latest(fs, root).get
     def norm(e: PjCommitLog.FileEntry) = (e.path, e.rows, e.dv)
     for (parquetEntries <- Seq(false, true)) {
-      val d = java.nio.file.Files.createTempDirectory(s"pj_dv_ck_$parquetEntries")
+      val d = tempDir(s"pj_dv_ck_$parquetEntries")
       // copy log + files, force a checkpoint in the requested format
       org.apache.hadoop.fs.FileUtil.copy(fs, root,
-        fs, new org.apache.hadoop.fs.Path(d.toString, "t"), false,
+        fs, new org.apache.hadoop.fs.Path(d, "t"), false,
         spark.sessionState.newHadoopConf())
-      val r2 = new org.apache.hadoop.fs.Path(d.toString, "t")
+      val r2 = new org.apache.hadoop.fs.Path(d, "t")
       PjCommitLog.writeCheckpoint(fs, r2, replayed.version,
         entryFormat = Some(parquetEntries))
       PjCommitLog.clearSnapshotCache()
@@ -521,7 +526,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("purge procedure rewrites ONLY vector-carrying files") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_purge").toString
+    val dir = tempDir("pj_dv_purge")
     spark.range(0, 100).select($"id", ($"id" < 50).as("lo")).coalesce(1)
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir) // f1
     spark.range(100, 200).select($"id", lit(false).as("lo")).coalesce(1)
@@ -553,7 +558,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
     // reader FilterPredicate the parquet reader would skip leading row
     // groups INSIDE the reader and desynchronize the position cursor —
     // the scan must suppress it on vector-carrying reads
-    val dir = java.nio.file.Files.createTempDirectory("pj_dv_rgskip").toString
+    val dir = tempDir("pj_dv_rgskip")
     spark.conf.set("parquet.block.size", (16 * 1024).toString)
     try {
       spark.range(0, 20000).select($"id", ($"id" % 100).as("m"))
@@ -584,7 +589,7 @@ class PjDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("_pos metadata column: file-absolute ordinals across row groups and splits") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_pos").toString
+    val dir = tempDir("pj_pos")
     // several row groups: small block size forces multiple
     spark.conf.set("parquet.block.size", (16 * 1024).toString)
     try {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -17,8 +18,15 @@ import graft.SparkTestSession
   * `numOutputRows` metric: same file, same filter, page skipping on vs
   * off, and the on-path must output a small fraction of the rows.
   */
-class PjPageIndexSpec extends AnyFunSuite {
+class PjPageIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
+
+  // the fixture is shared by every test, so it goes when the suite ends
+  private lazy val fixtureDir = java.nio.file.Files.createTempDirectory("pj_pageidx").toString
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fixtureDir))
+    finally super.afterAll()
 
   private val totalRows = 200000L
   private val pageRows = 1000
@@ -28,7 +36,7 @@ class PjPageIndexSpec extends AnyFunSuite {
     * page-level pruning can shrink the scan's output.
     */
   private lazy val fixtureFile: String = {
-    val dir = java.nio.file.Files.createTempDirectory("pj_pageidx").toString
+    val dir = fixtureDir
     spark.range(totalRows).toDF("k")
       .withColumn("payload", concat(lit("row-"), col("k")))
       .coalesce(1)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjCommitLog, PjVacuum}
 
 /** Commit-log snapshots + time travel ([[graft.sources.pjparquet.PjCommitLog]]):
@@ -13,11 +13,8 @@ import graft.sources.pjparquet.{PjCommitLog, PjVacuum}
   * deleting them, and [[PjVacuum.expireVersions]] is the only thing that
   * reclaims a logged table's bytes.
   */
-class PjTimeTravelSpec extends AnyFunSuite {
+class PjTimeTravelSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
-
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"pj_tt_$tag").toString
 
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -36,7 +33,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("append -> overwrite -> append: every version stays readable with exact contents") {
     import spark.implicits._
-    val dir = tempDir("basic")
+    val dir = tempDir("pj_tt_basic")
     write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir, "append")      // v1
     write(Seq((10L, "x"), (11L, "y")).toDF("id", "name"), dir, "overwrite") // v2 (truncate)
     write(Seq((12L, "z")).toDF("id", "name"), dir, "append")                // v3
@@ -60,7 +57,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("dynamic partition overwrite retires only the touched partition's files") {
     import spark.implicits._
-    val dir = tempDir("dyn")
+    val dir = tempDir("pj_tt_dyn")
     write(Seq((1L, 0L), (2L, 1L)).toDF("id", "k"), dir, "append", Seq("k"))   // v1
     spark.sql("DROP TABLE IF EXISTS pj_tt_dyn")
     spark.sql(s"CREATE TABLE pj_tt_dyn USING pjparquet OPTIONS (path '$dir')")
@@ -83,7 +80,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("logged metadata DELETE retires files without touching bytes; time travel sees them") {
     import spark.implicits._
-    val dir = tempDir("del")
+    val dir = tempDir("pj_tt_del")
     write(Seq((1L, 0L), (2L, 1L), (3L, 1L)).toDF("id", "k"), dir, "append", Seq("k")) // v1
     spark.sql("DROP TABLE IF EXISTS pj_tt_del")
     spark.sql(s"CREATE TABLE pj_tt_del USING pjparquet OPTIONS (path '$dir')")
@@ -97,7 +94,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("expireVersions closes the travel window and reclaims exactly the unreferenced bytes") {
     import spark.implicits._
-    val dir = tempDir("expire")
+    val dir = tempDir("pj_tt_expire")
     write(Seq((1L, "a")).toDF("id", "name"), dir, "append")      // v1
     write(Seq((2L, "b")).toDF("id", "name"), dir, "overwrite")   // v2
     write(Seq((3L, "c")).toDF("id", "name"), dir, "append")      // v3
@@ -114,11 +111,11 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("snapshot isolation: files on disk but outside the snapshot are invisible") {
     import spark.implicits._
-    val dir = tempDir("iso")
+    val dir = tempDir("pj_tt_iso")
     write(Seq((1L, "a")).toDF("id", "name"), dir, "append") // v1
     // simulate a racing writer's uncommitted file: a valid parquet data
     // file dropped into the directory without a log commit
-    val tmp = tempDir("ghost")
+    val tmp = tempDir("pj_tt_ghost")
     Seq((99L, "ghost")).toDF("id", "name").coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
     val dest = new java.io.File(dir, "part-uncommitted-ghost.parquet")
@@ -129,7 +126,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("unlogged tables are untouched: no _pj_log appears, overwrite still deletes") {
     import spark.implicits._
-    val dir = tempDir("unlogged")
+    val dir = tempDir("pj_tt_unlogged")
     Seq((1L, "a")).toDF("id", "name").write.format("pjparquet").mode("append").save(dir)
     Seq((2L, "b")).toDF("id", "name").write.format("pjparquet").mode("overwrite").save(dir)
     val fs = fsOf(dir)
@@ -142,7 +139,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("timestampAsOf resolves to the latest commit at or before the instant; history reports all versions") {
     import spark.implicits._
-    val dir = tempDir("ts")
+    val dir = tempDir("pj_tt_ts")
     write(Seq((1L, "a")).toDF("id", "name"), dir, "append")      // v1
     write(Seq((2L, "b")).toDF("id", "name"), dir, "overwrite")   // v2
     val fs = fsOf(dir)
@@ -175,7 +172,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("in-commit timestamps stay strictly monotone across a wall-clock step-back") {
     import spark.implicits._
-    val dir = tempDir("clockback")
+    val dir = tempDir("pj_tt_clockback")
     write(Seq((1L, "a")).toDF("id", "name"), dir, "append")      // v1, real clock
     val fs = fsOf(dir)
     val v1ts = PjCommitLog.history(fs, new Path(dir)).head.ts
@@ -205,7 +202,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("writes and DML against a versionAsOf snapshot are refused") {
     import spark.implicits._
-    val dir = tempDir("romode")
+    val dir = tempDir("pj_tt_romode")
     write(Seq((1L, "a")).toDF("id", "name"), dir, "append")
     write(Seq((2L, "b")).toDF("id", "name"), dir, "append")
     val e = intercept[Exception] {
@@ -217,7 +214,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("logged static partition overwrite retires exactly the filtered partition") {
     import spark.implicits._
-    val dir = tempDir("static")
+    val dir = tempDir("pj_tt_static")
     write(Seq((1L, 0L), (2L, 1L), (3L, 1L)).toDF("id", "k"), dir, "append", Seq("k")) // v1
     spark.sql("DROP TABLE IF EXISTS pj_tt_static")
     spark.sql(s"CREATE TABLE pj_tt_static USING pjparquet OPTIONS (path '$dir')")
@@ -237,7 +234,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("logged row-level UPDATE (merge-on-read) versions the delta; untouched files shared") {
     import spark.implicits._
-    val dir = tempDir("dml")
+    val dir = tempDir("pj_tt_dml")
     write(Seq((1L, 0L), (2L, 1L)).toDF("id", "k"), dir, "append", Seq("k")) // v1
     spark.sql("DROP TABLE IF EXISTS pj_tt_dml")
     spark.sql(s"CREATE TABLE pj_tt_dml USING pjparquet OPTIONS (path '$dir')")
@@ -264,7 +261,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("logged compaction: merges only the LIVE snapshot, retired rows never come back") {
     import spark.implicits._
-    val dir = tempDir("compact")
+    val dir = tempDir("pj_tt_compact")
     // v1: two small files that will later be RETIRED by an overwrite
     write(Seq((1L, "dead")).toDF("id", "name").coalesce(1), dir, "append")
     write(Seq((2L, "dead2")).toDF("id", "name").coalesce(1), dir, "append") // v2
@@ -294,10 +291,10 @@ class PjTimeTravelSpec extends AnyFunSuite {
 
   test("streaming read of a logged table ingests committed files only") {
     import spark.implicits._
-    val dir = tempDir("stream")
+    val dir = tempDir("pj_tt_stream")
     write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir, "append") // v1
     // ghost: a valid parquet data file with NO commit — must never stream
-    val tmp = tempDir("stream_ghost")
+    val tmp = tempDir("pj_tt_stream_ghost")
     Seq((99L, "ghost")).toDF("id", "name").coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.copy(part.toPath,
@@ -319,7 +316,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.pj", "graft.sources.pjparquet.PjCatalog")
     try {
-      val dir = tempDir("sql")
+      val dir = tempDir("pj_tt_sql")
       write(Seq((1L, "a")).toDF("id", "name"), dir, "append")                 // v1
       write(Seq((2L, "b"), (3L, "c")).toDF("id", "name"), dir, "overwrite")   // v2
       def sql(q: String): Set[Long] =
@@ -343,7 +340,7 @@ class PjTimeTravelSpec extends AnyFunSuite {
   }
 
   test("log layer at planning scale: a 50k-file snapshot round-trips fast and bounded") {
-    val dir = tempDir("scale")
+    val dir = tempDir("pj_tt_scale")
     val root = new Path(dir)
     val fs = fsOf(dir)
     // escapePathValue-hostile names included: round-trip must be exact

@@ -2,18 +2,18 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjVacuum, PjWriter}
 
 /** Vacuum: deletes exactly the garbage (orphan sidecars, abandoned work
   * dirs) and nothing live; the table stays fully readable afterwards.
   */
-class PjVacuumSpec extends AnyFunSuite {
+class PjVacuumSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("expire dry run reports exactly what a real run reclaims, touching nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_vacuum_dry").toString
+    val dir = tempDir("pj_vacuum_dry")
     spark.conf.set("spark.sql.catalog.pjvd", "graft.sources.pjparquet.PjCatalog")
     (1L to 20L).toDF("id").coalesce(1)
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir)
@@ -49,7 +49,7 @@ class PjVacuumSpec extends AnyFunSuite {
     // far above ParallelListMinDirs, so both clean() and expire's orphan
     // sweep must run their listing waves as Spark jobs — at millions of
     // objects a sequential driver walk is hours of metadata calls
-    val dir = java.nio.file.Files.createTempDirectory("pj_vacuum_wide").toString
+    val dir = tempDir("pj_vacuum_wide")
     spark.conf.set("spark.sql.catalog.pjvw", "graft.sources.pjparquet.PjCatalog")
     spark.range(0, 1000).select($"id", ($"id" % 200).cast("string").as("k"))
       .repartition(8)
@@ -91,7 +91,7 @@ class PjVacuumSpec extends AnyFunSuite {
     // a sequential driver loop over 10k object-store deletes is minutes of
     // round-trips — above ParallelDeleteMinFiles the sweep must run as ONE
     // Spark job, with the reclaim report unchanged from the driver path
-    val dir = java.nio.file.Files.createTempDirectory("pj_vacuum_bulk").toString
+    val dir = tempDir("pj_vacuum_bulk")
     (0L until 10L).map(i => (i, i)).toDF("id", "v").coalesce(1)
       .write.format("pjparquet").mode("append")
       .option("log.enabled", "true").save(dir)
@@ -117,7 +117,7 @@ class PjVacuumSpec extends AnyFunSuite {
   }
 
   test("removes orphan sidecars and abandoned work dirs, keeps live pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("pj_vacuum").toString
+    val dir = tempDir("pj_vacuum")
     PjWriter.writeWithIndex(
       spark.range(1000).select($"id", ($"id" % 3).cast("string").as("k")),
       dir, partitionBy = Seq("k"))
