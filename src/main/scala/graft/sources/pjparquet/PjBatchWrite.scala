@@ -723,6 +723,7 @@ final class PjBatchWrite(
     // sort-marker invariant must hold for them too)
     var survivors = 0
     if (!logging) {
+      val emptied = mutable.LinkedHashSet.empty[Path]
       for ((status, relDir, partValues) <- PjBatchWrite.listDataFiles(fs, rootPath)) {
         val name = status.getPath.getName
         val rel = if (relDir.isEmpty) name else s"$relDir/$name"
@@ -736,10 +737,14 @@ final class PjBatchWrite(
             case _: PjWriteMode.ReplaceFiles =>
               replaced.contains(fs.makeQualified(status.getPath))
           }
-        if (drop) PjBatchWrite.deleteWithSidecars(fs, status.getPath)
-        else if (!manifest.contains(rel)) survivors += 1
+        if (drop) {
+          PjBatchWrite.deleteWithSidecars(fs, status.getPath)
+          emptied += status.getPath.getParent
+        } else if (!manifest.contains(rel)) survivors += 1
       }
-      PjBatchWrite.pruneEmptyPartitionDirs(fs, rootPath)
+      // only the directories this commit deleted from: a table-wide prune
+      // races a concurrent writer between its mkdirs and its first file
+      emptied.foreach(PjBatchWrite.pruneEmptyParents(fs, rootPath, _))
     } else {
       // COMMIT-LOG mode: the latest snapshot (not the directory) is the
       // pre-commit truth — retired files of earlier versions still sit on
@@ -943,10 +948,13 @@ final class PjBatchWrite(
     val fs = rootPath.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
     // messages may be partial (tasks that died before reporting): sweep for
     // the job tag instead of trusting the manifest
-    for ((status, _, _) <- PjBatchWrite.listDataFiles(fs, rootPath)
-         if status.getPath.getName.contains(jobUUID))
+    val jobDirs = for ((status, _, _) <- PjBatchWrite.listDataFiles(fs, rootPath)
+         if status.getPath.getName.contains(jobUUID)) yield {
       PjBatchWrite.deleteWithSidecars(fs, status.getPath)
-    PjBatchWrite.pruneEmptyPartitionDirs(fs, rootPath)
+      status.getPath.getParent
+    }
+    // only the directories this job wrote into (see the commit's prune)
+    jobDirs.distinct.foreach(PjBatchWrite.pruneEmptyParents(fs, rootPath, _))
   }
 }
 
@@ -1253,11 +1261,10 @@ private[sources] object PjBatchWrite {
     fs.delete(PjBloom.bloomSidecar(dataFile), false)
   }
 
-  /** Remove `key=value` directories left empty by an overwrite, deepest
-    * first (stock dynamic partition overwrite drops the directory too).
-    */
   /** Delete `dir` and then each parent while it is empty, up to (not
-    * including) `root`.
+    * including) `root` — how a writer or vacuum removes the `key=value`
+    * directories it emptied (stock dynamic partition overwrite drops the
+    * directory too), and no other writer's.
     */
   def pruneEmptyParents(fs: FileSystem, root: Path, dir: Path): Unit = {
     val rootQ = fs.makeQualified(root)
@@ -1270,21 +1277,6 @@ private[sources] object PjBatchWrite {
       if (empty) { fs.delete(d, false); d = d.getParent }
       else done = true
     }
-  }
-
-  def pruneEmptyPartitionDirs(fs: FileSystem, root: Path): Unit = {
-    def prune(dir: Path): Boolean = { // returns "dir is now empty"
-      val children = fs.listStatus(dir)
-      var remaining = children.length
-      children.foreach { c =>
-        if (c.isDirectory && c.getPath.getName.contains("=") && prune(c.getPath)) {
-          fs.delete(c.getPath, false)
-          remaining -= 1
-        }
-      }
-      remaining == 0
-    }
-    if (fs.exists(root)) prune(root) // the root itself is never deleted
   }
 
   /** Evaluate a static-overwrite filter against one file's partition

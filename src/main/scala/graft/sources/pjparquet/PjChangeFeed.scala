@@ -1,8 +1,16 @@
 package graft.sources.pjparquet
 
+import java.util
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.execution.datasources.parquet.PjSparkShims
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Change data feed for commit-log tables — the row-level diff a version
   * introduced, labeled Delta-CDF style with `_change_type` ∈ {insert,
@@ -25,6 +33,11 @@ import org.apache.spark.sql.functions._
   *    `delete`/`insert`. Layout-only rewrites (compact, OPTIMIZE ZORDER)
   *    diff to an EMPTY feed — the data did not change, and the feed
   *    proves it.
+  *
+  * Every committed file is read through the index-spliced [[PjScan]]
+  * ([[PjFeedReader]]), which applies deletion vectors and types partition
+  * columns exactly as table reads do: a "row of a file" above is a LIVE
+  * row.
   *
   * 100 TB shape: work is proportional to the files the version touched,
   * never the table; the diff shuffles once on full-row hash, map-side
@@ -66,7 +79,10 @@ object PjChangeFeed {
 
   /** The changes commit `version` introduced (relative to `version - 1`).
     * Served from the persisted `_pj_cdc/v=<version>/` files when the
-    * commit wrote them, else computed by read-time diff.
+    * commit wrote them, else computed by read-time diff over the table's
+    * read schema at `version`: the removed files' live rows as of
+    * `version - 1` against the added files' live rows as of `version`,
+    * both read through [[PjScan]] ([[PjFeedReader]]).
     */
   def changesAt(spark: SparkSession, root: String, version: Long): DataFrame = {
     val rootPath = new Path(root)
@@ -97,39 +113,36 @@ object PjChangeFeed {
         .entries.map(e => e.path -> e).toMap
     val prevFiles = prevEntries.keySet
     val d = PjCommitLog.delta(fs, rootPath, version)
+    val reader = PjFeedReader.at(spark, root, Some(version))
+    // the version's schema, zero rows: an empty local relation, no scan
+    def noRows = reader.empty(reader.scan(Nil)).withColumn("_change_type", lit(""))
     // ROW TRACKING pure-move short-circuit: an id-preserving rewrite
     // (compaction / OPTIMIZE that materialized every consumed row's
     // stable id) recorded `preservedRows` — the version changed NO row,
     // so the feed is empty at METADATA rate: no multiset diff, no data
-    // file is read (the plan below folds to an empty local relation)
+    // file is read (an empty local relation)
     if (d.preservedRows)
-      return spark.read.format("pjparquet").option("versionAsOf", version.toString)
-        .load(root).where(lit(false)).withColumn("_change_type", lit(""))
-        .withColumn("_commit_version", lit(version))
+      return noRows.withColumn("_commit_version", lit(version))
     val readded = d.add.map(_.path).toSet
     // idempotent replays may re-add an already-live path: not a change —
     // UNLESS the re-add changed the entry's DELETION VECTOR, in which case
     // the change rows are exactly the file's newly-deleted positions.
     // A checkpoint-only version records the full state as `add`.
-    val dvTrans: Seq[(String, Option[String], String)] = d.add.flatMap { e =>
-      prevEntries.get(e.path) match {
-        case Some(p) if e.dv.map(_.path) != p.dv.map(_.path) && e.dv.isDefined =>
-          Some((e.path, p.dv.map(_.path), e.dv.get.path))
-        case _ => None
-      }
+    val dvTrans: Seq[String] = d.add.collect {
+      case e if e.dv.isDefined &&
+          prevEntries.get(e.path).exists(_.dv.map(_.path) != e.dv.map(_.path)) => e.path
     }
-    val added: Seq[(String, Option[String])] =
-      d.add.filterNot(e => prevFiles.contains(e.path)).map(e => e.path -> e.dv.map(_.path))
-    val removed: Seq[(String, Option[String])] =
-      (if (d.fullState) (prevFiles -- readded).toSeq.sorted
-      else d.remove.filter(prevFiles.contains).filterNot(readded.contains))
-        .map(r => r -> prevEntries.get(r).flatMap(_.dv).map(_.path))
+    val added: Seq[String] = d.add.map(_.path).filterNot(prevFiles.contains)
+    val removed: Seq[String] =
+      if (d.fullState) (prevFiles -- readded).toSeq.sorted
+      else d.remove.filter(prevFiles.contains).filterNot(readded.contains)
 
     val (preLabel, postLabel) = labelsOf(d.operation)
 
-    val rootQ = fs.makeQualified(rootPath).toString
-    val pre = readRels(spark, rootQ, removed)
-    val post = readRels(spark, rootQ, added)
+    // removed files are read in the predecessor's layout, with the
+    // predecessor's deletion vectors
+    val pre = if (removed.isEmpty) None else Some(reader.rows(version - 1, removed))
+    val post = if (added.isEmpty) None else Some(reader.rows(version, added))
     val base = (pre, post) match {
       case (None, None) => None
       case (None, Some(p)) => Some(p.withColumn("_change_type", lit(postLabel)))
@@ -141,182 +154,14 @@ object PjChangeFeed {
     // UPDATE/MERGE retired the positions (its new rows carry the post label)
     val dvPart =
       if (dvTrans.isEmpty) None
-      else Some(dvDiffRows(spark, rootQ, dvTrans).withColumn("_change_type", lit(preLabel)))
+      else Some(reader.newlyDeleted(version, dvTrans).withColumn("_change_type", lit(preLabel)))
     val out = (base, dvPart) match {
-      case (None, None) =>
-        // metadata-only commit: schema from the version itself, zero rows
-        spark.read.format("pjparquet").option("versionAsOf", version.toString)
-          .load(root).where(lit(false)).withColumn("_change_type", lit(""))
+      case (None, None) => noRows // metadata-only commit
       case (Some(b), None) => b
       case (None, Some(dv)) => dv
       case (Some(b), Some(dv)) => b.unionByName(dv, allowMissingColumns = true)
     }
     out.withColumn("_commit_version", lit(version))
-  }
-
-  /** Raw scan of table-relative files, each filtered to its LIVE rows (its
-    * deletion vector's positions removed), partition-column types aligned
-    * with the pjparquet read convention. None when `rels` is empty.
-    */
-  private[pjparquet] def readRels(
-      spark: SparkSession, rootQ: String,
-      rels: Seq[(String, Option[String])]): Option[DataFrame] =
-    if (rels.isEmpty) None
-    else {
-      val df0 = readByKeys(spark, rootQ, rels.map(_._1))
-      // the hidden materialized row-id column (id-preserving rewrites) is
-      // engine-internal: never part of a change row, and its presence on
-      // only ONE side of a rewrite diff would break the union
-      val df =
-        if (df0.columns.exists(_.equalsIgnoreCase(PjCommitLog.RowIdColName)))
-          df0.drop(PjCommitLog.RowIdColName)
-        else df0
-      // partition columns come from directory inference; align their
-      // types with the pjparquet convention (LONG when every value
-      // parses, else STRING) so the feed's schema matches table reads
-      val partVals: Map[String, Seq[String]] = rels
-        .flatMap(r => PjBatchWrite.partsOfRel(r._1).toSeq)
-        .groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2) }
-      val aligned = partVals.foldLeft(df) { case (acc, (k, vals)) =>
-        if (!acc.columns.exists(_.equalsIgnoreCase(k))) acc
-        else {
-          val allLong = vals.nonEmpty &&
-            vals.forall(v => scala.util.Try(v.toLong).isSuccess)
-          acc.withColumn(k, col(k).cast(if (allLong) "long" else "string"))
-        }
-      }
-      Some(filterDeleted(spark, rootQ, aligned, rels))
-    }
-
-  /** Drop each file's deletion-vector positions from a raw multi-file scan
-    * (no-op when no file carries a vector): `_metadata.file_path` +
-    * `_metadata.row_index` resolve the row's (file, position), and a
-    * broadcast (canonical path → vector) lookup decides membership with
-    * executor-cached decoded vectors.
-    */
-  private def filterDeleted(
-      spark: SparkSession, rootQ: String, df: DataFrame,
-      rels: Seq[(String, Option[String])]): DataFrame =
-    if (rels.forall(_._2.isEmpty)) df
-    else {
-      val rootKey = canonRootKey(rootQ)
-      val byPath: Map[String, String] = rels.collect {
-        case (rel, Some(dvRel)) => keyOf(rootKey, rel) -> absOf(rootQ, dvRel)
-      }.toMap
-      val bc = spark.sparkContext.broadcast(byPath)
-      val shipped = PjHadoopConf.ship(spark)
-      val live = udf((file: String, idx: Long) => {
-        bc.value.get(canonScanPath(file)) match {
-          case Some(dvAbs) =>
-            !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), dvAbs), idx)
-          case None => true
-        }
-      })
-      df.withColumn("_pj_mf", col("_metadata.file_path"))
-        .withColumn("_pj_mi", col("_metadata.row_index"))
-        .filter(live(col("_pj_mf"), col("_pj_mi")))
-        .drop("_pj_mf", "_pj_mi")
-    }
-
-  /** The rows a deletion-vector transition deleted: each file's positions
-    * in (new vector ∖ old vector), read from the file's bytes — labeled by
-    * the caller. `trans` = (rel, old vector rel if any, new vector rel).
-    */
-  private def dvDiffRows(
-      spark: SparkSession, rootQ: String,
-      trans: Seq[(String, Option[String], String)]): DataFrame = {
-    val rootKey = canonRootKey(rootQ)
-    val byPath: Map[String, (String, String)] = trans.map { case (rel, oldDv, newDv) =>
-      keyOf(rootKey, rel) -> ((oldDv.map(absOf(rootQ, _)).orNull, absOf(rootQ, newDv)))
-    }.toMap
-    val bc = spark.sparkContext.broadcast(byPath)
-    val shipped = PjHadoopConf.ship(spark)
-    val newlyDeleted = udf((file: String, idx: Long) => {
-      bc.value.get(canonScanPath(file)) match {
-        case Some((oldDv, newDv)) =>
-          PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), newDv), idx) &&
-            (oldDv == null ||
-              !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), oldDv), idx))
-        case None => false
-      }
-    })
-    val df0 = readByKeys(spark, rootQ, trans.map(_._1))
-    // the hidden materialized row-id column (id-preserving rewrites) is
-    // engine-internal: never part of a change row — a DV transition on a
-    // rewritten (row-id-carrying) file would otherwise emit a feed branch
-    // whose arity differs from every other branch and break the union
-    // (found by PjConcurrencyFuzzSpec's CDF lane)
-    val df =
-      if (df0.columns.exists(_.equalsIgnoreCase(PjCommitLog.RowIdColName)))
-        df0.drop(PjCommitLog.RowIdColName)
-      else df0
-    val partVals: Map[String, Seq[String]] = trans
-      .flatMap(t => PjBatchWrite.partsOfRel(t._1).toSeq)
-      .groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2) }
-    val aligned = partVals.foldLeft(df) { case (acc, (k, vals)) =>
-      if (!acc.columns.exists(_.equalsIgnoreCase(k))) acc
-      else {
-        val allLong = vals.nonEmpty &&
-          vals.forall(v => scala.util.Try(v.toLong).isSuccess)
-        acc.withColumn(k, col(k).cast(if (allLong) "long" else "string"))
-      }
-    }
-    aligned
-      .withColumn("_pj_mf", col("_metadata.file_path"))
-      .withColumn("_pj_mi", col("_metadata.row_index"))
-      .filter(newlyDeleted(col("_pj_mf"), col("_pj_mi")))
-      .drop("_pj_mf", "_pj_mi")
-  }
-
-  private def canonRootKey(rootQ: String): String =
-    try {
-      val u = new java.net.URI(rootQ)
-      Option(u.getAuthority).getOrElse("") + Option(u.getPath).getOrElse(rootQ)
-    } catch { case _: java.net.URISyntaxException => rootQ }
-
-  /** Absolute URI of a snapshot-membership key ([[PjCommitLog.relOrAbs]]):
-    * SHALLOW-CLONE entries are already absolute and adopt the table
-    * root's scheme/authority; everything else joins under the root.
-    */
-  private def absOf(rootQ: String, rel: String): String =
-    if (rel.startsWith("/")) new Path(new Path(rootQ), rel).toString
-    else s"$rootQ/$rel"
-
-  /** Broadcast-map key for a membership key — must equal
-    * [[canonScanPath]] of the file's scan-rendered path.
-    */
-  private def keyOf(rootKey: String, rel: String): String =
-    if (rel.startsWith("/")) rel else s"$rootKey/$rel"
-
-  /** Raw multi-file read over membership keys that tolerates
-    * clone-external (absolute) entries: files group by the base path
-    * that makes their Hive partition inference work (the table root for
-    * relative keys; the prefix above the first `key=value` segment for
-    * absolute ones), each group reads with its own `basePath`, inferred
-    * partition columns normalize to STRING, and groups union by name —
-    * the callers' value-driven alignment then settles LONG vs STRING.
-    */
-  private def readByKeys(
-      spark: SparkSession, rootQ: String, rels: Seq[String]): DataFrame = {
-    def baseOf(rel: String): String =
-      if (!rel.startsWith("/")) rootQ
-      else {
-        val segs = rel.split("/").toSeq
-        val i = segs.indexWhere(_.contains("="))
-        val prefix = if (i < 0) segs.dropRight(1) else segs.take(i)
-        new Path(new Path(rootQ), prefix.mkString("/")).toString
-      }
-    val groups = rels.groupBy(baseOf).toSeq.sortBy(_._1)
-    groups.map { case (base, group) =>
-      val df = spark.read.option("basePath", base)
-        .option("pjAutoSubstitute", "false") // raw parquet: _metadata needed
-        .parquet(group.map(absOf(rootQ, _)): _*)
-      val partKeys = group.flatMap(r => PjBatchWrite.partsOfRel(r).keySet).distinct
-      partKeys.foldLeft(df)((acc, k) =>
-        if (acc.columns.exists(_.equalsIgnoreCase(k)))
-          acc.withColumn(k, col(k).cast("string"))
-        else acc)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** What one commit contributes to the feed — the planning unit shared by
@@ -327,14 +172,16 @@ object PjChangeFeed {
   private[pjparquet] sealed trait VersionClass { def version: Long }
   /** Change rows persisted at commit time under `_pj_cdc/v=<version>/`. */
   private[pjparquet] final case class Persisted(version: Long) extends VersionClass
-  /** Every LIVE row of `rels` (each with its deletion vector, if any)
-    * enters the feed labeled `label` (pure add).
+  /** Every LIVE row of `rels` as of `version` enters the feed labeled
+    * `label` (pure add).
     */
   private[pjparquet] final case class PureAdd(
-      version: Long, rels: Seq[(String, Option[String])], label: String) extends VersionClass
-  /** Every LIVE row of `rels` enters the feed labeled `label` (pure remove). */
+      version: Long, rels: Seq[String], label: String) extends VersionClass
+  /** Every LIVE row of `rels` as of `version - 1` enters the feed labeled
+    * `label` (pure remove).
+    */
   private[pjparquet] final case class PureRemove(
-      version: Long, rels: Seq[(String, Option[String])], label: String) extends VersionClass
+      version: Long, rels: Seq[String], label: String) extends VersionClass
   /** Copy-on-write rewrite without persisted change files: needs the
     * read-time multiset diff ([[changesAt]]).
     */
@@ -389,12 +236,10 @@ object PjChangeFeed {
             live.contains(e.path) && live(e.path) != e.dv.map(_.path))
           // for a checkpoint-only version d.add IS the post state, so the
           // same filterNot(live) yields exactly the truly-new files
-          val added = d.add.filterNot(e => live.contains(e.path))
-            .map(e => e.path -> e.dv.map(_.path))
-          val removed: Seq[(String, Option[String])] =
-            (if (d.fullState) (live.keySet -- readded).toSeq.sorted
-            else d.remove.filter(live.contains).filterNot(readded.contains))
-              .map(r => r -> live(r))
+          val added = d.add.map(_.path).filterNot(live.contains)
+          val removed: Seq[String] =
+            if (d.fullState) (live.keySet -- readded).toSeq.sorted
+            else d.remove.filter(live.contains).filterNot(readded.contains)
           val (preL, postL) = labelsOf(d.operation)
           if (dvTrans) Rewrite(v)
           else if (added.isEmpty && removed.isEmpty) MetadataOnly(v)
@@ -416,131 +261,55 @@ object PjChangeFeed {
     case _ => ("delete", "insert")
   }
 
+  /** The files a classified range reads ([[PjFeedReader.planRange]]):
+    * data files carrying label, version and timestamp constants, change
+    * files carrying version and timestamp constants, and the rewrite
+    * versions that still need a [[changesAt]] diff.
+    */
+  private[pjparquet] final case class RangePlan(
+      data: Seq[PjFile], cdc: Seq[PjFile], rewrites: Seq[Long])
+
   /** The feed over `[fromVersion, toVersion]` — the batch CDF read
-    * (`startingVersion`/`endingVersion` semantics) — as ONE bounded plan:
+    * (`startingVersion`/`endingVersion` semantics) — as ONE bounded plan
+    * over the table's head read schema, planned by the same
+    * [[PjFeedReader.planRange]] as the streaming source:
     *
-    *  - all PERSISTED versions read as one partition-pruned scan over
-    *    `_pj_cdc/v=*` (the `v` directory key carries `_commit_version`);
-    *  - all PURE-ADD versions read as one scan over every added file, the
-    *    per-file label/version attached from a broadcast path lookup;
-    *  - all PURE-REMOVE versions likewise;
+    *  - all PURE-ADD and PURE-REMOVE versions read as one [[PjScan]] over
+    *    their files, each split carrying its change type, commit version
+    *    and commit timestamp as typed constants;
+    *  - all PERSISTED versions read as one scan over their `_pj_cdc/v=N`
+    *    change files, version and timestamp again constants;
     *  - only REWRITE versions without persisted change files union an
     *    individual multiset-diff subplan each (the one class whose rows
-    *    genuinely need the engine to diff).
+    *    genuinely need the engine to diff), the timestamp a literal.
     *
     * A year of streaming epochs (thousands of append versions) therefore
     * plans as ~one scan, not one union branch per version.
     */
-  def changes(spark: SparkSession, root: String, fromVersion: Long, toVersion: Long): DataFrame = {
+  def changes(spark: SparkSession, root: String, fromVersion: Long, toVersion: Long): DataFrame =
+    changes(PjFeedReader.at(spark, root, None), fromVersion, toVersion)
+
+  private[pjparquet] def changes(
+      reader: PjFeedReader, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"pjparquet: fromVersion $fromVersion > toVersion $toVersion")
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val rootPath = new Path(reader.root)
+    val fs = rootPath.getFileSystem(reader.spark.sessionState.newHadoopConf())
     val all = PjCommitLog.versions(fs, rootPath)
     val vs = all.filter(v => v >= fromVersion && v <= toVersion)
     require(vs.nonEmpty, s"pjparquet: no versions in [$fromVersion, $toVersion]")
-    val classes = classifyRange(fs, rootPath, vs, all)
-
-    val persisted = classes.collect { case Persisted(v) => v }
-    val adds = classes.collect { case a: PureAdd => a }
-    val removes = classes.collect { case r: PureRemove => r }
-    val rewrites = classes.collect { case Rewrite(v) => v }
-
-    val rootQ = fs.makeQualified(rootPath).toString
-    val parts = Seq.newBuilder[DataFrame]
-
-    if (persisted.nonEmpty) {
-      // one scan, `v=` partition-pruned to the range — UNLESS the data
-      // itself has a column named `v`, which would collide with the
-      // directory key: fall back to per-version leaf-dir scans there
-      val tableHasV = spark.read.format("pjparquet")
-        .option("versionAsOf", persisted.head.toString).load(root)
-        .columns.exists(_.equalsIgnoreCase("v"))
-      if (tableHasV)
-        persisted.foreach(v => parts += changesAt(spark, root, v))
-      else {
-        val base = new Path(rootPath, "_pj_cdc")
-        val baseQ = fs.makeQualified(base).toString
-        parts += spark.read.option("basePath", baseQ)
-          .parquet(persisted.map(v => s"$baseQ/v=$v"): _*)
-          .withColumn("_commit_version", col("v").cast("long"))
-          .drop("v")
-      }
-    }
-    if (adds.nonEmpty)
-      parts += labeledScan(spark, rootQ,
-        adds.flatMap(a => a.rels.map { case (rel, dv) => (rel, a.version, a.label, dv) }))
-    if (removes.nonEmpty)
-      parts += labeledScan(spark, rootQ,
-        removes.flatMap(r => r.rels.map { case (rel, dv) => (rel, r.version, r.label, dv) }))
-    rewrites.foreach(v => parts += changesAt(spark, root, v))
-
-    val built = parts.result()
-    if (built.isEmpty) changesAt(spark, root, vs.head) // all metadata-only: typed empty feed
-    // allowMissingColumns: a column ADDed mid-range exists only in the
-    // branches whose commits postdate it — earlier branches read null
-    else built.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Canonical form of the scan's `input_file_name` for the broadcast
-    * lookup: ONE URI decode yields the raw on-disk path (`file:///x`,
-    * `file:/x` and plain `/x` all canonicalize identically; a dir named
-    * `p=a%20b` — the writer's URL-encoded partition value — arrives as
-    * `p=a%2520b` and decodes back to the literal dir name).
-    */
-  private[pjparquet] def canonScanPath(s: String): String =
-    try {
-      val u = new java.net.URI(s)
-      Option(u.getAuthority).getOrElse("") + Option(u.getPath).getOrElse(s)
-    } catch { case _: java.net.URISyntaxException => s }
-
-  /** One scan over many versions' files, each row labeled with its file's
-    * commit version and change type from a broadcast (path → (version,
-    * label)) map — constant per file, resolved at read time from the
-    * scan's own input file name. Both sides canonicalize to the RAW
-    * on-disk path: snapshot rels already ARE raw directory/file names, so
-    * the map key is authority + root path + rel verbatim (no decode — a
-    * `%20` in a rel is a literal three-character dir-name substring), and
-    * the scan side decodes its URI-encoded file name exactly once. An
-    * unmapped file fails the task loudly (it would mean the scan read a
-    * file planning never labeled).
-    */
-  private def labeledScan(
-      spark: SparkSession, rootQ: String,
-      fileMeta: Seq[(String, Long, String, Option[String])]): DataFrame = {
-    val rels = fileMeta.map(_._1)
-    val rootKey = canonRootKey(rootQ)
-    val byPath: Map[String, (Long, String)] =
-      fileMeta.map { case (rel, v, l, _) => keyOf(rootKey, rel) -> ((v, l)) }.toMap
-    val bc = spark.sparkContext.broadcast(byPath)
-    val metaU = udf((p: String) => bc.value.getOrElse(canonScanPath(p),
-      throw new graft.core.PJException(
-        s"pjparquet: change feed read an input file planning never labeled: $p")))
-    val df1 = readByKeys(spark, rootQ, rels)
-    // engine-internal materialized row ids never enter the feed (same
-    // drop as readRels/dvDiffRows — a rewritten file in a pure-add or
-    // pure-remove batch carries the hidden column)
-    val df =
-      if (df1.columns.exists(_.equalsIgnoreCase(PjCommitLog.RowIdColName)))
-        df1.drop(PjCommitLog.RowIdColName)
-      else df1
-    // the same partition-column type alignment as the single-version path
-    val partVals: Map[String, Seq[String]] = rels
-      .flatMap(rel => PjBatchWrite.partsOfRel(rel).toSeq)
-      .groupBy(_._1).map { case (k, vs) => k -> vs.flatMap(_._2) }
-    val aligned = partVals.foldLeft(df) { case (acc, (k, vals)) =>
-      if (!acc.columns.exists(_.equalsIgnoreCase(k))) acc
-      else {
-        val allLong = vals.nonEmpty &&
-          vals.forall(v => scala.util.Try(v.toLong).isSuccess)
-        acc.withColumn(k, col(k).cast(if (allLong) "long" else "string"))
-      }
-    }
-    filterDeleted(spark, rootQ, aligned, fileMeta.map(m => (m._1, m._4)))
-      .withColumn("_pj_m", metaU(input_file_name()))
-      .withColumn("_change_type", col("_pj_m._2"))
-      .withColumn("_commit_version", col("_pj_m._1"))
-      .drop("_pj_m")
+    val plan = reader.planRange(classifyRange(fs, rootPath, vs, all))
+    val parts =
+      (if (plan.data.isEmpty) Nil else Seq(reader.frame(reader.dataScan(plan.data)))) ++
+        (if (plan.cdc.isEmpty) Nil else Seq(reader.frame(reader.cdcScan(plan.cdc)))) ++
+        plan.rewrites.map(v => changesAt(reader.spark, reader.root, v)
+          .withColumn(PjChangeFeedTable.CommitTimestampCol,
+            timestamp_millis(lit(reader.commitMillis(v)))))
+    // all metadata-only: the typed empty feed
+    if (parts.isEmpty) reader.empty(reader.dataScan(Nil))
+    // allowMissingColumns: a column ADDed after a rewrite version is
+    // missing from that version's diff branch — it reads null there
+    else parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** EXCEPT ALL in both directions, labeled: rows with more occurrences in
@@ -573,4 +342,200 @@ object PjChangeFeed {
       .withColumn("_rep", explode(array_repeat(lit(1), mult)))
       .drop("_n_pre", "_n_post", "_mult", "_rep")
   }
+}
+
+/** The one reader of committed data files for the change feed and clone
+  * materialization: every read is a [[PjScan]] over the files
+  * [[filesOfVersion]] resolves from the commit log, so deletion vectors,
+  * partition typing, column mapping and the hidden row-id column are the
+  * scan's business, exactly as in table reads. `table` fixes the read
+  * schema: its data columns, then its partition columns.
+  */
+private[pjparquet] final class PjFeedReader(
+    val spark: SparkSession, val root: String, table: PjParquetTable) {
+  private val conf = spark.sessionState.newHadoopConf()
+  private val rootPath = new Path(root)
+  private val fs = rootPath.getFileSystem(conf)
+
+  /** The table's partition columns, typed as table reads type them. */
+  val partSchema: StructType = table.layout.partitionSchema
+  private val dataSchema = StructType(table.schema.fields.filterNot(f =>
+    partSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+  private val fieldIds = PjColumnMapping.fieldIdsByPhysical(table.layout.dataSchema)
+
+  /** Commit timestamp of `version`, epoch millis. */
+  def commitMillis(version: Long): Long = PjCommitLog.header(fs, rootPath, version).ts
+
+  /** Per-split constants for a version's rows: the commit version and its
+    * timestamp (epoch MICROS — the typed-constant machinery's timestamp
+    * representation).
+    */
+  private def versionConsts(version: Long): Seq[String] =
+    Seq(version.toString, (commitMillis(version) * 1000L).toString)
+
+  /** The table's files at `version`, restricted to the snapshot keys
+    * `rels`, each with its deletion vector as of `version` and its
+    * partition values realigned by name to [[partSchema]] (a key the
+    * version's layout lacks reads null). Index bytes ride the (cached)
+    * snapshot resolution; files in `rels` but not in the layout are
+    * zero-row-group (empty) parquet and contribute no rows.
+    */
+  def filesOfVersion(version: Long, rels: Seq[String]): Seq[PjFile] = {
+    if (rels.isEmpty) return Nil
+    val layout = PjParquetTable.resolveFiles(
+      root, conf, autogen = true, mergeSchema = false, versionAsOf = Some(version))
+    val want = rels.toSet
+    val keys = layout.partitionSchema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT))
+    val at = partSchema.fieldNames.map(n => keys.indexOf(n.toLowerCase(java.util.Locale.ROOT)))
+    layout.files
+      .filter(f => want.contains(PjCommitLog.relOrAbs(fs, rootPath, new Path(f.path))))
+      .map(f => f.copy(partitionValues = at.toSeq.map(i =>
+        if (i < 0) PjParquetTable.HiveNullPartition else f.partitionValues(i))))
+  }
+
+  /** The files of persisted change directory `_pj_cdc/v=<version>/`; an
+    * empty diff persisted as zero-row-group parquet has none.
+    */
+  private def changeFiles(version: Long): Seq[PjFile] =
+    try PjParquetTable.resolveFiles(
+      PjChangeFeed.cdcDir(rootPath, version).toString, conf, autogen = true).files
+    catch {
+      case e: graft.core.PJException if e.getMessage.contains("zero-row-group") => Nil
+    }
+
+  /** The files a classified range reads — the one planner of the batch
+    * feed and the streaming source:
+    *
+    *  - a PURE-ADD version's added files as of `v`;
+    *  - a PURE-REMOVE version's removed files as of `v - 1`: they belong
+    *    to the predecessor's layout (still on disk until vacuum; vacuum
+    *    past an un-consumed stream cursor is the operator error the age
+    *    guard exists for), with the predecessor's deletion vectors;
+    *  - a PERSISTED version's `_pj_cdc/v=N` change files;
+    *  - nothing for a METADATA-ONLY version;
+    *  - a REWRITE version without change files: returned for a diff.
+    *
+    * Data files carry label, version and timestamp as per-split
+    * constants ([[dataScan]]); change files carry version and timestamp
+    * ([[cdcScan]]).
+    */
+  def planRange(classes: Seq[PjChangeFeed.VersionClass]): PjChangeFeed.RangePlan = {
+    val data = Seq.newBuilder[PjFile]
+    val cdc = Seq.newBuilder[PjFile]
+    val rewrites = Seq.newBuilder[Long]
+    def labeled(files: Seq[PjFile], label: String, v: Long): Seq[PjFile] = {
+      val consts = label +: versionConsts(v)
+      files.map(f => f.copy(partitionValues = f.partitionValues ++ consts))
+    }
+    classes.foreach {
+      case PjChangeFeed.PureAdd(v, rels, label) =>
+        data ++= labeled(filesOfVersion(v, rels), label, v)
+      case PjChangeFeed.PureRemove(v, rels, label) =>
+        data ++= labeled(filesOfVersion(v - 1, rels), label, v)
+      case PjChangeFeed.Persisted(v) =>
+        val consts = versionConsts(v)
+        cdc ++= changeFiles(v).map(f => f.copy(partitionValues = consts))
+      case PjChangeFeed.Rewrite(v) => rewrites += v
+      case _: PjChangeFeed.MetadataOnly => ()
+    }
+    PjChangeFeed.RangePlan(data.result(), cdc.result(), rewrites.result())
+  }
+
+  /** A scan of `files`: data columns, partition columns, then `consts` —
+    * typed per-split constants each file carries after its partition
+    * values — and, with `withPos`, each row's file position (`_pos`).
+    */
+  def scan(files: Seq[PjFile], consts: Seq[StructField] = Nil,
+      withPos: Boolean = false): PjScan = {
+    val parts = StructType(partSchema.fields ++ consts)
+    val required =
+      if (withPos) parts.add(PjParquetTable.PosMetaName, LongType, nullable = false) else parts
+    new PjScan(files, table.physicalFileSchema, dataSchema, parts, required, None,
+      nameMap = table.nameMapping, fieldIds = fieldIds)
+  }
+
+  /** Data files labeled per split: data…, partition…, `_change_type`,
+    * `_commit_version`, `_commit_timestamp`.
+    */
+  def dataScan(files: Seq[PjFile]): PjScan = scan(files, PjChangeFeedTable.cdfFields)
+
+  /** Persisted change files (written by [[PjChangeFeed.persistCommitDiff]]
+    * with partition columns and `_change_type` as file columns), in the
+    * same column order as [[dataScan]].
+    */
+  def cdcScan(files: Seq[PjFile]): PjScan = {
+    val fileSchema = StructType(dataSchema.fields ++ partSchema.fields :+
+      PjChangeFeedTable.cdfFields.head)
+    val consts = StructType(PjChangeFeedTable.cdfFields.tail)
+    new PjScan(files, fileSchema, fileSchema, consts, consts, None)
+  }
+
+  /** The rows of `scan` as a DataFrame over a DSv2 relation whose scan
+    * is this one, rebuilt per query (a scan keeps runtime-filter state).
+    */
+  def frame(scan: => PjScan): DataFrame =
+    PjSparkShims.dataFrame(spark,
+      DataSourceV2Relation.create(new PjPlannedTable(root, () => scan), None, None))
+
+  /** `scan`'s columns with no rows: an empty local relation, no scan. */
+  def empty(scan: PjScan): DataFrame =
+    spark.createDataFrame(util.Collections.emptyList[Row](), scan.readSchema())
+
+  /** The live rows of `rels` as of `version`. */
+  def rows(version: Long, rels: Seq[String]): DataFrame = {
+    val files = filesOfVersion(version, rels)
+    frame(scan(files))
+  }
+
+  /** `df` with its columns renamed to the names the data files store
+    * (column mapping) — what a rewrite of the rows writes.
+    */
+  def physical(df: DataFrame): DataFrame =
+    if (table.nameMapping.isEmpty) df
+    else df.select(df.columns.toSeq.map(c =>
+      col(c).as(PjColumnMapping.toPhysical(table.nameMapping, c))): _*)
+
+  /** The rows `version` deleted from `rels` through deletion vectors: each
+    * file's live rows as of `version - 1` whose positions its vector at
+    * `version` holds. The new vector's path rides each split as a
+    * constant.
+    */
+  def newlyDeleted(version: Long, rels: Seq[String]): DataFrame = {
+    val newDv: Map[String, String] =
+      filesOfVersion(version, rels).flatMap(f => f.dv.map(dv => f.path -> dv._1)).toMap
+    val files = filesOfVersion(version - 1, rels).flatMap(f =>
+      newDv.get(f.path).map(dv => f.copy(partitionValues = f.partitionValues :+ dv)))
+    val shipped = PjHadoopConf.ship(spark)
+    val inNewDv = udf((dv: String, pos: Long) =>
+      PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), dv), pos))
+    val dvCol = "_pj_new_dv"
+    frame(scan(files, Seq(StructField(dvCol, StringType, nullable = false)), withPos = true))
+      .filter(inNewDv(col(dvCol), col(PjParquetTable.PosMetaName)))
+      .drop(dvCol, PjParquetTable.PosMetaName)
+  }
+}
+
+private[pjparquet] object PjFeedReader {
+  /** A reader over the table's read schema at `version` (head when None). */
+  def at(spark: SparkSession, root: String, version: Option[Long]): PjFeedReader = {
+    val layout = PjParquetTable.resolveFiles(
+      root, spark.sessionState.newHadoopConf(), autogen = true, versionAsOf = version)
+    new PjFeedReader(spark, root,
+      new PjParquetTable(layout, new CaseInsensitiveStringMap(util.Map.of("path", root))))
+  }
+}
+
+/** A table whose one scan was planned before Spark sees it: the feed reads
+  * exactly the files the commit log chose, so there is nothing to push
+  * down. `scan` builds a fresh [[PjScan]] for each query.
+  */
+private[pjparquet] final class PjPlannedTable(root: String, scan: () => PjScan)
+    extends Table with SupportsRead {
+  private lazy val readSchema = scan().readSchema()
+  override def name(): String = s"pjparquet_feed($root)"
+  override def schema(): StructType = readSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder { override def build(): Scan = scan() }
 }

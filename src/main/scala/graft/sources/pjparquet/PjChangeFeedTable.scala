@@ -36,9 +36,9 @@ import graft.core.PJException
   * Schema = the table's read schema + `_change_type` (string) +
   * `_commit_version` (long). The BATCH read plans the whole version range
   * server-side in ONE bounded plan ([[PjChangeFeed.changes]]: one scan
-  * over persisted change partitions, one over all pure-add files, one
-  * over all pure-remove files, plus an individual diff subplan only for
-  * un-persisted rewrites). The STREAMING read's offsets are COMMIT
+  * over all pure-add and pure-remove files, one over persisted change
+  * files, plus an individual diff subplan only for un-persisted
+  * rewrites). The STREAMING read's offsets are COMMIT
   * VERSIONS — each version is delivered exactly once, restart-safe from
   * the checkpointed version cursor, independent of file mtimes
   * ([[PjCdfMicroBatchStream]]).
@@ -106,7 +106,7 @@ object PjChangeFeedTable {
           s"pjparquet: $key must be a positive number, got '$v'")
         n
       }
-    new PjChangeFeedTable(path, starting, ending, base.schema,
+    new PjChangeFeedTable(path, starting, ending, base,
       StructType(base.schema.fields ++ cdfFields),
       posLong("maxVersionsPerTrigger"),
       posLong("maxFilesPerTrigger"),
@@ -118,7 +118,7 @@ class PjChangeFeedTable(
     path: String,
     startingVersion: Option[Long],
     endingVersion: Option[Long],
-    baseSchema: StructType,
+    base: PjParquetTable,
     cdfSchema: StructType,
     maxVersionsPerTrigger: Option[Long] = None,
     maxFilesPerTrigger: Option[Long] = None,
@@ -137,7 +137,7 @@ class PjChangeFeedTable(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan =
-        new PjChangeFeedScan(path, startingVersion, endingVersion, baseSchema,
+        new PjChangeFeedScan(path, startingVersion, endingVersion, base,
           cdfSchema, maxVersionsPerTrigger, maxFilesPerTrigger, maxBytesPerTrigger)
     }
 }
@@ -152,7 +152,7 @@ private[pjparquet] class PjChangeFeedScan(
     path: String,
     startingVersion: Option[Long],
     endingVersion: Option[Long],
-    baseSchema: StructType,
+    base: PjParquetTable,
     cdfSchema: StructType,
     maxVersionsPerTrigger: Option[Long] = None,
     maxFilesPerTrigger: Option[Long] = None,
@@ -181,23 +181,12 @@ private[pjparquet] class PjChangeFeedScan(
           throw new PJException(
             "pjparquet: batch readChangeFeed requires startingVersion or startingTimestamp"))
         val to = endingVersion.getOrElse(versions.last)
-        // `_commit_timestamp` attaches via ONE broadcast join against the
-        // tiny (version, ts) header table — constant plan size however
-        // long the range is
-        val tsRows = versions.filter(v => v >= from && v <= to)
-          .map(v => (v, PjCommitLog.header(fs, rootPath, v).ts))
-        val tsDf = spark.createDataFrame(tsRows)
-          .toDF(PjChangeFeedTable.CommitVersionCol, "_pj_ts_ms")
-        val joined = PjChangeFeed.changes(spark, path, from, to)
-          .join(org.apache.spark.sql.functions.broadcast(tsDf),
-            PjChangeFeedTable.CommitVersionCol)
-          .withColumn(PjChangeFeedTable.CommitTimestampCol,
-            org.apache.spark.sql.functions.timestamp_millis(col("_pj_ts_ms")))
-        // align to the HEAD schema: a column ADDed mid-range is absent
-        // from change rows of commits that predate it — those read null,
+        val feed = PjChangeFeed.changes(new PjFeedReader(spark, path, base), from, to)
+        // align to the HEAD schema: a column ADDed after a rewrite version
+        // is absent from that version's diff rows — those read null,
         // exactly like a table read of the old files
-        joined.select(cdfSchema.fields.toIndexedSeq.map { f =>
-          if (joined.columns.exists(_.equalsIgnoreCase(f.name)))
+        feed.select(cdfSchema.fields.toIndexedSeq.map { f =>
+          if (feed.columns.exists(_.equalsIgnoreCase(f.name)))
             col(f.name).cast(f.dataType).as(f.name)
           else org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name)
         }: _*)
@@ -208,7 +197,7 @@ private[pjparquet] class PjChangeFeedScan(
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new PjCdfMicroBatchStream(path, startingVersion, baseSchema,
+    new PjCdfMicroBatchStream(path, startingVersion, base,
       maxVersionsPerTrigger, maxFilesPerTrigger, maxBytesPerTrigger)
 }
 
@@ -218,8 +207,9 @@ private[pjparquet] class PjChangeFeedScan(
   * replans the identical rows from the identical version cursor (no
   * file-mtime games, no seen-set).
   *
-  * Each micro-batch covers the versions `(start, end]`, planned by
-  * [[PjChangeFeed.classifyRange]]:
+  * Each micro-batch covers the versions `(start, end]`, classified by
+  * [[PjChangeFeed.classifyRange]] and planned by the batch feed's
+  * [[PjFeedReader.planRange]]:
   *
   *  - pure-ADD / pure-REMOVE versions read their data files DIRECTLY
   *    through the index-spliced [[PjScan]] machinery — zero write
@@ -235,7 +225,7 @@ private[pjparquet] class PjChangeFeedScan(
 private[pjparquet] class PjCdfMicroBatchStream(
     path: String,
     startingVersion: Option[Long],
-    baseSchema: StructType,
+    base: PjParquetTable,
     /** Admission control: at most this many commit versions per
       * micro-batch — a year-long backlog drains as bounded batches
       * instead of one giant first batch (composes with AvailableNow,
@@ -326,47 +316,10 @@ private[pjparquet] class PjCdfMicroBatchStream(
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  // --------------------------------------------------------------- schemas
-
-  /** The scan shapes: data-file splits type the feed columns as extra
-    * "partition" constants; change-file splits carry `_change_type` as a
-    * data column and only the version as a constant. Both produce columns
-    * in the same order: data…, table partition…, _change_type,
-    * _commit_version.
+  /** The same reader and planner as the batch feed, over the table's
+    * read schema.
     */
-  private lazy val tablePartSchema: StructType = {
-    val layout = PjParquetTable.resolveFiles(path, hadoopConf, autogen = true)
-    layout.partitionSchema
-  }
-  private lazy val dataSchema: StructType =
-    StructType(baseSchema.fields.filterNot(f =>
-      tablePartSchema.fieldNames.exists(_.equalsIgnoreCase(f.name))))
-  private lazy val dataPartSchema: StructType =
-    StructType(tablePartSchema.fields ++ PjChangeFeedTable.cdfFields)
-  private lazy val cdcFileSchema: StructType =
-    StructType(dataSchema.fields ++ tablePartSchema.fields :+
-      StructField(PjChangeFeedTable.ChangeTypeCol, StringType, nullable = false))
-  private lazy val cdcPartSchema: StructType =
-    StructType(Seq(
-      StructField(PjChangeFeedTable.CommitVersionCol, LongType, nullable = false),
-      StructField(PjChangeFeedTable.CommitTimestampCol,
-        org.apache.spark.sql.types.TimestampType, nullable = false)))
-
-  /** Per-split constants for a version's rows: the commit version and its
-    * timestamp (epoch MICROS — the typed-constant machinery's timestamp
-    * representation).
-    */
-  private def versionConsts(v: Long): Seq[String] = {
-    val tsMicros = PjCommitLog.header(fs, rootPath, v).ts * 1000L
-    Seq(v.toString, tsMicros.toString)
-  }
-
-  private def dataScan(files: Seq[PjFile]): PjScan =
-    new PjScan(files, dataSchema, dataSchema, dataPartSchema, dataPartSchema, None)
-  private def cdcScan(files: Seq[PjFile]): PjScan =
-    new PjScan(files, cdcFileSchema, cdcFileSchema, cdcPartSchema, cdcPartSchema, None)
-
-  // -------------------------------------------------------------- planning
+  private lazy val reader = new PjFeedReader(spark, path, base)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PjCdfOffset].version
@@ -391,62 +344,17 @@ private[pjparquet] class PjCdfMicroBatchStream(
         PjChangeFeed.Persisted(v)
       case c => c
     }
-    val conf = hadoopConf
-    val dataFiles = Seq.newBuilder[PjFile]
-    val cdcFiles = Seq.newBuilder[PjFile]
-    resolved.foreach {
-      case PjChangeFeed.PureAdd(v, rels, label) =>
-        // the snapshot resolution at `v` attaches each file's deletion
-        // vector as of that version, so the scan reads live rows only
-        dataFiles ++= filesOfVersion(v, rels.map(_._1), conf)
-          .map(f => f.copy(partitionValues =
-            f.partitionValues ++ (label +: versionConsts(v))))
-      case PjChangeFeed.PureRemove(v, rels, label) =>
-        // removed files belong to the PREDECESSOR's layout (still on disk
-        // until vacuum; vacuum past an un-consumed stream cursor is the
-        // operator error the age guard exists for) — with the
-        // predecessor's deletion vectors applied
-        dataFiles ++= filesOfVersion(v - 1, rels.map(_._1), conf)
-          .map(f => f.copy(partitionValues =
-            f.partitionValues ++ (label +: versionConsts(v))))
-      case PjChangeFeed.Persisted(v) =>
-        val dir = PjChangeFeed.cdcDir(rootPath, v)
-        val layout = PjParquetTable.resolveFiles(dir.toString, conf, autogen = true)
-        cdcFiles ++= layout.files.map(f => f.copy(partitionValues = versionConsts(v)))
-      case _: PjChangeFeed.MetadataOnly => ()
-      case r: PjChangeFeed.Rewrite =>
-        throw new IllegalStateException(s"unresolved rewrite ${r.version}")
-    }
-    val a = dataFiles.result()
-    val b = cdcFiles.result()
-    (if (a.isEmpty) Array.empty[InputPartition]
-     else dataScan(a).planInputPartitions().map(PjCdfPartition(_, cdc = false))) ++
-      (if (b.isEmpty) Array.empty[InputPartition]
-       else cdcScan(b).planInputPartitions().map(PjCdfPartition(_, cdc = true)))
-  }
-
-  /** The table's files at `version`, filtered to `rels` — index bytes and
-    * partition values ride the (cached) snapshot resolution; only files a
-    * batch actually plans force their lazy sidecar load.
-    */
-  private def filesOfVersion(
-      version: Long, rels: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Seq[PjFile] = {
-    if (rels.isEmpty) return Nil
-    val layout = PjParquetTable.resolveFiles(
-      path, conf, autogen = true, mergeSchema = false, versionAsOf = Some(version))
-    val want = rels.toSet
-    val f = fs
-    // files in `want` but not in the layout are zero-row-group (empty)
-    // parquet — the resolver excludes them and they contribute no rows
-    layout.files.filter(file =>
-      want.contains(PjCommitLog.relOrAbs(f, rootPath, new Path(file.path))))
+    val plan = reader.planRange(resolved)
+    (if (plan.data.isEmpty) Array.empty[InputPartition]
+     else reader.dataScan(plan.data).planInputPartitions().map(PjCdfPartition(_, cdc = false))) ++
+      (if (plan.cdc.isEmpty) Array.empty[InputPartition]
+       else reader.cdcScan(plan.cdc).planInputPartitions().map(PjCdfPartition(_, cdc = true)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     PjCdfReaderFactory(
-      dataScan(Nil).createReaderFactory(),
-      cdcScan(Nil).createReaderFactory())
+      reader.dataScan(Nil).createReaderFactory(),
+      reader.cdcScan(Nil).createReaderFactory())
 }
 
 /** Tags a [[PjInputPartition]] with which of the stream's two scan shapes

@@ -129,19 +129,14 @@ object PjClone {
       throw new PJException(s"pjparquet: '$root' has an empty commit log"))
     val ext = snap.entries.filter(_.path.startsWith("/"))
     if (ext.isEmpty) return MaterializeReport(0L, 0L, 0L, snap.version)
-    val rootQ = fs.makeQualified(rootPath).toString
-
-    // live rows of exactly the external files, their vectors applied,
-    // partition columns typed like table reads (PjChangeFeed.readRels
-    // handles absolute keys and per-source basePath grouping)
-    val rels = ext.map(e => e.path -> e.dv.map(_.path))
-    val df = PjChangeFeed.readRels(spark, rootQ, rels).getOrElse(
-      return MaterializeReport(0L, 0L, 0L, snap.version))
+    // live rows of exactly the external files, read through the table's
+    // own scan (deletion vectors applied, partition columns typed like
+    // table reads) and written under the files' own column names
+    val reader = PjFeedReader.at(spark, root, Some(snap.version))
+    val df = reader.physical(reader.rows(snap.version, ext.map(_.path)))
     val extBytes = ext.map(_.size.max(0L)).sum
     val nOut = math.max(1, math.ceil(extBytes.toDouble / targetBytes).toInt)
-    val layout = PjParquetTable.resolveFiles(
-      root, spark.sessionState.newHadoopConf(), autogen = true, mergeSchema = false)
-    val partCols = layout.partitionSchema.fieldNames.toSeq
+    val partCols = reader.partSchema.fieldNames.toSeq
     val clustered =
       if (partCols.isEmpty) df.repartition(nOut)
       else df.repartition(nOut, partCols.map(org.apache.spark.sql.functions.col): _*)
@@ -151,25 +146,10 @@ object PjClone {
     try {
       val w = clustered.write.mode("overwrite")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp.toString)
-      val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(tmp, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) {
-          val rel = s.getPath.getParent.toString.stripPrefix(
-            fs.makeQualified(tmp).toString).stripPrefix("/")
-          val destDir = if (rel.isEmpty) rootPath else new Path(rootPath, rel)
-          fs.mkdirs(destDir)
-          if (!fs.rename(s.getPath, new Path(destDir, n)))
-            throw new PJException(
-              s"pjparquet: materialize publish failed: could not move ${s.getPath}")
-          newRels += (if (rel.isEmpty) n else s"$rel/$n")
-        }
-      }
-      val newPaths = newRels.toSeq.sorted.map(rel => s"$root/$rel")
-      val facts = PjIndexJob.generateForPaths(spark, newPaths).map(f => f.path -> f).toMap
-      val addEntries = newRels.toSeq.sorted.map(rel => facts(s"$root/$rel").toEntry(rel))
+      val newRels = PjCompaction.publishFromTemp(fs, rootPath, tmp, "materialize")
+      val facts = PjIndexJob.generateForPaths(spark, newRels.map(rel => s"$root/$rel"))
+        .map(f => f.path -> f).toMap
+      val addEntries = newRels.map(rel => facts(s"$root/$rel").toEntry(rel))
       // READ BASE: materialization is a pure move of the external entries'
       // live rows — a winner since the consumed snapshot that touched one
       // (DV DELETE, CoW rewrite) conflicts loudly (the localized copy
@@ -182,12 +162,7 @@ object PjClone {
           readVersion = Some(snap.version), maintenance = true)
         catch {
           case e: PJException =>
-            newRels.foreach { rel =>
-              val p = new Path(rootPath, rel)
-              fs.delete(p, false)
-              val sc = PjParquetTable.hiddenSidecar(p)
-              if (fs.exists(sc)) fs.delete(sc, false)
-            }
+            PjCompaction.unpublish(fs, rootPath, newRels)
             throw e
         }
       PjParquetTable.clearLayoutCache()

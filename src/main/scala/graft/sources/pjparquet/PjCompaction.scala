@@ -49,7 +49,7 @@ object PjCompaction {
     * busy table's auto-compaction retries would otherwise shed orphans
     * every race.
     */
-  private def unpublish(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
+  private[pjparquet] def unpublish(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
       rels: Seq[String]): Unit =
     rels.foreach(rel => PjBatchWrite.deleteWithSidecars(fs, new Path(rootPath, rel)))
 
@@ -91,7 +91,7 @@ object PjCompaction {
     * Returns the published root-relative paths, sorted; `op` names the
     * rewrite in the failure message.
     */
-  private def publishFromTemp(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
+  private[pjparquet] def publishFromTemp(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
       tmp: Path, op: String): Seq[String] = {
     val tmpPrefix = fs.makeQualified(tmp).toString
     val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -172,6 +172,18 @@ object PjCompaction {
         }
       files.filter(f => kept.contains(f.dir))
   }
+
+  /** Canonical form of a raw scan's file name for the broadcast lookups:
+    * ONE URI decode yields the raw on-disk path (`file:///x`, `file:/x`
+    * and plain `/x` all canonicalize identically; a dir named `p=a%20b` —
+    * the writer's URL-encoded partition value — arrives as `p=a%2520b`
+    * and decodes back to the literal dir name).
+    */
+  private def canonScanPath(s: String): String =
+    try {
+      val u = new java.net.URI(s)
+      Option(u.getAuthority).getOrElse("") + Option(u.getPath).getOrElse(s)
+    } catch { case _: java.net.URISyntaxException => s }
 
   /** Filter each consumed file's deletion-vector positions out of a raw
     * rewrite scan (no-op when no consumed file carries a vector):
@@ -286,7 +298,7 @@ object PjCompaction {
         case None => raw0
         case Some(bases) =>
           val bb = spark.sparkContext.broadcast(bases)
-          val baseOf = udf((f: String) => bb.value.get(PjChangeFeed.canonScanPath(f)))
+          val baseOf = udf((f: String) => bb.value.get(canonScanPath(f)))
           val existing =
             if (raw0.columns.exists(_.equalsIgnoreCase(PjCommitLog.RowIdColName)))
               col(PjCommitLog.RowIdColName)
@@ -422,14 +434,14 @@ object PjCompaction {
       dvByRel.get(rel).map(rel -> _)
     }.toSeq
     if (consumedDvs.isEmpty) return df
-    val rootKey = PjChangeFeed.canonScanPath(rootUri)
+    val rootKey = canonScanPath(rootUri)
     val byPath: Map[String, String] = consumedDvs.map { case (rel, dvRel) =>
       s"$rootKey/$rel" -> s"$rootUri/$dvRel"
     }.toMap
     val hb = spark.sparkContext.broadcast(byPath)
     val shipped = PjHadoopConf.ship(spark)
     val live = udf((file: String, idx: Long) => {
-      hb.value.get(PjChangeFeed.canonScanPath(file)) match {
+      hb.value.get(canonScanPath(file)) match {
         case Some(dvAbs) =>
           !PjDeletionVector.contains(PjDeletionVector.cached(shipped.newConf(), dvAbs), idx)
         case None => true
@@ -567,7 +579,7 @@ object PjCompaction {
     // ROW TRACKING: a logged, schema-recorded table's rewrite preserves
     // stable row ids by materializing them into the hidden id column;
     // the commit is then a provable pure-move for the change feed
-    val rootKey = PjChangeFeed.canonScanPath(rootUri)
+    val rootKey = canonScanPath(rootUri)
     val entryByRel: Map[String, PjCommitLog.FileEntry] =
       prevSnap.toSeq.flatMap(_.entries).map(e => e.path -> e).toMap
     val materializeIds = logging && prevSnap.exists(_.dataSchemaJson.isDefined)
@@ -829,7 +841,7 @@ object PjCompaction {
       .flatMap(e => e.dv.map(d => e.path -> d.path)).toMap
     // ROW TRACKING: materialize stable ids through the rewrite (mergeSchema
     // on: earlier compactions may have materialized ids into SOME files)
-    val rootKey = PjChangeFeed.canonScanPath(rootUri)
+    val rootKey = canonScanPath(rootUri)
     val entryByRel: Map[String, PjCommitLog.FileEntry] = entryByRelPre
     val materializeIds = logging && prevSnap.exists(_.dataSchemaJson.isDefined)
     val rowIdBases: Option[Map[String, Long]] =

@@ -223,7 +223,7 @@ object PjSortMarker {
 final class PjMissingSidecarException(msg: String) extends graft.core.PJException(msg)
 
 class PjParquetTable(
-    layout: PjLayout,
+    private[pjparquet] val layout: PjLayout,
     options: CaseInsensitiveStringMap,
     externalSchema: Option[StructType] = None)
     extends Table with SupportsRead

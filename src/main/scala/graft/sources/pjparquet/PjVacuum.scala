@@ -331,7 +331,10 @@ object PjVacuum {
         // expired versions take their persisted change files with them
         fs.delete(PjChangeFeed.cdcDir(rootPath, v), true)
       }
-      PjBatchWrite.pruneEmptyPartitionDirs(fs, rootPath)
+      // only the directories this sweep emptied: a table-wide prune races a
+      // concurrent writer between its mkdirs and its first file
+      victims.map(_.getParent).distinct
+        .foreach(PjBatchWrite.pruneEmptyParents(fs, rootPath, _))
       // stale cached layouts of expired versions would serve missing files
       PjParquetTable.clearLayoutCache()
     }

@@ -24,9 +24,9 @@ class PjAutoSubstituteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def eligibleTable(rel: HadoopFsRelation): Option[graft.sources.pjparquet.PjParquetTable] = {
     if (!rel.fileFormat.isInstanceOf[ParquetFileFormat]) return None
     // explicit opt-out: the ENGINE's own internal raw-parquet reads
-    // (compaction generations, change-feed position resolution) depend on
-    // the V1 `_metadata` struct the substituted V2 relation cannot serve —
-    // they read with this option, and users can set it too
+    // (compaction generations) depend on the V1 `_metadata` struct the
+    // substituted V2 relation cannot serve — they read with this option,
+    // and users can set it too
     if (rel.options.get("pjAutoSubstitute").exists(_.equalsIgnoreCase("false")))
       return None
     val roots = rel.location.rootPaths

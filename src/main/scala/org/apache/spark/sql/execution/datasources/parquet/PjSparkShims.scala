@@ -130,4 +130,14 @@ object PjSparkShims {
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
     new ParquetOutputWriter(path, ctx)
   }
+
+  /** A DataFrame over an already-built logical plan (`sessionState.executePlan`
+    * + analysis, as `Dataset.ofRows` does) — how engine-internal reads hand
+    * Spark a DSv2 relation whose scan they planned themselves.
+    */
+  def dataFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -317,4 +317,113 @@ class PjChangeFeedSurfaceSpec extends AnyFunSuite with TempDirs {
       .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
     assert(feedSet(df) == expectedAll)
   }
+
+  test("batch and streaming feeds agree over DV, copy-on-write, clone and compaction versions") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.pjcdf", "graft.sources.pjparquet.PjCatalog")
+    def append(dir: String, rows: Seq[(Long, Long, String)]): Unit =
+      rows.toDF("id", "v", "p").coalesce(1).write.format("pjparquet")
+        .mode("append").option("log.enabled", "true").partitionBy("p").save(dir)
+    // the source's files become the clone's external (absolute) entries;
+    // one partition value is URL-hostile (encoded on disk)
+    val src = tempDir("pj_cdfsurf_agree_src")
+    append(src, (1L to 6L).map(i => (i, i * 10, if (i % 2 == 0) "a b#c" else "plain")))
+    val dir = s"${tempDir("pj_cdfsurf_agree")}/t"
+    graft.sources.pjparquet.PjClone.shallowClone(spark, src, dir) // v1
+    val t = s"pjcdf.`$dir`"
+    append(dir, Seq((7L, 70L, "a b#c"), (8L, 80L, "plain"))) // v2
+    append(dir, Seq((9L, 90L, "plain"))) // v3
+    spark.sql(s"DELETE FROM $t WHERE id IN (2, 7)") // v4: vectors, one on an external file
+    spark.sql(s"UPDATE $t SET v = v + 1 WHERE id IN (3, 8)") // v5: merge-on-read
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('pj.deletionVectors.enabled'='false')")
+    spark.sql(s"UPDATE $t SET v = v + 2 WHERE id = 9") // copy-on-write
+    append(dir, Seq((10L, 100L, "plain")))
+    append(dir, Seq((11L, 110L, "plain")))
+    // id-preserving compaction of the local files: a pure move
+    graft.sources.pjparquet.PjCompaction.compact(spark, dir, targetBytes = 512L * 1024 * 1024)
+    val fs = fsOf(dir)
+    val head = PjCommitLog.latest(fs, new Path(dir)).get
+    assert(PjCommitLog.delta(fs, new Path(dir), head.version).preservedRows,
+      "fixture: the last version must be an id-preserving compaction")
+    assert(head.entries.exists(_.path.startsWith("/")), "fixture: an external entry")
+    assert(!fs.exists(new Path(dir, "_pj_cdc")), "fixture: no persisted change files")
+
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+      df.select("id", "v", "p", "_change_type", "_commit_version", "_commit_timestamp")
+        .collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    // batch first: the stream persists the rewrite diffs it reads
+    val batchDf = spark.read.format("pjparquet")
+      .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
+    val batch = rowsOf(batchDf)
+    val out = s"pj_cdf_agree_${System.nanoTime()}"
+    val q = spark.readStream.format("pjparquet")
+      .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
+      .writeStream.format("memory").queryName(out)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    val streamDf = spark.table(out)
+    assert(batchDf.schema.map(f => f.name -> f.dataType) ==
+      streamDf.schema.map(f => f.name -> f.dataType))
+    val stream = rowsOf(streamDf)
+    assert(batch == stream,
+      s"batch only: ${(batch.toSet -- stream.toSet).take(5)} / " +
+        s"stream only: ${(stream.toSet -- batch.toSet).take(5)}")
+    // every version class is present in the compared feed
+    val kinds = batch.keySet.map(r => (r(0), r(3)))
+    Seq((1L, "insert"), (2L, "insert"), (7L, "insert"), (2L, "delete"), (7L, "delete"),
+      (3L, "update_preimage"), (3L, "update_postimage"), (9L, "update_preimage"),
+      (9L, "update_postimage"), (11L, "insert")).foreach { k =>
+      assert(kinds.contains(k), s"missing $k in $kinds")
+    }
+    assert(batch.keySet.exists(r => r(2) == "a b#c" && r(3) == "delete"))
+  }
+
+  test("old versions' rows read through a later RENAME COLUMN and partition-spec evolution") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.pjcdf", "graft.sources.pjparquet.PjCatalog")
+    val dir = s"${tempDir("pj_cdfsurf_evolve")}/t"
+    val t = s"pjcdf.`$dir`"
+    spark.sql(s"CREATE TABLE $t (id BIGINT, day BIGINT, val BIGINT) " +
+      "USING pjparquet PARTITIONED BY (day)")
+    (0L until 4L).map(i => (i, i % 2, i * 10)).toDF("id", "day", "val")
+      .write.format("pjparquet").mode("append").save(dir)
+    spark.sql(s"ALTER TABLE $t RENAME COLUMN val TO amount")
+    spark.sql(s"ALTER TABLE $t ADD COLUMN tenant STRING")
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+      "('pj.partition.columns' = 'day:bigint,tenant:string')")
+    Seq((4L, 0L, 40L, "t0")).toDF("id", "day", "amount", "tenant")
+      .write.format("pjparquet").mode("append").save(dir)
+    val want = (0L until 4L).map(i => (i, i % 2, i * 10, null: String, "insert")).toSet +
+      ((4L, 0L, 40L, "t0", "insert"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "day", "amount", "tenant", "_change_type")
+        .as[(Long, Long, Long, String, String)].collect().toSet
+    val batch = spark.read.format("pjparquet")
+      .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
+    assert(rows(batch) == want)
+    val out = s"pj_cdf_evolve_${System.nanoTime()}"
+    spark.readStream.format("pjparquet")
+      .option("readChangeFeed", "true").option("startingVersion", "1").load(dir)
+      .writeStream.format("memory").queryName(out)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination(120000)
+    assert(rows(spark.table(out)) == want)
+  }
+
+  test("raw stock-parquet reads of table files remain only in PjCompaction") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    def offenders(needle: String): List[String] = {
+      val stream = java.nio.file.Files.walk(root)
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "PjCompaction.scala")
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(needle))
+        .map(p => root.relativize(p).toString).toList
+      finally stream.close()
+    }
+    Seq("pjAutoSubstitute\", \"false", "_metadata.file_path", "_metadata.row_index").foreach { n =>
+      assert(offenders(n).isEmpty, s"live rows are read through PjScan, not raw `$n`: ${offenders(n)}")
+    }
+  }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.core.PJException
 import graft.sources.pjparquet.{PjClone, PjCommitLog, PjVacuum}
 
@@ -14,24 +14,20 @@ import graft.sources.pjparquet.{PjClone, PjCommitLog, PjVacuum}
   * clone carries schema, constraints and table properties; cloning at an
   * old version forks history.
   */
-class PjCloneSpec extends AnyFunSuite {
+class PjCloneSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   spark.conf.set("spark.sql.catalog.pjc", "graft.sources.pjparquet.PjCatalog")
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"pj_clone_$tag").toString
-  private def freshTarget(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"pj_clone_$tag")
-    java.nio.file.Files.delete(d)
-    d.toString
-  }
+  private def newDir(tag: String): String = tempDir(s"pj_clone_$tag")
+  /** A fresh NONEXISTENT path (a clone target must not exist yet). */
+  private def freshTarget(tag: String): String = s"${newDir(tag)}/t"
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def mkSource(tag: String, rows: Int = 40): String = {
-    val dir = tempDir(tag)
+    val dir = newDir(tag)
     (1 to rows).map(i => (i.toLong, s"name_$i", i % 4))
       .toDF("id", "name", "grp").coalesce(2)
       .write.format("pjparquet").mode("append").option("log.enabled", "true").save(dir)
@@ -169,7 +165,7 @@ class PjCloneSpec extends AnyFunSuite {
       PjClone.shallowClone(spark, src, tgt) // target now non-empty
     }
     assert(e1.getMessage.contains("already exists"))
-    val unlogged = tempDir("unlogged")
+    val unlogged = newDir("unlogged")
     Seq((1, "x")).toDF("a", "b").write.mode("overwrite").parquet(unlogged)
     val e2 = intercept[PJException] {
       PjClone.shallowClone(spark, unlogged, freshTarget("u_t"))
@@ -181,8 +177,8 @@ class PjCloneSpec extends AnyFunSuite {
     val src = mkSource("stream")
     val tgt = freshTarget("stream_t")
     PjClone.shallowClone(spark, src, tgt)
-    val ckpt = tempDir("stream_ck")
-    val sink = tempDir("stream_sink")
+    val ckpt = newDir("stream_ck")
+    val sink = newDir("stream_sink")
     def runOnce(): Unit = {
       val q = spark.readStream.format("pjparquet").load(tgt)
         .writeStream.format("parquet")
@@ -229,7 +225,7 @@ class PjCloneSpec extends AnyFunSuite {
   }
 
   test("clone of a partitioned source keeps partition pruning + CDF schema") {
-    val src = tempDir("part")
+    val src = newDir("part")
     (1 to 30).map(i => (i.toLong, s"n$i", (i % 3).toLong))
       .toDF("id", "name", "grp")
       .write.format("pjparquet").mode("append").option("log.enabled", "true")
@@ -247,5 +243,18 @@ class PjCloneSpec extends AnyFunSuite {
       .option("readChangeFeed", "true").option("startingVersion", "2").load(tgt)
     assert(feed.columns.contains("grp"))
     assert(feed.where($"_change_type" === "delete").count() == 3L)
+  }
+
+  test("materialize keeps a renamed column's values (files store its physical name)") {
+    val src = mkSource("rename")
+    spark.sql(s"ALTER TABLE pjc.`$src` RENAME COLUMN name TO label")
+    val tgt = freshTarget("rename_t")
+    PjClone.shallowClone(spark, src, tgt)
+    spark.sql(s"DELETE FROM pjc.`$tgt` WHERE id % 4 = 0")
+    val expected = spark.read.format("pjparquet").load(tgt).orderBy("id").collect().toSeq
+    assert(expected.forall(_.getAs[String]("label") != null))
+    assert(spark.sql(s"CALL pjc.system.materialize(table => '$tgt')").collect().head
+      .getLong(0) == 2L)
+    assert(spark.read.format("pjparquet").load(tgt).orderBy("id").collect().toSeq == expected)
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjCommitLog, PjCopyInto}
 
 /** Idempotent COPY INTO ([[PjCopyInto]]): exactly-once ingest across
@@ -11,15 +11,12 @@ import graft.sources.pjparquet.{PjCommitLog, PjCopyInto}
   * crash between commit and finalize, and the pending/reclaim contract for
   * claims whose data never landed.
   */
-class PjCopyIntoSpec extends AnyFunSuite {
+class PjCopyIntoSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def mkdir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.delete(d)
-    d.toString
-  }
+  /** A fresh NONEXISTENT path (CREATE TABLE refuses an existing dir). */
+  private def mkdir(prefix: String): String = s"${tempDir(prefix)}/t"
 
   private def freshTable(): String = {
     val t = mkdir("pj_ci_table")

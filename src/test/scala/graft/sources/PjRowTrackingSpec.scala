@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.sources.pjparquet.{PjCommitLog, PjCompaction}
 
 /** Round-13 row tracking (Delta-style stable row ids): appends mint
@@ -14,19 +14,14 @@ import graft.sources.pjparquet.{PjCommitLog, PjCompaction}
   * move — which also makes the rewrite a provable pure-move the change
   * feed skips at metadata rate (no diff, no data read).
   */
-class PjRowTrackingSpec extends AnyFunSuite {
+class PjRowTrackingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"pj_rowtrack_$tag").toString
+  private def newDir(tag: String): String = tempDir(s"pj_rowtrack_$tag")
 
   /** A fresh NONEXISTENT path (CREATE TABLE refuses an existing dir). */
-  private def freshPath(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"pj_rowtrack_$tag")
-    java.nio.file.Files.delete(d)
-    d.toString
-  }
+  private def freshPath(tag: String): String = s"${newDir(tag)}/t"
 
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -39,7 +34,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
       .selectExpr("id", "_row_id").as[(Long, Long)].collect().toMap
 
   test("appends mint disjoint contiguous id ranges; _row_id = base + pos") {
-    val dir = tempDir("mint")
+    val dir = newDir("mint")
     writeLogged(spark.range(0, 10).toDF("id").coalesce(1), dir)
     writeLogged(spark.range(100, 105).toDF("id").coalesce(1), dir)
     val snap = PjCommitLog.latest(fsOf(dir), new Path(dir)).get
@@ -57,7 +52,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("DV delete keeps survivors' ids; compaction preserves them exactly") {
-    val dir = tempDir("compact")
+    val dir = newDir("compact")
     writeLogged(spark.range(0, 30).select($"id", ($"id" % 3).as("k")).coalesce(1), dir)
     writeLogged(spark.range(30, 60).select($"id", ($"id" % 3).as("k")).coalesce(1), dir)
     val before = idsByKey(dir)
@@ -90,7 +85,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("a second compaction passes materialized ids through unchanged") {
-    val dir = tempDir("double")
+    val dir = newDir("double")
     writeLogged(spark.range(0, 20).select($"id", lit("x").as("s")).coalesce(1), dir)
     writeLogged(spark.range(20, 40).select($"id", lit("y").as("s")).coalesce(1), dir)
     val before = idsByKey(dir)
@@ -106,7 +101,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("change feed skips an id-preserving compaction at metadata rate (no scan)") {
-    val dir = tempDir("cdf")
+    val dir = newDir("cdf")
     writeLogged(spark.range(0, 25).select($"id", ($"id" * 2).as("v")).coalesce(1), dir) // v1
     writeLogged(spark.range(25, 50).select($"id", ($"id" * 2).as("v")).coalesce(1), dir) // v2
     PjCompaction.compact(spark, dir, targetBytes = 512L * 1024 * 1024) // v3: pure move
@@ -130,7 +125,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("OPTIMIZE ZORDER preserves ids and records the pure move") {
-    val dir = tempDir("zorder")
+    val dir = newDir("zorder")
     writeLogged(spark.range(0, 64)
       .select($"id", ($"id" % 8).as("x"), ($"id" / 8).cast("long").as("y"))
       .coalesce(1), dir)
@@ -144,7 +139,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("merge-on-read UPDATE keeps row ids; MERGE inserts mint fresh ones") {
-    val dir = tempDir("update")
+    val dir = newDir("update")
     writeLogged(spark.range(0, 20).select($"id", ($"id" * 10).as("v")).coalesce(1), dir)
     val before = idsByKey(dir)
     spark.sql("DROP TABLE IF EXISTS pj_rt_up")
@@ -179,7 +174,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("the row-id watermark survives version expiry (checkpoint-only replay)") {
-    val dir = tempDir("expiry")
+    val dir = newDir("expiry")
     writeLogged(spark.range(0, 30).toDF("id").coalesce(1), dir) // ids 0..29
     // full-table DV delete retires every row, then expiry drops history:
     // the only thing carrying the watermark forward is the checkpoint
@@ -200,7 +195,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("time travel serves each version's own row ids consistently") {
-    val dir = tempDir("travel")
+    val dir = newDir("travel")
     writeLogged(spark.range(0, 10).toDF("id").coalesce(1), dir) // v1: ids 0..9
     writeLogged(spark.range(10, 15).toDF("id").coalesce(1), dir) // v2: ids 10..14
     PjCompaction.compact(spark, dir, targetBytes = 512L * 1024 * 1024) // v3: materialized
@@ -217,7 +212,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("racing appenders never mint the same row id (claim-loop reassignment)") {
-    val dir = tempDir("race")
+    val dir = newDir("race")
     writeLogged(spark.range(0, 5).toDF("id").coalesce(1), dir) // v1 seeds the log
     // 6 concurrent appends: losers of the version claim rebase and must
     // RE-MINT from the winner's advanced watermark
@@ -243,7 +238,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("detail exposes row-tracking facts: tracked file count + id watermark") {
-    val dir = tempDir("detail")
+    val dir = newDir("detail")
     writeLogged(spark.range(0, 12).toDF("id").coalesce(1), dir)
     writeLogged(spark.range(12, 20).toDF("id").coalesce(1), dir)
     spark.conf.set("spark.sql.catalog.pjrtd", "graft.sources.pjparquet.PjCatalog")
@@ -346,7 +341,7 @@ class PjRowTrackingSpec extends AnyFunSuite {
   }
 
   test("untracked legacy entries read _row_id as NULL; fresh appends are tracked") {
-    val dir = tempDir("legacy")
+    val dir = newDir("legacy")
     // an adopted pre-log file: entry has no facts, no baseRowId
     spark.range(0, 5).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     writeLogged(spark.range(5, 8).toDF("id").coalesce(1), dir) // adopts + appends
